@@ -39,12 +39,12 @@ object Cli {
           println(s"query [$q] -> ${hits.length} hits in ${ms.round}ms")
           hits.foreach(r => println(f"  doc=${r.getLong(0)} score=${r.getFloat(1)}%.4f"))
         case "serve" :: dir :: k :: rest if rest.size <= 1 =>
-          // long-lived reader: one repartition-by-seg up front, then every
-          // query runs the no-shuffle seg-aligned path with warm
-          // stats/rewrite caches; queries stream from a file (one per
-          // line) or stdin
+          // long-lived reader: the resident per-segment term maps are
+          // built once up front, then every query looks its terms up in
+          // them (one job, one stage) with warm stats/rewrite caches;
+          // queries stream from a file (one per line) or stdin
           val index = IndexBuilder.open(spark, dir, serving = true)
-          index.postings.count() // materialise the aligned cache
+          index.reader.foreach(_.count()) // build the resident reader
           val lines = rest match {
             case file :: Nil => scala.io.Source.fromFile(file).getLines()
             case _ =>
@@ -182,8 +182,12 @@ object Cli {
           val index = IndexBuilder.open(spark, dir)
           println("=== postings scan for a 2-term query (expect PushedFilters on term/kind) ===")
           index.postings.filter(col("term").isin("def", "class")).explain("formatted")
-          println("=== top-k reduce (expect TakeOrderedAndProject) ===")
-          Searcher.topK(index, "def AND class", 10).explain("formatted")
+          val q = graft.query.QueryParser.parse("def AND class")
+          println("=== per-segment source, plain open (expect the pushed-down scan, no shuffle) ===")
+          Searcher.sourceOf(index, q).foreach(r => println(r.toDebugString))
+          println("=== per-segment source, serving open (expect one flatMap over the `graft reader` RDD) ===")
+          Searcher.sourceOf(IndexBuilder.open(spark, dir, serving = true), q)
+            .foreach(r => println(r.toDebugString))
           println("=== docmeta projection (expect ReadSchema with 2 cols) ===")
           index.docmeta.select("docId", "norm").explain("formatted")
           println("=== fuzzy candidate scan (expect range-pruned PushedFilters, no full-vocab scan) ===")

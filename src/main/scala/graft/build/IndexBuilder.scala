@@ -4,6 +4,7 @@ import graft.analysis.{CodeAnalyzer, Uax29}
 import graft.codec.PostingCodec
 import graft.model._
 import graft.util.SmallFloat
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,16 +75,24 @@ final class Index(
       * that never run a per-segment query (CheckIndex, delete, stats
       * tooling) skip the alignment probe's job entirely.
       */
-    segAlignedInit: () => Boolean = () => false
+    segAlignedInit: () => Boolean = () => false,
+    /** Resident reader of a serving open: one persisted
+      * (seg, term -> postings) map per segment, each term's rows already
+      * concatenated — the per-reader state the reference builds once
+      * when a `SegmentReader` opens. Queries read it instead of scanning
+      * `postings` (see `Searcher.segmentMaps`). Driver-side only; Spark's
+      * ContextCleaner unpersists it after the dropped Index is garbage
+      * collected, `reader.foreach(_.unpersist())` at once.
+      */
+    @transient val reader: Option[RDD[(Int, Map[String, PostingList])]] = None
 ) extends Serializable {
 
   /** True when `postings`' PHYSICAL partitioning co-locates every row of
     * a segment (the groupByKey(seg) build shuffle guarantees it, and
     * narrow ops preserve it; opened parquet indexes PROBE it on first
-    * use). Queries then run their kernels in `mapPartitions` with
-    * partition-local seg grouping — ZERO query-time shuffle (one stage +
-    * a TakeOrderedAndProject driver merge) instead of a groupByKey
-    * exchange per query.
+    * use). Queries that scan `postings` then group rows by segment
+    * partition-locally — ONE stage, ZERO query-time shuffle — instead of
+    * shuffling on `seg` per query.
     */
   @transient lazy val segAligned: Boolean = segAlignedInit()
 
@@ -989,8 +998,13 @@ object IndexBuilder {
     * co-located in one read partition — the build write layout
     * guarantees it unless a file got split — every query runs the
     * no-shuffle seg-aligned path with NO up-front repartition.
-    * `serving = true` additionally persists the postings (long-lived
-    * reader), repartitioning first only if the probe failed.
+    *
+    * `serving = true` opens a long-lived reader: [[Index.reader]] holds
+    * one persisted term map per segment (grouped partition-locally when
+    * the probe succeeds, through one shuffle on `seg` when it fails),
+    * built by the first query or an explicit `reader.foreach(_.count())`.
+    * Queries then look their terms up in it: one job with one stage, no
+    * per-query scan, concatenation or Catalyst plan for the kernel pass.
     */
   def open(spark: SparkSession, dir: String, serving: Boolean = false,
       snapshot: Option[Int] = None): Index = {
@@ -1001,21 +1015,20 @@ object IndexBuilder {
         require(IndexFs.exists(s"${commitRoot(dir, id)}/meta.json"), s"no snapshot $id in $dir")
         openRaw(spark, dir, manifestRoot = commitRoot(dir, id))
     }
-    val postings0 = seg.filter($"kind" === "p")
+    val postings = seg.filter($"kind" === "p")
       .select($"seg", $"term", $"df", $"ttf", $"counts", $"baseDocIds",
         $"maxDocIds", $"maxFreqs", $"minNorms", $"offsets", $"payload")
       .as[PostingList]
-    // serving opens probe EAGERLY (the repartition decision needs it);
+    // serving opens probe EAGERLY (the reader's grouping needs it);
     // plain opens defer the probe to the Index's lazy segAligned, so
     // one-shot tooling (CheckIndex, stats) never pays the job
-    val served = serving
-    lazy val aligned0 = segAlignmentProbe(postings0)
-    val postings =
-      if (!serving) postings0
-      else if (aligned0) postings0.persist()
-      else postings0
-        .repartition(math.max(1, spark.sparkContext.defaultParallelism), $"seg")
-        .persist()
+    lazy val aligned = segAlignmentProbe(postings)
+    val reader =
+      if (!serving) None
+      else Some(graft.exec.Searcher.bySegment(postings.rdd, aligned,
+          math.max(1, spark.sparkContext.defaultParallelism))
+        .setName(s"graft reader $dir")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val docmeta0 = seg.filter($"kind" === "m")
       .select($"docId", $"repo", $"path", $"commit", $"lang", $"sha256", $"tokenCount", $"norm")
       .as[DocMeta]
@@ -1066,6 +1079,6 @@ object IndexBuilder {
         (ts, FieldStats(n, sttf))
     }
     new Index(postings, docmeta, termStats, fieldStats, live,
-      segAlignedInit = () => served || aligned0)
+      segAlignedInit = () => aligned, reader = reader)
   }
 }

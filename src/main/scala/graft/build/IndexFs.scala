@@ -73,25 +73,35 @@ object IndexFs {
     val out = fs.create(tmp, true)
     try out.write(s.getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, hconf)
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      // the tmp was created through the (possibly checksummed) FileSystem
-      // but renamed through FileContext's raw fs, which does not move crc
-      // sidecars: drop the now-orphaned tmp sidecar, and any stale
-      // destination sidecar left by a fallback-branch write of an earlier
-      // version — a checksummed read against the old crc would throw
-      fs.delete(new Path(tmp.getParent, "." + tmp.getName + ".crc"), false)
-      fs.delete(new Path(p.getParent, "." + p.getName + ".crc"), false)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p)) {
-          fs.delete(tmp, false)
-          if (!fs.exists(p)) throw new java.io.IOException(s"rename $tmp -> $p failed")
-        }
+    val viaFileContext =
+      try {
+        val fc = org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, hconf)
+        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        true
+      } catch {
+        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+          fs.delete(p, false)
+          if (!fs.rename(tmp, p)) {
+            fs.delete(tmp, false)
+            if (!fs.exists(p)) throw new java.io.IOException(s"rename $tmp -> $p failed")
+          }
+          false
+      }
+    // the tmp was created through the (possibly checksummed) FileSystem
+    // but renamed through FileContext's raw fs, which does not move crc
+    // sidecars: drop the now-orphaned tmp sidecar, and any stale
+    // destination sidecar left by a fallback-branch write of an earlier
+    // version — a checksummed read against the old crc would throw. The
+    // write has committed with the rename, so a failed cleanup only
+    // leaves a sidecar behind.
+    if (viaFileContext) {
+      bestEffort(fs.delete(new Path(tmp.getParent, "." + tmp.getName + ".crc"), false))
+      bestEffort(fs.delete(new Path(p.getParent, "." + p.getName + ".crc"), false))
     }
   }
+
+  private def bestEffort(body: => Unit): Unit =
+    try body catch { case scala.util.control.NonFatal(_) => () }
 
   def delete(path: String, recursive: Boolean = false): Boolean = {
     val p = new Path(path)

@@ -3,8 +3,10 @@ package graft.exec
 import graft.build.Index
 import graft.model._
 import graft.query._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Query planner + distributed top-k executor.
   *
@@ -15,16 +17,30 @@ import org.apache.spark.sql.functions._
   * `IndexSearcher.java:873`) -> gather term + collection statistics once
   * and broadcast them with the query (Lucene's `createWeight`,
   * `core/search/TermQuery.java:44`) -> per-segment kernel emits a local
-  * top-k (per-leaf bulk scorer) -> global reduce =
-  * `orderBy(score desc, docId asc).limit(k)` (`TopDocs.merge` with the
-  * HitQueue tie-break).
+  * top-k (per-leaf bulk scorer) -> global reduce in
+  * (score desc, docId asc) order (`TopDocs.merge` with the HitQueue
+  * tie-break).
+  *
+  * Every executor body reads one per-segment (seg, term -> postings) RDD
+  * ([[segmentMaps]]). A serving index (`IndexBuilder.open(serving =
+  * true)`) keeps these maps resident, already concatenated per term (the
+  * `SegmentReader` opened once); a query looks its terms up there and
+  * plans no Catalyst query for its kernel pass. Plain opens and
+  * in-memory indexes scan the postings with the query's terms pushed
+  * down and group the rows by segment.
+  *
+  * [[topKQ]] runs its one job when called and merges the at most k rows
+  * per segment on the driver (`IndexSearcher.search`): the returned
+  * DataFrame is local. Unbounded results ([[scoredMatches]],
+  * [[collectQ]], [[matchingDocs]], [[docsBatch]], the window of
+  * [[topKBatch]]) stay lazy and distributed.
   *
   * Scale: the only data movement is (a) the postings of the query's terms
-  * (partition-pruned, predicate-pushed scan on the sorted `term` column),
-  * (b) k rows per segment for the final merge (or ONE count per segment
-  * on the count path). Executor work per segment is bounded by that
-  * segment's posting sizes; WAND/block-max pruning skips non-competitive
-  * blocks without decoding them.
+  * (partition-pruned, predicate-pushed scan on the sorted `term` column,
+  * or none on a serving index), (b) k rows per segment for the final
+  * merge (or ONE count per segment on the count path). Executor work per
+  * segment is bounded by that segment's posting sizes; WAND/block-max
+  * pruning skips non-competitive blocks without decoding them.
   */
 object Searcher {
 
@@ -561,45 +577,87 @@ object Searcher {
     nsGuard && body
   }
 
-  /** Run a per-segment kernel body over the plan's terms' posting rows.
-    * `onlySeg` / `skipSeg` (-1 = unset) restrict the scan (priming pass /
+  /** The per-segment (seg, term -> postings) input of every executor
+    * body, holding the plan's terms and the terms its wide patterns
+    * match, from one of two sources:
+    *  - a serving index's resident reader ([[graft.build.Index.reader]]):
+    *    the query looks its terms up in each segment's map and matches
+    *    wide patterns with [[WideTermSetQ.matches]] — no scan, no
+    *    per-query concatenation, no Catalyst plan;
+    *  - otherwise the pushed-down postings scan, grouped by segment
+    *    ([[bySegment]]): partition-locally on a seg-aligned index (one
+    *    stage, no shuffle), through a shuffle on `seg` when it is not.
+    * Segments holding none of the terms yield nothing. `onlySeg` /
+    * `skipSeg` (-1 = unset) restrict the segments (priming pass /
     * already-primed segment).
-    *
-    * Seg-aligned indexes (the in-memory build) run the body in ONE stage:
-    * the filtered scan is narrow over the persisted partitions and the
-    * kernels group rows by segment partition-locally — no query-time
-    * shuffle. Unaligned indexes (opened parquet) fall back to the
-    * groupByKey exchange.
     */
-  private def perSegment[T: org.apache.spark.sql.Encoder](
-      index: Index, terms: Set[String],
-      onlySeg: Int = -1, skipSeg: Int = -1,
-      wide: Seq[WideTermSetQ] = Nil)(
-      body: (Int, Iterator[PostingList]) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    val basePred =
-      if (terms.isEmpty) lit(false) else $"term".isin(terms.toSeq: _*)
-    val pred = wide.foldLeft(basePred)((p, w) => p || wideScanPred(w))
-    var scan = index.postings.filter(pred)
-    if (onlySeg >= 0) scan = scan.filter($"seg" === onlySeg)
-    if (skipSeg >= 0) scan = scan.filter($"seg" =!= skipSeg)
-    val rows = scan.as[PostingList]
-    if (index.segAligned)
-      rows.mapPartitions { it =>
-        it.toSeq.groupBy(_.seg).iterator.flatMap { case (seg, rs) => body(seg, rs.iterator) }
-      }
-    else rows.groupByKey(_.seg).flatMapGroups(body)
-  }
-
-  /** A term may span multiple rows (mega-term salt split / merge output);
-    * blocks are self-contained, so concat in docId order.
-    */
-  private[graft] def concatByTerm(rows: Iterator[PostingList]): Map[String, PostingList] =
-    rows.toSeq.groupBy(_.term).map { case (t, rs) =>
-      if (rs.size == 1) t -> rs.head
-      else t -> graft.codec.PostingCodec.concat(rs.sortBy(_.maxDocIds.head))
+  private def segmentMaps(
+      index: Index, terms: Set[String], wide: Seq[WideTermSetQ] = Nil,
+      onlySeg: Int = -1, skipSeg: Int = -1): RDD[(Int, Map[String, PostingList])] =
+    index.reader match {
+      case Some(reader) =>
+        reader.flatMap { case (seg, all) =>
+          if ((onlySeg >= 0 && seg != onlySeg) || seg == skipSeg) None
+          else {
+            val b = Map.newBuilder[String, PostingList]
+            terms.foreach(t => all.get(t).foreach(pl => b += t -> pl))
+            if (wide.nonEmpty) all.foreach { e => if (wide.exists(_.matches(e._1))) b += e }
+            val byTerm = b.result()
+            if (byTerm.isEmpty) None else Some(seg -> byTerm)
+          }
+        }
+      case None =>
+        val spark = index.postings.sparkSession
+        import spark.implicits._
+        val basePred =
+          if (terms.isEmpty) lit(false) else $"term".isin(terms.toSeq: _*)
+        val pred = wide.foldLeft(basePred)((p, w) => p || wideScanPred(w))
+        var scan = index.postings.filter(pred)
+        if (onlySeg >= 0) scan = scan.filter($"seg" === onlySeg)
+        if (skipSeg >= 0) scan = scan.filter($"seg" =!= skipSeg)
+        bySegment(scan.rdd, index.segAligned,
+          spark.conf.get("spark.sql.shuffle.partitions").toInt)
     }
+
+  /** The per-segment source RDD a query's kernels would read (None when
+    * the query cannot match) — exposed for lineage audits (`Cli explain`).
+    */
+  private[graft] def sourceOf(index: Index, query: Query): Option[RDD[(Int, Map[String, PostingList])]] =
+    plan(index, query, doubleMode = false).map(p => segmentMaps(index, p.terms, p.wide))
+
+  /** Group posting rows into per-segment [[TermMap]]s: partition-locally
+    * when every segment's rows share one partition (`aligned`), else
+    * through a shuffle on `seg` into `partitions` partitions. Also
+    * builds a serving index's resident reader.
+    */
+  private[graft] def bySegment(rows: RDD[PostingList], aligned: Boolean,
+      partitions: Int): RDD[(Int, Map[String, PostingList])] =
+    if (aligned)
+      rows.mapPartitions(it => it.toSeq.groupBy(_.seg).iterator
+        .map { case (seg, rs) => seg -> TermMap.of(rs) }, preservesPartitioning = true)
+    else rows.groupBy((pl: PostingList) => pl.seg, partitions).mapValues(TermMap.of)
+
+  /** Result schema of [[topKQ]] and [[scoredMatches]]: the columns
+    * `Dataset[ScoredDocD].toDF()` gives, the score cast to float outside
+    * double mode.
+    */
+  private def scoredSchema(doubleMode: Boolean): StructType = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", if (doubleMode) DoubleType else FloatType, nullable = false)))
+
+  private def scoredRow(docId: Long, score: Double, doubleMode: Boolean): Row =
+    if (doubleMode) Row(docId, score) else Row(docId, score.toFloat)
+
+  /** Spark's descending-score, ascending-docId row order: NaN sorts above
+    * every number and -0.0 equals 0.0, like `orderBy(desc("score"),
+    * asc("docId"))`.
+    */
+  private val HitOrder: Ordering[(Long, Double)] = new Ordering[(Long, Double)] {
+    def compare(a: (Long, Double), b: (Long, Double)): Int = {
+      val c = if (a._2 == b._2) 0 else java.lang.Double.compare(b._2, a._2)
+      if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+    }
+  }
 
   /** ALL matching (docId, score) rows as a distributed DataFrame — the
     * per-segment kernel pass of [[topKQ]] with an unbounded hit budget
@@ -613,31 +671,35 @@ object Searcher {
   def scoredMatches(index: Index, query0: Query, doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
-    import spark.implicits._
     val pl = plan(index, query0, doubleMode, sim) match {
-      case None => return emptyResult(spark, doubleMode)
+      case None => return localResult(spark, Array.empty, doubleMode)
       case Some(p) => p
     }
     val scorers = pl.scorers
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
-    val fanout = perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.run(q, concatByTerm(rows), scorers, Int.MaxValue,
-          floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
+    val dm = doubleMode
+    val rows = segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
+      SegmentKernel.run(q, byTerm, scorers, Int.MaxValue,
+          floatMode = !dm, deletedOrds = live.deleted(seg), seg = seg,
           cacheToken = ftok)
-        .iterator.map { case (d, s) => ScoredDocD(d, s) }
+        .iterator.map { case (d, s) => scoredRow(d, s, dm) }
     }
-    val df = fanout.toDF()
-    if (doubleMode) df else df.select($"docId", $"score".cast("float").as("score"))
+    spark.createDataFrame(rows, scoredSchema(doubleMode))
   }
 
+  /** Global top-k as (docId, score): ONE job runs the per-segment
+    * kernels, and the driver merges their at most k rows per segment in
+    * (score desc, docId asc) order — `IndexSearcher.search` over
+    * `TopDocs.merge`. Outside double mode the score is cast to float
+    * after the merge. Returns a local DataFrame: the job has already run.
+    */
   def topKQ(index: Index, query0: Query, k: Int, doubleMode: Boolean = false,
       primeThreshold: Boolean = false, sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
-    import spark.implicits._
     val pl = plan(index, query0, doubleMode, sim) match {
-      case None => return emptyResult(spark, doubleMode)
+      case None => return localResult(spark, Array.empty, doubleMode)
       case Some(p) => p
     }
     val scorers = pl.scorers
@@ -645,6 +707,7 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
+    val fm = !doubleMode
 
     // optional cross-partition min-competitive priming (the
     // `MaxScoreAccumulator` analogue, `core/search/MaxScoreAccumulator.java`):
@@ -654,47 +717,42 @@ object Searcher {
     // extra small jobs only on large corpora; rank-identical either way
     // (the floor is nextDown'd so kth-score ties still collect).
     var floor = Double.NegativeInfinity
-    var primedRows: Seq[ScoredDocD] = Nil
+    var primed = Array.empty[(Long, Double)]
     var primedSeg = -1
     if (primeThreshold && pl.wide.isEmpty) {
-      val bySeg = index.postings
-        .filter($"term".isin(pl.terms.toSeq: _*))
-        .groupBy($"seg").agg(sum($"df").as("c"))
-        .orderBy(desc("c")).limit(1)
-        .select($"seg").as[Int].collect()
-      if (bySeg.nonEmpty) {
-        primedSeg = bySeg.head
-        val ps = primedSeg
-        primedRows = perSegment(index, pl.terms, onlySeg = ps) { (seg, rows) =>
-          SegmentKernel.run(q, concatByTerm(rows), scorers, kk,
-              floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
-              cacheToken = ftok)
-            .iterator.map { case (d, s) => ScoredDocD(d, s) }
-        }.collect().toSeq
-        if (primedRows.length >= k) floor = Math.nextDown(primedRows.map(_.score).min)
+      val sizes = segmentMaps(index, pl.terms)
+        .map { case (seg, byTerm) => (seg, byTerm.valuesIterator.map(_.df.toLong).sum) }
+        .collect()
+      if (sizes.nonEmpty) {
+        primedSeg = sizes.maxBy(_._2)._1
+        primed = segmentMaps(index, pl.terms, onlySeg = primedSeg).flatMap { case (seg, byTerm) =>
+          SegmentKernel.run(q, byTerm, scorers, kk,
+              floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
+              cacheToken = ftok).iterator
+        }.collect()
+        if (primed.length >= k) floor = Math.nextDown(primed.map(_._2).min)
       }
     }
     val fl = floor
-    val skipSeg = primedSeg
 
-    // 3. per-segment kernels over the pruned postings scan
-    val fanout = perSegment(index, pl.terms, skipSeg = skipSeg, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.run(q, concatByTerm(rows), scorers, kk,
-          floatMode = !doubleMode, deletedOrds = live.deleted(seg), seg = seg,
-          floor = fl, cacheToken = ftok)
-        .iterator.map { case (d, s) => ScoredDocD(d, s) }
-    }
-    val localTopK =
-      if (primedRows.isEmpty) fanout
-      else fanout.union(spark.createDataset(primedRows))
-
-    // 4. global reduce (partial top-k per partition via sort+limit)
-    val merged = localTopK.toDF()
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
-    if (doubleMode) merged
-    else merged.select($"docId", $"score".cast("float").as("score"))
+    // 3. per-segment kernels, 4. driver-side merge of the local top-ks
+    val hits = segmentMaps(index, pl.terms, pl.wide, skipSeg = primedSeg)
+      .flatMap { case (seg, byTerm) =>
+        SegmentKernel.run(q, byTerm, scorers, kk,
+            floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
+            floor = fl, cacheToken = ftok).iterator
+      }.collect()
+    localResult(spark, (hits ++ primed).sorted(HitOrder).take(k), doubleMode)
   }
+
+  /** A local (docId, score) DataFrame of already-ranked hits, built from
+    * a fixed schema (no encoder derivation, no job on collect).
+    */
+  private def localResult(spark: SparkSession, hits: Array[(Long, Double)],
+      doubleMode: Boolean): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(hits.map { case (d, s) => scoredRow(d, s, doubleMode) }: _*),
+      scoredSchema(doubleMode))
 
   /** BATCH top-k: many queries against one index in ONE postings scan +
     * ONE kernel pass per segment — the throughput shape of a
@@ -738,17 +796,18 @@ object Searcher {
     // byTerm map across all queries
     val shipped: Seq[(String, Query, Scorers)] =
       planned.map { case (qid, p) => (qid, p.query, p.scorers) }
-    val fanout = perSegment(index, allTerms, wide = allWide) { (seg, rows) =>
-      val byTerm = concatByTerm(rows)
+    val fanout = segmentMaps(index, allTerms, allWide).flatMap { case (seg, byTerm) =>
       val del = live.deleted(seg)
       shipped.iterator.flatMap { case (qid, q, scorers) =>
         SegmentKernel.run(q, byTerm, scorers, kk, floatMode = fm,
             deletedOrds = del, seg = seg, cacheToken = ftok)
-          .iterator.map { case (d, s) => (qid, d, s) }
+          .iterator.map { case (d, s) => Row(qid, d, s) }
       }
     }
     import org.apache.spark.sql.expressions.Window
-    val ranked = fanout.toDF("qid", "docId", "score")
+    val ranked = spark.createDataFrame(fanout, StructType(Seq(
+        StructField("qid", StringType), StructField("docId", LongType, nullable = false),
+        StructField("score", DoubleType, nullable = false))))
       .withColumn("rank", row_number().over(
         Window.partitionBy($"qid").orderBy(desc("score"), asc("docId"))).cast("long"))
       .filter($"rank" <= k)
@@ -807,23 +866,22 @@ object Searcher {
     val live = index.live
     val ftok = index.filterCacheToken
     val fm = !doubleMode
-    perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.collectWith(q, concatByTerm(rows), scorers,
+    val enc = implicitly[org.apache.spark.sql.Encoder[A]]
+    spark.createDataset(segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
+      SegmentKernel.collectWith(q, byTerm, scorers,
         factory.newLeaf(seg), fm, live.deleted(seg), seg, ftok)
-    }
+    }(enc.clsTag))
   }
 
   /** Count matching docs — no heap, no scoring, no global sort; the
-    * kernel emits ONE partial count per segment and Spark's partial/final
-    * agg sums them (`core/search/TotalHitCountCollector.java:27`,
+    * kernel emits ONE partial count per segment and the job's result
+    * fold sums them (`core/search/TotalHitCountCollector.java:27`,
     * `IndexSearcher.count`).
     */
   def count(index: Index, queryStr: String): Long =
     countQ(index, QueryParser.parse(queryStr))
 
   def countQ(index: Index, query0: Query): Long = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
     val pl = plan(index, query0, doubleMode = true, scoring = false) match {
       case None => return 0L
       case Some(p) => p
@@ -832,13 +890,9 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
-    perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      Iterator.single(
-        SegmentKernel.count(q, concatByTerm(rows), scorers, live.deleted(seg), seg,
-          cacheToken = ftok))
-    }
-      .agg(coalesce(sum($"value"), lit(0L)).as("n"))
-      .as[Long].head()
+    segmentMaps(index, pl.terms, pl.wide).map { case (seg, byTerm) =>
+      SegmentKernel.count(q, byTerm, scorers, live.deleted(seg), seg, cacheToken = ftok)
+    }.fold(0L)(_ + _)
   }
 
   /** Matching docIds (no scoring, no heap, no global score sort) — the
@@ -855,11 +909,10 @@ object Searcher {
     val q = pl.query
     val live = index.live
     val ftok = index.filterCacheToken
-    perSegment(index, pl.terms, wide = pl.wide) { (seg, rows) =>
-      SegmentKernel.docs(q, concatByTerm(rows), scorers, live.deleted(seg), seg,
-          cacheToken = ftok)
+    spark.createDataset(segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
+      SegmentKernel.docs(q, byTerm, scorers, live.deleted(seg), seg, cacheToken = ftok)
         .map(java.lang.Long.valueOf)
-    }
+    })
   }
 
   /** BATCH all-matching-docs: many queries' full match sets in ONE
@@ -891,20 +944,13 @@ object Searcher {
     val ftok = index.filterCacheToken
     val shipped: Seq[(String, Query, Scorers)] =
       planned.map { case (qid, p) => (qid, p.query, p.scorers) }
-    perSegment(index, allTerms, wide = allWide) { (seg, rows) =>
-      val byTerm = concatByTerm(rows)
+    spark.createDataset(segmentMaps(index, allTerms, allWide).flatMap { case (seg, byTerm) =>
       val del = live.deleted(seg)
       shipped.iterator.flatMap { case (qid, q, scorers) =>
         SegmentKernel.docs(q, byTerm, scorers, del, seg, cacheToken = ftok)
           .iterator.map(d => (qid, d))
       }
-    }.toDF("qid", "docId")
-  }
-
-  private def emptyResult(spark: SparkSession, doubleMode: Boolean): DataFrame = {
-    import spark.implicits._
-    val df = Seq.empty[ScoredDocD].toDF()
-    if (doubleMode) df else df.select($"docId", $"score".cast("float").as("score"))
+    }).toDF("qid", "docId")
   }
 }
 

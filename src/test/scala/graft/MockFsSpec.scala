@@ -114,4 +114,18 @@ class MockFsSpec extends SparkTest {
         graft.build.IndexFs.listNames(parent).toString)
     }
   }
+
+  test("writeString commits even when the crc sidecar cleanup throws") {
+    val base = java.nio.file.Files.createTempDirectory("graftnodelete").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.mockfsnodelete.impl", classOf[graft.testfs.NoDeleteFs].getName)
+    conf.set("fs.AbstractFileSystem.mockfsnodelete.impl", classOf[graft.testfs.NoDeleteAfs].getName)
+    org.apache.spark.sql.SparkSession.setActiveSession(spark) // IndexFs reads its conf
+    val p = s"mockfsnodelete:$base/manifest.json"
+    // every delete throws, so the FileContext rename path's sidecar
+    // cleanup fails after the rename has committed
+    graft.build.IndexFs.writeString(p, "{\"gen\":1}")
+    graft.build.IndexFs.writeString(p, "{\"gen\":2}")
+    assert(graft.build.IndexFs.readString(p) == "{\"gen\":2}")
+  }
 }

@@ -124,14 +124,16 @@ class SearchDifferentialSpec extends SparkTest {
       BoolQ(must = Seq(TermQ("def"), TermQ("class"))),
       BoolQ(should = Seq(TermQ("val"), TermQ("needle_0"))),
       TermQ("nonexistent_term_xyz"))
-    shapes.foreach { q =>
+    for (q <- shapes; dm <- Seq(true, false)) {
       // k >= corpus size makes topKQ exhaustive: same match set, same
-      // scores, only the global merge differs (scoredMatches has none)
-      val viaTopK = Searcher.topKQ(index, q, N * 2, doubleMode = true)
-        .as[(Long, Double)].collect().toSeq.sorted
-      val viaAll = Searcher.scoredMatches(index, q, doubleMode = true)
-        .as[(Long, Double)].collect().toSeq.sorted
-      assert(viaAll == viaTopK, s"query [$q]: all=${viaAll.size} topk=${viaTopK.size}")
+      // scores, only the global merge differs (scoredMatches has none);
+      // float mode casts after the merge on both paths
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+        (if (dm) df.as[(Long, Double)].collect().toSeq
+         else df.as[(Long, Float)].collect().toSeq.map { case (d, s) => (d, s.toDouble) }).sorted
+      val viaTopK = rows(Searcher.topKQ(index, q, N * 2, doubleMode = dm))
+      val viaAll = rows(Searcher.scoredMatches(index, q, doubleMode = dm))
+      assert(viaAll == viaTopK, s"query [$q] doubleMode=$dm: all=${viaAll.size} topk=${viaTopK.size}")
     }
   }
 
@@ -305,11 +307,14 @@ class PartitionLocalBuildSpec extends SparkTest {
     assert(index.fieldStats.docCount == 800)
     // plain (non-serving) open: the alignment probe detects the build's
     // write layout and enables the no-shuffle kernel path WITHOUT the
-    // up-front repartition job — the query plan must contain no Exchange
+    // up-front repartition job — a warm query runs one job of ONE stage
+    // and moves no shuffle bytes
     assert(index.segAligned, "alignment probe should detect the build layout")
-    val planStr = Searcher.topK(index, "def AND class", 10)
-      .queryExecution.executedPlan.toString
-    assert(!planStr.contains("Exchange"), s"query plan has a shuffle:\n$planStr")
+    Searcher.topK(index, "def AND class", 10) // warms the stats cache
+    val (_, trace) = JobProbe(spark)(Searcher.topK(index, "def AND class", 10))
+    assert(trace.jobs.size == 1 && trace.stages == 1,
+      s"expected one single-stage job, got ${trace.jobs.map(_.map(_.name))}")
+    assert(trace.shuffleBytes == 0L, s"query shuffled ${trace.shuffleBytes} bytes")
     // differential vs oracle with the same docId assignment (partition order)
     val perPart = src.mapPartitions { it =>
       val seg = org.apache.spark.TaskContext.getPartitionId()
@@ -323,8 +328,8 @@ class PartitionLocalBuildSpec extends SparkTest {
       val got = Searcher.topK(index, qs, 10).as[(Long, Float)].collect().toSeq
       assert(got == expected, s"query [$qs]")
     }
-    // serving-mode open: one repartition-by-seg up front, then the
-    // no-shuffle seg-aligned kernel path — results must be identical
+    // serving-mode open: the resident per-segment reader — results must
+    // be identical
     val serving = IndexBuilder.open(spark, dir, serving = true)
     assert(serving.segAligned)
     Seq("def AND class", "needle_0", "val OR needle_0", "\"class camelCaseName7\"").foreach { qs =>
