@@ -60,8 +60,8 @@ object Cli {
           }
         case "searchbatch" :: dir :: k :: file :: Nil =>
           // ONE Spark job for the whole query file (throughput mode):
-          // union scan, one kernel pass per segment, partitioned-window
-          // rank per query
+          // union source, one kernel pass per segment, per-query top-k
+          // merged on the driver
           val index = IndexBuilder.open(spark, dir)
           val qs = scala.io.Source.fromFile(file).getLines().filter(_.nonEmpty).toSeq
             .map(q => q -> graft.query.QueryParser.parse(q))

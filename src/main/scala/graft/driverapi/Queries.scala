@@ -247,10 +247,10 @@ object Queries {
          |       CAST(row_number() OVER (ORDER BY floor((s) * 10000 + 0.5)/10000 DESC, doc_id) AS BIGINT) AS rank
          |FROM sc ORDER BY rank LIMIT 10""".stripMargin))),
 
-    // BATCH search: three queries in ONE postings scan + one kernel
-    // pass per segment, ranked per query by a PARTITIONED window —
-    // the training-data-mining shape ("run 10k queries over the
-    // corpus"); per-query results identical to the single-query path
+    // BATCH search: three queries in ONE job (one kernel pass per
+    // segment, per-query top-k merged on the driver) — the
+    // training-data-mining shape ("run 10k queries over the corpus");
+    // per-query results identical to the single-query path
     "ft_batch_topk" -> (((spark, dir) => {
       import spark.implicits._
       val (index, mapping) = Corpus.get(spark, dir)

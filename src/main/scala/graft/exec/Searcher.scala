@@ -31,9 +31,9 @@ import org.apache.spark.sql.types._
   *
   * [[topKQ]] runs its one job when called and merges the at most k rows
   * per segment on the driver (`IndexSearcher.search`): the returned
-  * DataFrame is local. Unbounded results ([[scoredMatches]],
-  * [[collectQ]], [[matchingDocs]], [[docsBatch]], the window of
-  * [[topKBatch]]) stay lazy and distributed.
+  * DataFrame is local. [[topKBatch]] does the same for many queries in
+  * one job. Unbounded results ([[scoredMatches]], [[collectQ]],
+  * [[matchingDocs]], [[docsBatch]]) stay lazy and distributed.
   *
   * Scale: the only data movement is (a) the postings of the query's terms
   * (partition-pruned, predicate-pushed scan on the sorted `term` column,
@@ -645,8 +645,21 @@ object Searcher {
     StructField("docId", LongType, nullable = false),
     StructField("score", if (doubleMode) DoubleType else FloatType, nullable = false)))
 
+  /** Result schema of [[topKBatch]], empty or not: (qid, docId, score,
+    * rank), the score typed as in [[scoredSchema]].
+    */
+  private def batchSchema(doubleMode: Boolean): StructType = StructType(
+    StructField("qid", StringType) +: scoredSchema(doubleMode).fields :+
+      StructField("rank", LongType, nullable = false))
+
+  /** A kernel score as the result column holds it: cast to float after
+    * the merge outside double mode.
+    */
+  private def scoreOut(score: Double, doubleMode: Boolean): Any =
+    if (doubleMode) score else score.toFloat
+
   private def scoredRow(docId: Long, score: Double, doubleMode: Boolean): Row =
-    if (doubleMode) Row(docId, score) else Row(docId, score.toFloat)
+    Row(docId, scoreOut(score, doubleMode))
 
   /** Spark's descending-score, ascending-docId row order: NaN sorts above
     * every number and -0.0 equals 0.0, like `orderBy(desc("score"),
@@ -658,6 +671,27 @@ object Searcher {
       if (c != 0) c else java.lang.Long.compare(a._1, b._1)
     }
   }
+
+  /** The first k of `hits` in [[HitOrder]] — the top-k merge of partial
+    * top-ks (`TopDocs.merge`). [[HitOrder]] is total, so merging any
+    * split of the hits, each cut to k first, gives the same k.
+    */
+  private def topOf(hits: Array[(Long, Double)], k: Int): Array[(Long, Double)] =
+    hits.sorted(HitOrder).take(k)
+
+  /** The driver's final merge of one query's hits, shared by [[topKQ]]
+    * and [[topKBatch]]: [[topOf]], then `row(docId, score, rank)` per hit,
+    * rank 1..k, the score cast after the merge ([[scoreOut]]).
+    */
+  private def mergedRows(hits: Array[(Long, Double)], k: Int, doubleMode: Boolean)(
+      row: (Long, Any, Long) => Row): Array[Row] =
+    topOf(hits, k).zipWithIndex.map { case ((d, s), i) => row(d, scoreOut(s, doubleMode), i + 1L) }
+
+  /** A local DataFrame of already-ranked rows, built from a fixed schema
+    * (no encoder derivation, no job on collect).
+    */
+  private def localResult(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** ALL matching (docId, score) rows as a distributed DataFrame — the
     * per-segment kernel pass of [[topKQ]] with an unbounded hit budget
@@ -672,7 +706,7 @@ object Searcher {
       sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
     val pl = plan(index, query0, doubleMode, sim) match {
-      case None => return localResult(spark, Array.empty, doubleMode)
+      case None => return localResult(spark, Array.empty, scoredSchema(doubleMode))
       case Some(p) => p
     }
     val scorers = pl.scorers
@@ -699,7 +733,7 @@ object Searcher {
       primeThreshold: Boolean = false, sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
     val pl = plan(index, query0, doubleMode, sim) match {
-      case None => return localResult(spark, Array.empty, doubleMode)
+      case None => return localResult(spark, Array.empty, scoredSchema(doubleMode))
       case Some(p) => p
     }
     val scorers = pl.scorers
@@ -742,79 +776,71 @@ object Searcher {
             floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
             floor = fl, cacheToken = ftok).iterator
       }.collect()
-    localResult(spark, (hits ++ primed).sorted(HitOrder).take(k), doubleMode)
+    localResult(spark, mergedRows(hits ++ primed, k, doubleMode)((d, s, _) => Row(d, s)),
+      scoredSchema(doubleMode))
   }
 
-  /** A local (docId, score) DataFrame of already-ranked hits, built from
-    * a fixed schema (no encoder derivation, no job on collect).
-    */
-  private def localResult(spark: SparkSession, hits: Array[(Long, Double)],
-      doubleMode: Boolean): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(hits.map { case (d, s) => scoredRow(d, s, doubleMode) }: _*),
-      scoredSchema(doubleMode))
-
-  /** BATCH top-k: many queries against one index in ONE postings scan +
-    * ONE kernel pass per segment — the throughput shape of a
-    * training-data mining run ("run 10k queries over the corpus"),
-    * where per-query job scheduling would dominate. All queries are
-    * planned driver-side (expansions, stats, scorers — warm caches
-    * amortise across the batch); the scan predicate is the UNION of
-    * every query's terms and wide patterns; each segment task runs
-    * every query's kernel over its local posting map; the global
-    * reduce ranks per query with a PARTITIONED window (qid is the
-    * partition key — no single-reducer global sort). Returns
-    * (qid, docId, score, rank), rank 1..k per query, ties broken
-    * score desc then docId asc exactly like the single-query path —
-    * per-query results are IDENTICAL to [[topKQ]] (BatchSearchSpec).
+  /** BATCH top-k: many queries against one index in ONE job — one
+    * postings source and one kernel pass per segment for all of them, the
+    * throughput shape of a training-data mining run ("run 10k queries
+    * over the corpus"), where per-query job scheduling would dominate.
+    * All queries are planned driver-side (expansions, stats, scorers —
+    * warm caches amortise across the batch); the source holds the UNION
+    * of every query's terms and wide patterns ([[segmentMaps]]); each
+    * task runs every query's kernel over each of its segments and keeps
+    * at most k hits per query (the per-slice collector), and the driver
+    * merges those per query exactly like [[topKQ]] (`TopDocs.merge`).
+    * The job has one stage on a serving or seg-aligned index and ships
+    * at most tasks x queries x k hits; the result holds at most
+    * |queries| x k rows, a bound the caller chooses through k.
     *
-    * Queries that cannot match (or whose scoring rewrite overflows —
-    * TooManyClauses propagates like the single-query path) simply
+    * Returns a local DataFrame (qid, docId, score, rank), rank 1..k per
+    * query, rows ordered by (qid, rank) with qids in Spark's string
+    * order (UTF-8 bytes). Per-query rows are IDENTICAL to [[topKQ]]
+    * (BatchSearchSpec, BatchTopKSpec). A repeated qid keeps its first
+    * query. Queries that cannot match (or whose scoring rewrite
+    * overflows — TooManyClauses propagates like the single-query path)
     * contribute no rows.
     */
   def topKBatch(index: Index, queries: Seq[(String, Query)], k: Int,
       doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
-    import spark.implicits._
-    // duplicate qids would merge their hit streams under one window
-    // partition (k/2 distinct docs with doubled rows) — keep the first
-    // occurrence of each qid, like a map of named queries
+    // keep the first occurrence of each qid, like a map of named queries
     val planned: Seq[(String, Plan)] = queries.distinctBy(_._1).flatMap { case (qid, q0) =>
       plan(index, q0, doubleMode, sim).map(qid -> _)
     }
-    if (planned.isEmpty)
-      return Seq.empty[(String, Long, Double)].toDF("qid", "docId", "score")
-        .withColumn("rank", lit(1L)).limit(0)
+    if (planned.isEmpty) return localResult(spark, Array.empty, batchSchema(doubleMode))
     val allTerms = planned.flatMap(_._2.terms).toSet
     val allWide = planned.flatMap(_._2.wide).distinct
     val live = index.live
     val ftok = index.filterCacheToken
     val kk = k
     val fm = !doubleMode
-    // ship (qid, query, scorers) once; the per-segment task reuses the
-    // byTerm map across all queries
-    val shipped: Seq[(String, Query, Scorers)] =
-      planned.map { case (qid, p) => (qid, p.query, p.scorers) }
-    val fanout = segmentMaps(index, allTerms, allWide).flatMap { case (seg, byTerm) =>
-      val del = live.deleted(seg)
-      shipped.iterator.flatMap { case (qid, q, scorers) =>
-        SegmentKernel.run(q, byTerm, scorers, kk, floatMode = fm,
+    // ship (query, scorers) once, addressed by position; each task reuses
+    // a segment's byTerm map across all queries
+    val shipped: Array[(Query, Scorers)] = planned.map { case (_, p) => (p.query, p.scorers) }.toArray
+    val partial = segmentMaps(index, allTerms, allWide).mapPartitions { segs =>
+      val hits = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
+      segs.foreach { case (seg, byTerm) =>
+        val del = live.deleted(seg)
+        shipped.indices.foreach { i =>
+          val (q, scorers) = shipped(i)
+          hits(i) ++= SegmentKernel.run(q, byTerm, scorers, kk, floatMode = fm,
             deletedOrds = del, seg = seg, cacheToken = ftok)
-          .iterator.map { case (d, s) => Row(qid, d, s) }
+        }
       }
+      hits.iterator.map(_.result()).zipWithIndex
+        .collect { case (hs, i) if hs.nonEmpty => i -> topOf(hs, kk) }
+    }.collect()
+    val byQuery = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
+    partial.foreach { case (i, hs) => byQuery(i) ++= hs }
+    val qids = planned.map(_._1).toArray
+    val utf8 = qids.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+    val rows = qids.indices.sortWith((a, b) => utf8(a).binaryCompare(utf8(b)) < 0).flatMap { i =>
+      mergedRows(byQuery(i).result(), k, doubleMode)((d, s, r) => Row(qids(i), d, s, r))
     }
-    import org.apache.spark.sql.expressions.Window
-    val ranked = spark.createDataFrame(fanout, StructType(Seq(
-        StructField("qid", StringType), StructField("docId", LongType, nullable = false),
-        StructField("score", DoubleType, nullable = false))))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"qid").orderBy(desc("score"), asc("docId"))).cast("long"))
-      .filter($"rank" <= k)
-    val scored =
-      if (doubleMode) ranked
-      else ranked.select($"qid", $"docId", $"score".cast("float").as("score"), $"rank")
-    scored.orderBy($"qid", $"rank")
+    localResult(spark, rows.toArray, batchSchema(doubleMode))
   }
 
   /** Open collector SPI — the `Collector` / `LeafCollector` pair of the
