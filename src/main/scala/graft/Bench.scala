@@ -26,6 +26,20 @@ object Bench {
   private val QueryCorpusDocs = 400000L
   private val QueryCorpusSegments = 128
 
+  /** JDK-17 `--add-opens` flags Spark needs in the JVMs Bench starts:
+    * argv of the scaling child, space-joined into the child's executor
+    * `extraJavaOptions` (build.sbt keeps its own copy for sbt's forks).
+    */
+  private[graft] val AddOpens: Seq[String] = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar"
+  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -75,17 +89,8 @@ object Bench {
   }
 
   private def indexBenchOnce(cpus: Int, docs: Long): (Double, Double) = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(
-      s"${System.getProperty("java.home")}/bin/java") ++ addOpens ++ Seq(
+      s"${System.getProperty("java.home")}/bin/java") ++ AddOpens ++ Seq(
       "-Xmx24g", "-XX:+UseParallelGC",
       "-cp", System.getProperty("java.class.path"),
       // segments = 2 x threads: write-task count tracks parallelism (the
@@ -278,15 +283,7 @@ object IndexBenchChild {
     // N-executor cluster (separate JVMs: own GC, own locks, like real
     // executors). GRAFT_BENCH_MASTER overrides (e.g. plain local[N]).
     val master = sys.env.getOrElse("GRAFT_BENCH_MASTER", s"local-cluster[$cpus,1,6144]")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+    val addOpens = Bench.AddOpens.mkString(" ")
     val spark = SparkSession.builder()
       .master(master)
       .appName(s"graft-bench-child-$cpus")

@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.SparkSession
 
 /** Auxiliary measurement harness (guide §1: measure first, §1.4 noop-style
@@ -14,6 +15,10 @@ import org.apache.spark.sql.SparkSession
   *              what Bench would record, later reps show steady state)
   *   plansDir — if non-"-", write <name>.txt explain(formatted) there
   *   name...  — subset of catalog query names (default: all)
+  *
+  * Prints one JSON line: "queries" holds each entry's successful rep
+  * times; a rep that throws is left out of them and its message listed
+  * under "errors" ({name: [message, ...]}, empty when none failed).
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -53,16 +58,14 @@ object BenchExtra {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
     names.foreach { name =>
       spark.sparkContext.setJobDescription(name)
       val fn = SparkEntry.queries(name)
-      val samples = (1 to reps).map { _ =>
-        val s0 = System.nanoTime()
-        try fn(spark, sfDir).collect()
-        catch { case e: Throwable => System.err.println(s"[err] $name: $e") }
-        (System.nanoTime() - s0) / 1e9
-      }
+      val (failed, samples) = timeReps(reps)(fn(spark, sfDir).collect())
+      failed.foreach(m => System.err.println(s"[err] $name: $m"))
       out(name) = samples
+      if (failed.nonEmpty) errors(name) = failed
       System.err.println(f"[q] $name ${samples.map(s => f"$s%.3f").mkString(" ")}")
       if (plansDir != "-") {
         try {
@@ -81,7 +84,24 @@ object BenchExtra {
       "\"" + k + "\":" + v.map(s => f"$s%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val prepJson = prep.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    println(s"""{"metric":"extra","prep":$prepJson,"queries":$qs}""")
+    println(s"""{"metric":"extra","prep":$prepJson,"queries":$qs,"errors":${errorsJson(errors.toSeq)}}""")
     spark.stop()
+  }
+
+  /** Run `body` `reps` times: (messages of the reps that threw, seconds
+    * of the reps that completed). A failed rep yields no time sample.
+    */
+  private[graft] def timeReps(reps: Int)(body: => Unit): (Seq[String], Seq[Double]) =
+    (1 to reps).map { _ =>
+      val s0 = System.nanoTime()
+      try { body; Right((System.nanoTime() - s0) / 1e9) }
+      catch { case e: Throwable => Left(e.toString) }
+    }.partitionMap(identity)
+
+  /** `{name: [message, ...]}` as JSON, messages string-escaped. */
+  private[graft] def errorsJson(errors: Seq[(String, Seq[String])]): String = {
+    def str(v: String) = "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
+    errors.map { case (k, ms) => str(k) + ":" + ms.map(str).mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
   }
 }

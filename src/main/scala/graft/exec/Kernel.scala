@@ -5,14 +5,18 @@ import graft.model.PostingList
 
 /** Per-segment scoring kernels.
   *
-  * These run inside a typed `flatMapGroups` over one segment's posting
-  * rows — the Spark analogue of Lucene's per-leaf bulk scorers
+  * These run inside an executor task over one segment's term -> postings
+  * map — the Spark analogue of Lucene's per-leaf bulk scorers
   * (`core/search/Weight.java:230-300`). Physical algorithm selection
-  * mirrors `core/search/BooleanScorerSupplier.java:176-349`:
-  * pure disjunction of terms -> block-max WAND
-  * (`core/search/WANDScorer.java:55`); conjunction of terms -> leapfrog
-  * with block-max skipping (`core/search/BlockMaxConjunctionScorer.java`);
-  * anything else -> generic document-at-a-time cursor composition.
+  * ([[SegmentKernel.run]]) mirrors
+  * `core/search/BooleanScorerSupplier.java:176-349`: single term ->
+  * impact block skipping; pure disjunction of at most 16 terms ->
+  * block-max WAND (`core/search/WANDScorer.java:55`), the one
+  * document-at-a-time disjunction pruner; pure disjunction of more than
+  * 16 terms (any minShouldMatch) -> windowed term-at-a-time
+  * accumulation; conjunction of terms -> leapfrog with block-max
+  * skipping (`core/search/BlockMaxConjunctionScorer.java`); anything
+  * else -> generic document-at-a-time cursor composition.
   *
   * Scoring contract: per-term scores in float (or double, see
   * [[BM25.TermScorerD]]), clause sums accumulated in double, cast at the
@@ -78,12 +82,7 @@ object Kernel {
     * entry A is less competitive than B iff A.score < B.score, or equal
     * score and A.doc > B.doc.
     */
-  final class HitHeap(k: Int, floor: Double = Double.NegativeInfinity) {
-    // `floor` is a PRE-KNOWN lower bound of the global kth score (the
-    // cross-partition min-competitive feedback, `MaxScoreAccumulator`
-    // analogue): pruning can start from it before the local heap fills.
-    // Callers must pass a value strictly below any tying score
-    // (nextDown of the primed kth), so score==kth ties still collect.
+  final class HitHeap(k: Int) {
     // lazily grown up to k — callers may pass k >> matches (match-all counts)
     private var scores = new Array[Double](math.min(k, 1024))
     private var docs = new Array[Long](math.min(k, 1024))
@@ -100,11 +99,11 @@ object Kernel {
     @inline private def less(s1: Double, d1: Long, s2: Double, d2: Long): Boolean =
       s1 < s2 || (s1 == s2 && d1 > d2)
 
+    /** Pruning may act only once the heap is full: until then every hit
+      * is competitive.
+      */
     def full: Boolean = size == k
-    def minScore: Double = if (full) math.max(scores(0), floor) else floor
-
-    /** Whether pruning may act (heap full OR a primed floor exists). */
-    def canPrune: Boolean = full || floor != Double.NegativeInfinity
+    def minScore: Double = if (full) scores(0) else Double.NegativeInfinity
 
     /** true if (score, doc) was inserted. */
     def insert(score: Double, doc: Long): Boolean = {
@@ -925,9 +924,8 @@ object Kernel {
     if (floatMode) s.toFloat.toDouble else s
 
   /** Exhaustive driver: stream every match of the root cursor into the heap. */
-  def collectAll(root: DocCursor, k: Int, floatMode: Boolean = false,
-      floor: Double = Double.NegativeInfinity): Array[(Long, Double)] = {
-    val heap = new HitHeap(k, floor)
+  def collectAll(root: DocCursor, k: Int, floatMode: Boolean = false): Array[(Long, Double)] = {
+    val heap = new HitHeap(k)
     var d = root.nextDoc()
     while (d != NoMoreDocs) {
       heap.insert(fin(root.score(), floatMode), d)
@@ -961,14 +959,14 @@ object Kernel {
     * cursor overhead dominate (multi-term expansions). Rank-identical.
     */
   def taatTopK(cursors: Array[TermCursor], k: Int, minShouldMatch: Int = 1,
-      floatMode: Boolean = false, floor: Double = Double.NegativeInfinity): Array[(Long, Double)] = {
+      floatMode: Boolean = false): Array[(Long, Double)] = {
     // windowed accumulation into primitive arrays — the reference's dense-
     // disjunction BooleanScorer (`core/search/BooleanScorer.java:31-34`,
     // 4096-doc windows): no per-doc boxing, sequential memory access.
     val Window = 4096
     val scores = new Array[Double](Window)
     val matches = new Array[Int](Window)
-    val heap = new HitHeap(k, floor)
+    val heap = new HitHeap(k)
     val live = cursors.filter(_.nextDoc() != NoMoreDocs)
     if (live.isEmpty) return heap.result()
     var done = false
@@ -1013,9 +1011,8 @@ object Kernel {
     * `core/search/WANDScorer.java:55` (Broder et al. two-level retrieval),
     * with block-max skipping. Rank-identical to exhaustive evaluation.
     */
-  def wandTopK(cursors: Array[TermCursor], k: Int, floatMode: Boolean = false,
-      floor: Double = Double.NegativeInfinity): Array[(Long, Double)] = {
-    val heap = new HitHeap(k, floor)
+  def wandTopK(cursors: Array[TermCursor], k: Int, floatMode: Boolean = false): Array[(Long, Double)] = {
+    val heap = new HitHeap(k)
     val subs: Array[TermCursor] = cursors.filter(_.nextDoc() != NoMoreDocs)
     if (subs.isEmpty) return heap.result()
 
@@ -1052,7 +1049,7 @@ object Kernel {
       var j = 0
       while (j < live && p < 0) {
         acc += ub(order(j))
-        if (!heap.canPrune || fin(acc, floatMode) > threshold) p = j
+        if (!heap.full || fin(acc, floatMode) > threshold) p = j
         j += 1
       }
       if (p < 0) return heap.result() // nothing can be competitive any more
@@ -1066,7 +1063,7 @@ object Kernel {
         var blockUb = 0d
         var jj = 0
         while (jj <= p) { blockUb += subs(order(jj)).blockMaxScore; jj += 1 }
-        if (!heap.canPrune || fin(blockUb, floatMode) > threshold) {
+        if (!heap.full || fin(blockUb, floatMode) > threshold) {
           // score pivotDoc fully: advance all cursors to pivotDoc
           var s = 0d
           var m = 0
@@ -1114,86 +1111,18 @@ object Kernel {
     heap.result()
   }
 
-  /** MAXSCORE bulk scorer over term cursors (pure disjunction, msm=1) —
-    * `core/search/MaxScoreBulkScorer.java:26` (Turtle & Flood):
-    * cursors sorted by static upper bound ascending; the maximal prefix
-    * whose SUMMED bounds cannot beat the current threshold is
-    * NON-ESSENTIAL — its cursors are never iterated, only probed (in
-    * decreasing-bound order, with running partial-score + remaining-
-    * bound cutoffs) on docs an essential cursor matched. Rank-identical
-    * to WAND / exhaustive evaluation: a doc is skipped only when its
-    * float-cast upper bound cannot exceed the heap minimum, and docs
-    * stream ascending so equal-score candidates lose the HitQueue
-    * tie-break anyway. WAND stays the engine default
-    * (`BooleanScorerSupplier` also picks one); select this with
-    * -Dgraft.disjunction=maxscore.
-    */
-  def maxscoreTopK(cursors: Array[TermCursor], k: Int, floatMode: Boolean = false,
-      floor: Double = Double.NegativeInfinity): Array[(Long, Double)] = {
-    val heap = new HitHeap(k, floor)
-    val subs: Array[TermCursor] =
-      cursors.filter(_.nextDoc() != NoMoreDocs).sortBy(_.maxScoreBound)
-    if (subs.isEmpty) return heap.result()
-    val n = subs.length
-    val prefix = new Array[Double](n + 1) // prefix(i) = sum of bounds of subs(0 until i)
-    var i = 0
-    while (i < n) { prefix(i + 1) = prefix(i) + subs(i).maxScoreBound; i += 1 }
-    var firstEssential = 0
-
-    def updateBoundary(): Unit = {
-      if (!heap.canPrune) { firstEssential = 0; return }
-      val t = heap.minScore
-      var e = 0
-      while (e < n && fin(prefix(e + 1), floatMode) <= t) e += 1
-      firstEssential = e
-    }
-
-    var live = true
-    while (live) {
-      updateBoundary()
-      if (firstEssential >= n) return heap.result() // nothing can compete any more
-      var d = NoMoreDocs
-      var j = firstEssential
-      while (j < n) { if (subs(j).doc < d) d = subs(j).doc; j += 1 }
-      if (d == NoMoreDocs) live = false
-      else {
-        // full score = essential matches + non-essential probes with cutoffs
-        var s = 0d
-        j = firstEssential
-        while (j < n) { if (subs(j).doc == d) s += subs(j).score(); j += 1 }
-        var jj = firstEssential - 1
-        var viable = true
-        while (jj >= 0 && viable) {
-          // cursors 0..jj are still unadded; their bound sum is prefix(jj+1)
-          if (heap.canPrune && fin(s + prefix(jj + 1), floatMode) <= heap.minScore)
-            viable = false
-          else {
-            val c = subs(jj)
-            if (c.doc < d) c.advance(d)
-            if (c.doc == d) s += c.score()
-            jj -= 1
-          }
-        }
-        if (viable) heap.insert(fin(s, floatMode), d)
-        j = firstEssential
-        while (j < n) { if (subs(j).doc == d) subs(j).nextDoc(); j += 1 }
-      }
-    }
-    heap.result()
-  }
-
   /** Conjunction of terms with block-max pruning —
     * `core/search/BlockMaxConjunctionBulkScorer.java`. Rank-identical to
     * exhaustive evaluation.
     */
   def conjunctionTopK(cursors: Array[TermCursor], k: Int,
-      floatMode: Boolean = false, floor: Double = Double.NegativeInfinity): Array[(Long, Double)] = {
-    val heap = new HitHeap(k, floor)
+      floatMode: Boolean = false): Array[(Long, Double)] = {
+    val heap = new HitHeap(k)
     val sorted = cursors // caller orders by cost (rarest lead)
     val conj = new ConjunctionCursor(sorted.map(x => x: DocCursor))
     var d = conj.nextDoc()
     while (d != NoMoreDocs) {
-      if (heap.canPrune) {
+      if (heap.full) {
         // block-max check before scoring
         var ub = 0d
         var j = 0
@@ -1208,12 +1137,11 @@ object Kernel {
   /** Single term with impact-based block skipping once the heap is full —
     * `core/search/TermScorer.java:35` + `ImpactsDISI.java:74-97`.
     */
-  def termTopK(cursor: TermCursor, k: Int, floatMode: Boolean = false,
-      floor: Double = Double.NegativeInfinity): Array[(Long, Double)] = {
-    val heap = new HitHeap(k, floor)
+  def termTopK(cursor: TermCursor, k: Int, floatMode: Boolean = false): Array[(Long, Double)] = {
+    val heap = new HitHeap(k)
     var d = cursor.nextDoc()
     while (d != NoMoreDocs) {
-      if (heap.canPrune && fin(cursor.blockMaxScore, floatMode) <= heap.minScore) {
+      if (heap.full && fin(cursor.blockMaxScore, floatMode) <= heap.minScore) {
         // whole block non-competitive -> skip it
         d = cursor.advance(cursor.blockLastDoc + 1)
       } else {

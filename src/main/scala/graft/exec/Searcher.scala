@@ -587,24 +587,18 @@ object Searcher {
     *  - otherwise the pushed-down postings scan, grouped by segment
     *    ([[bySegment]]): partition-locally on a seg-aligned index (one
     *    stage, no shuffle), through a shuffle on `seg` when it is not.
-    * Segments holding none of the terms yield nothing. `onlySeg` /
-    * `skipSeg` (-1 = unset) restrict the segments (priming pass /
-    * already-primed segment).
+    * Segments holding none of the terms yield nothing.
     */
   private def segmentMaps(
-      index: Index, terms: Set[String], wide: Seq[WideTermSetQ] = Nil,
-      onlySeg: Int = -1, skipSeg: Int = -1): RDD[(Int, Map[String, PostingList])] =
+      index: Index, terms: Set[String], wide: Seq[WideTermSetQ]): RDD[(Int, Map[String, PostingList])] =
     index.reader match {
       case Some(reader) =>
         reader.flatMap { case (seg, all) =>
-          if ((onlySeg >= 0 && seg != onlySeg) || seg == skipSeg) None
-          else {
-            val b = Map.newBuilder[String, PostingList]
-            terms.foreach(t => all.get(t).foreach(pl => b += t -> pl))
-            if (wide.nonEmpty) all.foreach { e => if (wide.exists(_.matches(e._1))) b += e }
-            val byTerm = b.result()
-            if (byTerm.isEmpty) None else Some(seg -> byTerm)
-          }
+          val b = Map.newBuilder[String, PostingList]
+          terms.foreach(t => all.get(t).foreach(pl => b += t -> pl))
+          if (wide.nonEmpty) all.foreach { e => if (wide.exists(_.matches(e._1))) b += e }
+          val byTerm = b.result()
+          if (byTerm.isEmpty) None else Some(seg -> byTerm)
         }
       case None =>
         val spark = index.postings.sparkSession
@@ -612,10 +606,7 @@ object Searcher {
         val basePred =
           if (terms.isEmpty) lit(false) else $"term".isin(terms.toSeq: _*)
         val pred = wide.foldLeft(basePred)((p, w) => p || wideScanPred(w))
-        var scan = index.postings.filter(pred)
-        if (onlySeg >= 0) scan = scan.filter($"seg" === onlySeg)
-        if (skipSeg >= 0) scan = scan.filter($"seg" =!= skipSeg)
-        bySegment(scan.rdd, index.segAligned,
+        bySegment(index.postings.filter(pred).rdd, index.segAligned,
           spark.conf.get("spark.sql.shuffle.partitions").toInt)
     }
 
@@ -723,14 +714,15 @@ object Searcher {
     spark.createDataFrame(rows, scoredSchema(doubleMode))
   }
 
-  /** Global top-k as (docId, score): ONE job runs the per-segment
-    * kernels, and the driver merges their at most k rows per segment in
-    * (score desc, docId asc) order — `IndexSearcher.search` over
-    * `TopDocs.merge`. Outside double mode the score is cast to float
-    * after the merge. Returns a local DataFrame: the job has already run.
+  /** Global top-k as (docId, score): plan, ONE job running the
+    * per-segment kernels, and a driver merge of their at most k rows per
+    * segment in (score desc, docId asc) order — `IndexSearcher.search`
+    * over `TopDocs.merge`. Each segment's kernel prunes against its own
+    * heap only. Outside double mode the score is cast to float after the
+    * merge. Returns a local DataFrame: the job has already run.
     */
   def topKQ(index: Index, query0: Query, k: Int, doubleMode: Boolean = false,
-      primeThreshold: Boolean = false, sim: SimilarityFactory = BM25Sim): DataFrame = {
+      sim: SimilarityFactory = BM25Sim): DataFrame = {
     val spark = index.postings.sparkSession
     val pl = plan(index, query0, doubleMode, sim) match {
       case None => return localResult(spark, Array.empty, scoredSchema(doubleMode))
@@ -742,41 +734,12 @@ object Searcher {
     val live = index.live
     val ftok = index.filterCacheToken
     val fm = !doubleMode
-
-    // optional cross-partition min-competitive priming (the
-    // `MaxScoreAccumulator` analogue, `core/search/MaxScoreAccumulator.java`):
-    // run the kernel on the densest segment first; its kth score is a
-    // valid lower bound of the GLOBAL kth score, so every other segment
-    // starts pruning from it instead of from an empty heap. Worth its two
-    // extra small jobs only on large corpora; rank-identical either way
-    // (the floor is nextDown'd so kth-score ties still collect).
-    var floor = Double.NegativeInfinity
-    var primed = Array.empty[(Long, Double)]
-    var primedSeg = -1
-    if (primeThreshold && pl.wide.isEmpty) {
-      val sizes = segmentMaps(index, pl.terms)
-        .map { case (seg, byTerm) => (seg, byTerm.valuesIterator.map(_.df.toLong).sum) }
-        .collect()
-      if (sizes.nonEmpty) {
-        primedSeg = sizes.maxBy(_._2)._1
-        primed = segmentMaps(index, pl.terms, onlySeg = primedSeg).flatMap { case (seg, byTerm) =>
-          SegmentKernel.run(q, byTerm, scorers, kk,
-              floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
-              cacheToken = ftok).iterator
-        }.collect()
-        if (primed.length >= k) floor = Math.nextDown(primed.map(_._2).min)
-      }
-    }
-    val fl = floor
-
-    // 3. per-segment kernels, 4. driver-side merge of the local top-ks
-    val hits = segmentMaps(index, pl.terms, pl.wide, skipSeg = primedSeg)
-      .flatMap { case (seg, byTerm) =>
-        SegmentKernel.run(q, byTerm, scorers, kk,
-            floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
-            floor = fl, cacheToken = ftok).iterator
-      }.collect()
-    localResult(spark, mergedRows(hits ++ primed, k, doubleMode)((d, s, _) => Row(d, s)),
+    val hits = segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
+      SegmentKernel.run(q, byTerm, scorers, kk,
+          floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
+          cacheToken = ftok).iterator
+    }.collect()
+    localResult(spark, mergedRows(hits, k, doubleMode)((d, s, _) => Row(d, s)),
       scoredSchema(doubleMode))
   }
 
@@ -1054,17 +1017,12 @@ object FilterCache {
 }
 
 /** The per-segment execution: cursor tree construction + physical
-  * algorithm choice (`core/search/BooleanScorerSupplier.java:176-349`).
+  * algorithm choice (`core/search/BooleanScorerSupplier.java:176-349`),
+  * one kernel per root shape: block-max WAND for a pure disjunction of
+  * at most 16 terms, TAAT above that (see [[Kernel]]).
   */
 object SegmentKernel {
   import Kernel._
-
-  /** Disjunction bulk-scorer choice (read once per JVM): WAND by
-    * default, MAXSCORE with -Dgraft.disjunction=maxscore — both
-    * rank-identical (MaxScoreSpec proves equality on random postings).
-    */
-  private val useMaxScore: Boolean =
-    "maxscore".equalsIgnoreCase(System.getProperty("graft.disjunction", "wand"))
 
   /** Wrap the root with the segment's tombstone exclusion (liveDocs,
     * `core/search/Weight.java:294-300` acceptDocs).
@@ -1108,7 +1066,6 @@ object SegmentKernel {
       floatMode: Boolean = false,
       deletedOrds: Array[Long] = null,
       seg: Int = -1,
-      floor: Double = Double.NegativeInfinity,
       cacheToken: String = null
   ): Array[(Long, Double)] = {
     val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
@@ -1123,7 +1080,7 @@ object SegmentKernel {
     q match {
       case TermQ(t) if !hasDeletes =>
         termCursor(t, needPos = false) match {
-          case Some(c) => termTopK(c, k, floatMode, floor)
+          case Some(c) => termTopK(c, k, floatMode)
           case None => Array.empty
         }
       case BoolQ(must, Nil, Nil, _, Nil) if !hasDeletes && must.nonEmpty &&
@@ -1135,7 +1092,7 @@ object SegmentKernel {
           // `ConjunctionDISI` cost ordering
           val sorted = ts.sortBy(t => byTerm(t).df)
             .map(t => new TermCursor(byTerm(t), scorers.term(t))).toArray
-          conjunctionTopK(sorted, k, floatMode, floor)
+          conjunctionTopK(sorted, k, floatMode)
         }
       case BoolQ(Nil, should, Nil, msm, Nil) if !hasDeletes && msm <= 1 && should.nonEmpty &&
           should.forall(_.isInstanceOf[TermQ]) =>
@@ -1144,18 +1101,15 @@ object SegmentKernel {
         // dense many-clause disjunctions (multi-term expansions): term-at-a-
         // time accumulation beats document-at-a-time WAND
         // (`BooleanScorerSupplier.java:176-223` makes the same choice)
-        else if (cs.size > 16) taatTopK(cs.toArray, k, 1, floatMode, floor)
-        // WAND is the default document-at-a-time pruner; MAXSCORE is the
-        // drop-in alternative (rank-identical, -Dgraft.disjunction=maxscore)
-        else if (useMaxScore) maxscoreTopK(cs.toArray, k, floatMode, floor)
-        else wandTopK(cs.toArray, k, floatMode, floor)
+        else if (cs.size > 16) taatTopK(cs.toArray, k, 1, floatMode)
+        else wandTopK(cs.toArray, k, floatMode)
       case BoolQ(Nil, should, Nil, msm, Nil) if !hasDeletes && should.nonEmpty &&
           should.size > 16 && should.forall(_.isInstanceOf[TermQ]) =>
         val cs = should.collect { case TermQ(t) => termCursor(t, needPos = false) }.flatten
-        if (cs.isEmpty) Array.empty else taatTopK(cs.toArray, k, msm, floatMode, floor)
+        if (cs.isEmpty) Array.empty else taatTopK(cs.toArray, k, msm, floatMode)
       case other =>
         buildCursor(other, byTerm, scorers, cacheCtx) match {
-          case Some(c) => collectAll(withLiveDocs(c, deletedOrds), k, floatMode, floor)
+          case Some(c) => collectAll(withLiveDocs(c, deletedOrds), k, floatMode)
           case None => Array.empty
         }
     }

@@ -520,68 +520,96 @@ class AnalyzerModesSpec extends AnyFunSuite {
   }
 }
 
-/** MAXSCORE bulk scorer — rank identity vs WAND and vs brute-force
-  * evaluation over random encoded postings (pure-JVM differential,
-  * no Spark): same hits, same float scores, same tie order, with and
-  * without a primed floor.
+/** Disjunction kernels — rank identity of block-max WAND and of the
+  * windowed term-at-a-time accumulator vs brute-force evaluation over
+  * random encoded postings (pure-JVM differential, no Spark): same hits,
+  * same float scores, same tie order.
   */
-class MaxScoreSpec extends AnyFunSuite {
-  import graft.exec.Kernel
+class DisjunctionKernelSpec extends AnyFunSuite {
+  import graft.exec.{Kernel, SegmentKernel}
+  import graft.exec.Searcher.Scorers
 
-  private def run(seed: Int): Unit = {
-    val rnd = new scala.util.Random(seed)
-    val numDocs = 1500
-    val numTerms = 2 + rnd.nextInt(8)
-    val lens = Array.fill(numDocs)(5 + rnd.nextInt(400))
-    val norms = lens.map(SmallFloat.intToByte4)
-    val fs = FieldStats(numDocs.toLong, lens.map(_.toLong).sum)
-    // per-term random postings
-    val terms = (0 until numTerms).map { t =>
+  private val numDocs = 1500
+
+  /** Random postings for `numTerms(rnd)` terms named t0, t1, ... and a
+    * brute-force (docId, float-cast score) list of the docs at least
+    * `msm` of them match.
+    */
+  private final class Postings(seed: Int, numTerms: scala.util.Random => Int) {
+    private val rnd = new scala.util.Random(seed)
+    private val n = numTerms(rnd)
+    private val lens = Array.fill(numDocs)(5 + rnd.nextInt(400))
+    private val norms = lens.map(SmallFloat.intToByte4)
+    private val fs = FieldStats(numDocs.toLong, lens.map(_.toLong).sum)
+    private val terms = (0 until n).map { _ =>
       val density = 0.02 + rnd.nextDouble() * 0.4
       val ids = (0 until numDocs).filter(_ => rnd.nextDouble() < density)
       val freqs = ids.map(_ => 1 + rnd.nextInt(12))
       (ids.toArray.map(_.toLong), freqs.toArray)
     }
-    val scorers = terms.map { case (ids, _) =>
+    val names: IndexedSeq[String] = terms.indices.map(t => s"t$t")
+    private val scorers = terms.map { case (ids, _) =>
       Kernel.FloatScorer(BM25.termScorer(TermStats("t", ids.length.toLong, 0L), fs))
     }
-    val pls = terms.map { case (ids, freqs) =>
-      PostingCodec.encode(0, "t", ids, freqs, ids.map(id => norms(id.toInt)), null)
+    private val pls = terms.indices.map { t =>
+      val (ids, freqs) = terms(t)
+      PostingCodec.encode(0, names(t), ids, freqs, ids.map(id => norms(id.toInt)), null)
     }
+    def cursors(): Array[Kernel.TermCursor] =
+      pls.indices.map(t => new Kernel.TermCursor(pls(t), scorers(t))).toArray
+    def byTerm: Map[String, graft.model.PostingList] = names.zip(pls).toMap
+    def scorerMap: Scorers = Scorers(names.zip(scorers).toMap, Map.empty, Map.empty, Map.empty)
+
     // brute-force baseline with the collector-boundary float cast
-    val brute: Seq[(Long, Double)] = {
+    def brute(msm: Int): Seq[(Long, Double)] = {
       val acc = new Array[Double](numDocs)
-      val hit = new Array[Boolean](numDocs)
+      val hits = new Array[Int](numDocs)
       terms.indices.foreach { t =>
         val (ids, freqs) = terms(t)
         ids.indices.foreach { i =>
           val d = ids(i).toInt
           acc(d) += scorers(t).score(freqs(i), norms(d))
-          hit(d) = true
+          hits(d) += 1
         }
       }
-      (0 until numDocs).filter(hit).map(d => (d.toLong, acc(d).toFloat.toDouble))
+      (0 until numDocs).filter(d => hits(d) >= math.max(msm, 1))
+        .map(d => (d.toLong, acc(d).toFloat.toDouble))
     }
-    def topOf(k: Int): Seq[(Long, Double)] =
-      brute.sortBy { case (d, s) => (-s, d) }.take(k)
-    Seq(3, 10, 64).foreach { k =>
-      def cursors() = pls.indices.map(t => new Kernel.TermCursor(pls(t), scorers(t))).toArray
-      val wand = Kernel.wandTopK(cursors(), k, floatMode = true)
-      val ms = Kernel.maxscoreTopK(cursors(), k, floatMode = true)
-      val exp = topOf(k)
-      assert(wand.toSeq == exp, s"wand k=$k seed=$seed")
-      assert(ms.toSeq == exp, s"maxscore k=$k seed=$seed")
-      // primed floor: just below the true kth score — still rank-identical
-      if (exp.size >= k && k > 1) {
-        val floor = Math.nextDown(exp(k - 1)._2)
-        val msF = Kernel.maxscoreTopK(cursors(), k, floatMode = true, floor = floor)
-        assert(msF.toSeq == exp, s"maxscore primed k=$k seed=$seed")
+  }
+
+  private def topOf(hits: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    hits.sortBy { case (d, s) => (-s, d) }.take(k)
+
+  test("wand == brute force over random postings (20 seeds)") {
+    (1 to 20).foreach { seed =>
+      val p = new Postings(seed * 7919, rnd => 2 + rnd.nextInt(8))
+      Seq(3, 10, 64).foreach { k =>
+        val wand = Kernel.wandTopK(p.cursors(), k, floatMode = true)
+        assert(wand.toSeq == topOf(p.brute(1), k), s"wand k=$k seed=$seed")
       }
     }
   }
 
-  test("maxscore == wand == brute force over random postings (20 seeds)") {
-    (1 to 20).foreach(s => run(s * 7919))
+  test("taat == brute force with minShouldMatch 1 and 2, up to 24 terms (20 seeds)") {
+    val counts = (1 to 20).map { seed =>
+      val p = new Postings(seed * 7919, rnd => 1 + rnd.nextInt(24))
+      Seq(1, 2).foreach { msm =>
+        val exp = p.brute(msm)
+        // k = numDocs keeps every match, so the match-count filter shows
+        // even where the top hits all match many terms
+        Seq(3, 10, 64, numDocs).foreach { k =>
+          val taat = Kernel.taatTopK(p.cursors(), k, msm, floatMode = true)
+          assert(taat.toSeq == topOf(exp, k), s"taat msm=$msm k=$k seed=$seed")
+          // the segment kernel's own pick on either side of the 16-clause
+          // cut-over: WAND or generic cursors below it, TAAT above it
+          val q = BoolQ(Nil, p.names.map(TermQ(_)), Nil, msm, Nil)
+          val run = SegmentKernel.run(q, p.byTerm, p.scorerMap, k, floatMode = true)
+          assert(run.toSeq == topOf(exp, k), s"run msm=$msm k=$k seed=$seed terms=${p.names.size}")
+        }
+      }
+      p.names.size
+    }
+    assert(counts.exists(_ <= 16) && counts.exists(_ > 16), s"term counts $counts")
   }
 }
 
@@ -624,5 +652,24 @@ class LiveFieldValuesSpec extends AnyFunSuite {
     lfv.afterRefresh()
     assert(lfv.get("a").contains(10 + 90))
     assert(lfv.pending == 0)
+  }
+}
+
+/** BenchExtra's rep loop: a rep that throws is reported as an error and
+  * yields no timing sample; error messages are JSON-escaped.
+  */
+class BenchExtraSpec extends AnyFunSuite {
+  test("failed reps are errors, not samples; errors render as escaped JSON") {
+    var n = 0
+    val (failed, samples) = BenchExtra.timeReps(4) {
+      n += 1
+      if (n % 2 == 0) throw new IllegalStateException(s"rep \"$n\"\nfailed")
+    }
+    assert(n == 4)
+    assert(samples.size == 2 && samples.forall(_ >= 0d))
+    assert(failed == Seq(2, 4).map(i => s"java.lang.IllegalStateException: rep \"$i\"\nfailed"))
+    assert(BenchExtra.errorsJson(Seq("q1" -> failed.take(1), "q2" -> Nil)) ==
+      """{"q1":["java.lang.IllegalStateException: rep \"2\"\nfailed"],"q2":[]}""")
+    assert(BenchExtra.errorsJson(Nil) == "{}")
   }
 }
