@@ -29,7 +29,9 @@ object BM25 {
   def idfDouble(df: Long, docCount: Long): Double =
     Math.log(1 + (docCount - df + 0.5d) / (df + 0.5d))
 
-  /** Per-term float scorer with the 256-entry norm-inverse cache. */
+  /** Per-term float scorer over its field's shared 256-entry norm-inverse
+    * table ([[cacheF]]).
+    */
   final class TermScorer(val weight: Float, cache: Array[Float]) extends Serializable {
     @inline def score(freq: Int, norm: Byte): Float = {
       val normInverse = cache(norm & 0xff)
@@ -56,16 +58,8 @@ object BM25 {
     def globalMaxScore: Float = weight // limit of score as freq -> inf
   }
 
-  def termScorer(stats: TermStats, field: FieldStats, boost: Float = 1f): TermScorer = {
-    val avgdl = field.avgdl
-    val cache = new Array[Float](256)
-    var i = 0
-    while (i < 256) {
-      cache(i) = 1f / (K1 * ((1 - B) + B * SmallFloat.LengthTable(i) / avgdl))
-      i += 1
-    }
-    new TermScorer(boost * idf(stats.df, field.docCount), cache)
-  }
+  def termScorer(stats: TermStats, field: FieldStats, boost: Float = 1f): TermScorer =
+    new TermScorer(boost * idf(stats.df, field.docCount), cacheF(field))
 
   /** Double-precision scorer over byte-quantised lengths; used for the
     * driver's DuckDB-oracle-checked queries (same quantisation, double
@@ -84,29 +78,44 @@ object BM25 {
     def globalMaxScore: Double = weight
   }
 
-  /** Norm-inverse caches (shared by term and phrase scorer construction). */
-  def cacheF(fs: FieldStats): Array[Float] = {
-    val avgdl = fs.avgdl
-    Array.tabulate(256)(i =>
-      1f / (K1 * ((1 - B) + B * SmallFloat.LengthTable(i) / avgdl)))
-  }
-  def cacheD(fs: FieldStats): Array[Double] = {
-    val avgdl = fs.avgdlDouble
-    Array.tabulate(256)(i =>
-      1d / (1.2d * (0.25d + 0.75d * SmallFloat.byte4ToInt(i.toByte) / avgdl)))
+  /** Norm-inverse tables, one per field statistics: every term and
+    * phrase scorer of a field holds the same (read-only) array, so a
+    * shipped scorer table serializes each field's table once. Memoized
+    * JVM-wide; the maps are cleared past a fixed size, like
+    * `FileLiveDocs.cache`.
+    */
+  def cacheF(fs: FieldStats): Array[Float] =
+    memo(tablesF, fs) {
+      val avgdl = fs.avgdl
+      Array.tabulate(256)(i =>
+        1f / (K1 * ((1 - B) + B * SmallFloat.LengthTable(i) / avgdl)))
+    }
+  def cacheD(fs: FieldStats): Array[Double] =
+    memo(tablesD, fs) {
+      val avgdl = fs.avgdlDouble
+      Array.tabulate(256)(i =>
+        1d / (1.2d * (0.25d + 0.75d * SmallFloat.byte4ToInt(i.toByte) / avgdl)))
+    }
+
+  private val MaxTables = 1024
+  private val tablesF = new java.util.concurrent.ConcurrentHashMap[FieldStats, Array[Float]]()
+  private val tablesD = new java.util.concurrent.ConcurrentHashMap[FieldStats, Array[Double]]()
+
+  private def memo[A <: AnyRef](m: java.util.concurrent.ConcurrentHashMap[FieldStats, A],
+      fs: FieldStats)(build: => A): A = {
+    val hit = m.get(fs)
+    if (hit != null) hit
+    else {
+      if (m.size > MaxTables) m.clear()
+      val v = build
+      val prev = m.putIfAbsent(fs, v)
+      if (prev != null) prev else v
+    }
   }
 
   /** Double mode uses the exact decimal constants 1.2 / 0.75 (not the
     * float-widened values) so a SQL oracle can reproduce it literally.
     */
-  def termScorerD(stats: TermStats, field: FieldStats, boost: Double = 1d): TermScorerD = {
-    val avgdl = field.avgdlDouble
-    val cache = new Array[Double](256)
-    var i = 0
-    while (i < 256) {
-      cache(i) = 1d / (1.2d * (0.25d + 0.75d * SmallFloat.byte4ToInt(i.toByte) / avgdl))
-      i += 1
-    }
-    new TermScorerD(boost * idfDouble(stats.df, field.docCount), cache)
-  }
+  def termScorerD(stats: TermStats, field: FieldStats, boost: Double = 1d): TermScorerD =
+    new TermScorerD(boost * idfDouble(stats.df, field.docCount), cacheD(field))
 }

@@ -25,6 +25,12 @@ import graft.model.PostingList
   * order, so once the heap is full a candidate with upper bound <= the
   * heap minimum can never win (equal score loses on docId) — the
   * min-competitive feedback of `TopScoreDocCollector.java:147-162`.
+  *
+  * Work is done once where it can be: a [[TermCursor]] computes a block's
+  * impact bound when it loads the block, and a batch task shares one
+  * [[BlockCache]] per segment, so each position-less block is decoded
+  * once for all of its queries (up to [[BlockCache.MaxPostings]] cached
+  * postings; single queries decode directly).
   */
 object Kernel {
   val NoMoreDocs: Long = Long.MaxValue
@@ -83,6 +89,7 @@ object Kernel {
     * score and A.doc > B.doc.
     */
   final class HitHeap(k: Int) {
+    require(k > 0, "k must be > 0")
     // lazily grown up to k — callers may pass k >> matches (match-all counts)
     private var scores = new Array[Double](math.min(k, 1024))
     private var docs = new Array[Long](math.min(k, 1024))
@@ -170,15 +177,62 @@ object Kernel {
     def maxScoreBound: Double
   }
 
+  /** Decoded postings blocks of ONE segment, shared by the cursors of
+    * many queries over that segment's term map: a batch task runs every
+    * query of its batch over a segment, and without it each query decodes
+    * the same hot terms' blocks again. Keyed by (term, block) — the
+    * term's posting list in the segment and the block number. Holds
+    * position-less decodes only (positional cursors decode directly).
+    * Bounded by `maxPostings` cached postings (~13 bytes each): past it
+    * no block is added and cursors decode directly. Not thread-safe: one
+    * task thread owns it and drops it after the segment.
+    */
+  final class BlockCache private[graft] (maxPostings: Long) {
+    def this() = this(BlockCache.MaxPostings)
+    private val slots = new java.util.IdentityHashMap[PostingList, Array[PostingCodec.Decoded]]()
+    private var cached = 0L
+
+    /** The block slots of `pl` (null until decoded). */
+    private[exec] def slotsOf(pl: PostingList): Array[PostingCodec.Decoded] = {
+      var s = slots.get(pl)
+      if (s == null) { s = new Array[PostingCodec.Decoded](pl.numBlocks); slots.put(pl, s) }
+      s
+    }
+
+    /** Block `b` of `pl`, decoded on first use, kept while under the bound. */
+    private[exec] def block(pl: PostingList, s: Array[PostingCodec.Decoded], b: Int): PostingCodec.Decoded = {
+      var d = s(b)
+      if (d == null) {
+        d = PostingCodec.decodeBlock(pl, b)
+        if (cached < maxPostings) { s(b) = d; cached += pl.counts(b) }
+      }
+      d
+    }
+
+    /** Postings held, for tests of the bound. */
+    private[graft] def size: Long = cached
+  }
+
+  object BlockCache {
+    /** 1M postings: ~13 MB of docIds, freqs and norms per task. */
+    val MaxPostings: Long = 1L << 20
+  }
+
   /** Posting-list cursor with lazy block decode and block-skip on
     * advance (skip data analogue, `Lucene103PostingsFormat.java:343-353`).
+    * With a [[BlockCache]] (and no positions) a block is decoded once per
+    * cache and reused by every cursor over the same list. Each loaded
+    * block's impact bound is computed once, on load ([[blockMaxScore]]).
     */
   final class TermCursor(private[exec] val pl: PostingList, val scorer: AnyScorer,
-      needPositions: Boolean = false)
+      needPositions: Boolean = false, blocks: BlockCache = null)
       extends DocCursor {
     private val numBlocks = pl.numBlocks
+    private val cachedBlocks =
+      if (blocks == null || needPositions) null else blocks.slotsOf(pl)
     private var blockIdx = -1
     private var decoded: PostingCodec.Decoded = _
+    private var blockMax = 0d
     private var i = 0
     private var n = 0
     var doc: Long = -1
@@ -197,7 +251,10 @@ object Kernel {
 
     private def loadBlock(bi: Int): Unit = {
       blockIdx = bi
-      decoded = PostingCodec.decodeBlock(pl, bi, needPositions)
+      decoded =
+        if (cachedBlocks == null) PostingCodec.decodeBlock(pl, bi, needPositions)
+        else blocks.block(pl, cachedBlocks, bi)
+      blockMax = scorer.maxScore(pl.maxFreqs(bi), pl.minNorms(bi))
       i = 0
       n = decoded.docIds.length
     }
@@ -249,8 +306,7 @@ object Kernel {
     def score(): Double = scorer.score(decoded.freqs(i), decoded.norms(i))
 
     /** Upper bound of the current block (for BMW); call only when on a doc. */
-    def blockMaxScore: Double =
-      scorer.maxScore(pl.maxFreqs(blockIdx), pl.minNorms(blockIdx))
+    def blockMaxScore: Double = blockMax
 
     /** Last doc of the current block. */
     def blockLastDoc: Long = pl.maxDocIds(blockIdx)
@@ -1035,12 +1091,14 @@ object Kernel {
       }
     }
 
-    sortOrder()
-    var live = order.count(subs(_).doc != NoMoreDocs)
+    // every cursor is live after the filter above
+    var live = order.length
 
     while (live > 0) {
       sortOrder()
-      live = order.count(subs(_).doc != NoMoreDocs)
+      // exhausted cursors sit on NoMoreDocs (Long.MaxValue) and sort last
+      live = order.length
+      while (live > 0 && subs(order(live - 1)).doc == NoMoreDocs) live -= 1
       if (live == 0) return heap.result()
       val threshold = heap.minScore
       // find pivot: smallest prefix of live cursors whose UB sum can beat threshold
@@ -1106,7 +1164,6 @@ object Kernel {
         // advance the first cursor below pivot up to pivotDoc
         subs(order(0)).advance(pivotDoc)
       }
-      live = order.count(subs(_).doc != NoMoreDocs)
     }
     heap.result()
   }

@@ -714,6 +714,12 @@ object Searcher {
     spark.createDataFrame(rows, scoredSchema(doubleMode))
   }
 
+  /** Rejects a top-k size below 1 on the driver, before any job
+    * (Lucene's `TopScoreDocCollector`: "numHits must be > 0").
+    */
+  private def checkK(k: Int): Unit =
+    if (k < 1) throw new IllegalArgumentException("k must be > 0")
+
   /** Global top-k as (docId, score): plan, ONE job running the
     * per-segment kernels, and a driver merge of their at most k rows per
     * segment in (score desc, docId asc) order — `IndexSearcher.search`
@@ -723,6 +729,7 @@ object Searcher {
     */
   def topKQ(index: Index, query0: Query, k: Int, doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
+    checkK(k)
     val spark = index.postings.sparkSession
     val pl = plan(index, query0, doubleMode, sim) match {
       case None => return localResult(spark, Array.empty, scoredSchema(doubleMode))
@@ -764,10 +771,16 @@ object Searcher {
     * query. Queries that cannot match (or whose scoring rewrite
     * overflows — TooManyClauses propagates like the single-query path)
     * contribute no rows.
+    *
+    * A task keeps one [[Kernel.BlockCache]] per segment: all its queries
+    * share the segment's decoded blocks (the hot terms of a batch recur
+    * in many queries), bounded by [[Kernel.BlockCache.MaxPostings]]
+    * postings and dropped after the segment.
     */
   def topKBatch(index: Index, queries: Seq[(String, Query)], k: Int,
       doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
+    checkK(k)
     val spark = index.postings.sparkSession
     // keep the first occurrence of each qid, like a map of named queries
     val planned: Seq[(String, Plan)] = queries.distinctBy(_._1).flatMap { case (qid, q0) =>
@@ -787,10 +800,11 @@ object Searcher {
       val hits = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
       segs.foreach { case (seg, byTerm) =>
         val del = live.deleted(seg)
+        val blocks = new Kernel.BlockCache()
         shipped.indices.foreach { i =>
           val (q, scorers) = shipped(i)
           hits(i) ++= SegmentKernel.run(q, byTerm, scorers, kk, floatMode = fm,
-            deletedOrds = del, seg = seg, cacheToken = ftok)
+            deletedOrds = del, seg = seg, cacheToken = ftok, blocks = blocks)
         }
       }
       hits.iterator.map(_.result()).zipWithIndex
@@ -1058,6 +1072,12 @@ object SegmentKernel {
     case _ => false
   }
 
+  /** Top-k of `q0` over one segment's term map, at most `k` hits in
+    * (score desc, docId asc) order. `blocks`, when given, is the
+    * segment's [[Kernel.BlockCache]]: the caller shares it across every
+    * query it runs over this same `byTerm`, so each position-less block
+    * is decoded once (bounded by [[Kernel.BlockCache.MaxPostings]]).
+    */
   def run(
       q0: Query,
       byTerm: Map[String, PostingList],
@@ -1066,14 +1086,15 @@ object SegmentKernel {
       floatMode: Boolean = false,
       deletedOrds: Array[Long] = null,
       seg: Int = -1,
-      cacheToken: String = null
+      cacheToken: String = null,
+      blocks: BlockCache = null
   ): Array[(Long, Double)] = {
     val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
     val cacheCtx = if (cacheToken != null && seg >= 0) s"$cacheToken|$seg|" else null
     val hasDeletes = deletedOrds != null && deletedOrds.nonEmpty
 
     def termCursor(t: String, needPos: Boolean): Option[TermCursor] =
-      byTerm.get(t).map(pl => new TermCursor(pl, scorers.term(t), needPos))
+      byTerm.get(t).map(pl => new TermCursor(pl, scorers.term(t), needPos, blocks))
 
     // physical strategy selection on the rewritten root; segments with
     // deletes route through the generic cursor path with the liveDocs wrap
@@ -1091,7 +1112,7 @@ object SegmentKernel {
           // rarest-first lead order (cost = segment-local df),
           // `ConjunctionDISI` cost ordering
           val sorted = ts.sortBy(t => byTerm(t).df)
-            .map(t => new TermCursor(byTerm(t), scorers.term(t))).toArray
+            .map(t => new TermCursor(byTerm(t), scorers.term(t), blocks = blocks)).toArray
           conjunctionTopK(sorted, k, floatMode)
         }
       case BoolQ(Nil, should, Nil, msm, Nil) if !hasDeletes && msm <= 1 && should.nonEmpty &&
@@ -1108,7 +1129,7 @@ object SegmentKernel {
         val cs = should.collect { case TermQ(t) => termCursor(t, needPos = false) }.flatten
         if (cs.isEmpty) Array.empty else taatTopK(cs.toArray, k, msm, floatMode)
       case other =>
-        buildCursor(other, byTerm, scorers, cacheCtx) match {
+        buildCursor(other, byTerm, scorers, cacheCtx, blocks) match {
           case Some(c) => collectAll(withLiveDocs(c, deletedOrds), k, floatMode)
           case None => Array.empty
         }
@@ -1193,9 +1214,10 @@ object SegmentKernel {
       q: Query,
       byTerm: Map[String, PostingList],
       scorers: Searcher.Scorers,
-      cacheCtx: String
+      cacheCtx: String,
+      blocks: BlockCache
   ): Option[DocCursor] = {
-    if (cacheCtx == null || hasDocSet(q)) return buildCursor(q, byTerm, scorers, cacheCtx)
+    if (cacheCtx == null || hasDocSet(q)) return buildCursor(q, byTerm, scorers, cacheCtx, blocks)
     // toString + structural hash: a false hit would need two distinct
     // query trees agreeing on BOTH (toString alone is ambiguous for
     // crafted terms containing ", " — unreachable via the analyzer, but
@@ -1205,8 +1227,8 @@ object SegmentKernel {
     if (hit != null) {
       if (hit.isEmpty) None else Some(new SortedDocsCursor(hit))
     } else if (FilterCache.sight(key) < 2) {
-      buildCursor(q, byTerm, scorers, cacheCtx)
-    } else buildCursor(q, byTerm, scorers, cacheCtx) match {
+      buildCursor(q, byTerm, scorers, cacheCtx, blocks)
+    } else buildCursor(q, byTerm, scorers, cacheCtx, blocks) match {
       case None =>
         FilterCache.put(key, Array.emptyLongArray)
         None
@@ -1222,13 +1244,14 @@ object SegmentKernel {
       q: Query,
       byTerm: Map[String, PostingList],
       scorers: Searcher.Scorers,
-      cacheCtx: String = null
+      cacheCtx: String = null,
+      blocks: BlockCache = null
   ): Option[DocCursor] = q match {
     case MatchNone | MatchAll => None // MatchAll only survives in pure-negation -> empty
     case TermQ(t) =>
-      byTerm.get(t).map(pl => new TermCursor(pl, scorers.term(t)))
+      byTerm.get(t).map(pl => new TermCursor(pl, scorers.term(t), blocks = blocks))
     case b @ BoostTermQ(t, _, _, _) =>
-      byTerm.get(t).map(pl => new TermCursor(pl, scorers.boosted(b)))
+      byTerm.get(t).map(pl => new TermCursor(pl, scorers.boosted(b), blocks = blocks))
     case PhraseQ(ts, slop) =>
       val cs = ts.map(t => byTerm.get(t).map(pl =>
         new TermCursor(pl, scorers.term(t), needPositions = true)))
@@ -1243,7 +1266,8 @@ object SegmentKernel {
       else Some(new IntervalCursor(ts.toArray, cs.flatten.toArray, src,
         scorers.interval(iq)))
     case SynonymQ(ts) =>
-      val cs = ts.flatMap(t => byTerm.get(t).map(pl => new TermCursor(pl, scorers.term(t))))
+      val cs = ts.flatMap(t => byTerm.get(t).map(pl =>
+        new TermCursor(pl, scorers.term(t), blocks = blocks)))
       if (cs.isEmpty) None
       else Some(new SynonymCursor(cs.toArray, scorers.synonym(ts)))
     case cf @ CombinedFieldQ(t, fields) =>
@@ -1252,13 +1276,13 @@ object SegmentKernel {
       val scorer = scorers.combined(cf)
       val subs = fields.flatMap { case (f, w) =>
         val term = if (f == "content") t else graft.build.IndexBuilder.fieldTerm(f, t)
-        byTerm.get(term).map(pl => (new TermCursor(pl, scorer), w))
+        byTerm.get(term).map(pl => (new TermCursor(pl, scorer, blocks = blocks), w))
       }
       if (subs.isEmpty) None
       else {
         val norms = fields.flatMap { case (f, w) =>
           byTerm.get(graft.build.IndexBuilder.normsTerm(f))
-            .map(pl => (new TermCursor(pl, scorer), w))
+            .map(pl => (new TermCursor(pl, scorer, blocks = blocks), w))
         }
         Some(new CombinedFieldCursor(subs.map(_._1).toArray, subs.map(_._2).toArray,
           norms.map(_._1).toArray, norms.map(_._2).toArray, scorer))
@@ -1306,23 +1330,23 @@ object SegmentKernel {
       if (ids.isEmpty) None
       else Some(new SortedDocsCursor(ids.toArray.sorted))
     case ConstScoreQ(inner, boost) =>
-      cachedNonScoring(inner, byTerm, scorers, cacheCtx)
+      cachedNonScoring(inner, byTerm, scorers, cacheCtx, blocks)
         .map(c => new ConstScoreCursor(c, boost.toDouble))
     case BoostQ(inner, boost) =>
-      buildCursor(inner, byTerm, scorers, cacheCtx).map(c => new BoostCursor(c, boost.toDouble))
+      buildCursor(inner, byTerm, scorers, cacheCtx, blocks).map(c => new BoostCursor(c, boost.toDouble))
     case DisMaxQ(cs, tb) =>
-      val sub = cs.flatMap(buildCursor(_, byTerm, scorers, cacheCtx))
+      val sub = cs.flatMap(buildCursor(_, byTerm, scorers, cacheCtx, blocks))
       if (sub.isEmpty) None
       else if (sub.size == 1) Some(sub.head)
       else Some(new DisMaxCursor(sub.toArray, tb))
     case BoolQ(must0, should, mustNot, msm, filter) =>
       val must = must0.filterNot(_ == MatchAll)
-      val mc = must.map(buildCursor(_, byTerm, scorers, cacheCtx))
+      val mc = must.map(buildCursor(_, byTerm, scorers, cacheCtx, blocks))
       if (mc.exists(_.isEmpty)) return None // a required clause can't match here
-      val fc = filter.map(cachedNonScoring(_, byTerm, scorers, cacheCtx))
+      val fc = filter.map(cachedNonScoring(_, byTerm, scorers, cacheCtx, blocks))
       if (fc.exists(_.isEmpty)) return None // a FILTER clause can't match here
-      val sc = should.flatMap(buildCursor(_, byTerm, scorers, cacheCtx))
-      val nc = mustNot.flatMap(cachedNonScoring(_, byTerm, scorers, cacheCtx))
+      val sc = should.flatMap(buildCursor(_, byTerm, scorers, cacheCtx, blocks))
+      val nc = mustNot.flatMap(cachedNonScoring(_, byTerm, scorers, cacheCtx, blocks))
 
       // FILTER clauses join the conjunction as non-scoring members
       // (`core/search/BooleanQuery.java:40`, Occur.FILTER)

@@ -5,8 +5,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: locate the phase that breaks build scaling.
   * usage: ScalingProbe <cpus> <nDocs> [segments]
+  * Every probe in this file deletes what it writes before it exits.
   */
 object ScalingProbe {
+  /** Delete a probe's output tree (a no-op if it is absent). */
+  private[tools] def delete(path: String): Unit =
+    new scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
+
   def main(args: Array[String]): Unit = {
     val cpus = args(0).toInt
     val n = args(1).toLong
@@ -34,17 +39,19 @@ object ScalingProbe {
         .map(_.seg).reduce(_ + _)
     }
     val dir = java.nio.file.Files.createTempDirectory(s"probe$cpus").toString
-    timed("invert+write-parquet") {
-      val docs = Datagen.toInputDocs(Datagen.corpus(spark, n), segs)
-      docs.groupByKey(_.seg).flatMapGroups((s, it) => IndexBuilder.buildSegment(s, it))
-        .write.partitionBy("kind", "seg").mode("overwrite").parquet(s"$dir/segments")
-    }
-    timed("metrics-readback") {
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$dir/segments").filter($"kind" === "p")
-        .select($"seg", octet_length($"payload").cast("long").as("bytes"))
-        .groupBy($"seg").agg(sum($"bytes")).collect()
-    }
+    try {
+      timed("invert+write-parquet") {
+        val docs = Datagen.toInputDocs(Datagen.corpus(spark, n), segs)
+        docs.groupByKey(_.seg).flatMapGroups((s, it) => IndexBuilder.buildSegment(s, it))
+          .write.partitionBy("kind", "seg").mode("overwrite").parquet(s"$dir/segments")
+      }
+      timed("metrics-readback") {
+        import org.apache.spark.sql.functions._
+        spark.read.parquet(s"$dir/segments").filter($"kind" === "p")
+          .select($"seg", octet_length($"payload").cast("long").as("bytes"))
+          .groupBy($"seg").agg(sum($"bytes")).collect()
+      }
+    } finally ScalingProbe.delete(dir)
     spark.stop()
   }
 }
@@ -68,9 +75,11 @@ object WriteProbe {
     val docs = graft.build.Datagen.toInputDocs(graft.build.Datagen.corpus(spark, n), 128)
     val built = docs.groupByKey(_.seg).flatMapGroups((s, it) => graft.build.IndexBuilder.buildSegment(s, it))
     val dir = java.nio.file.Files.createTempDirectory(s"wprobe$cpus").toString
-    timed("write-no-partitionBy")(built.write.mode("overwrite").parquet(s"$dir/a"))
-    timed("write-partitionBy")(built.write.partitionBy("kind","seg").mode("overwrite").parquet(s"$dir/b"))
-    timed("write-uncompressed")(built.write.option("compression","none").mode("overwrite").parquet(s"$dir/c"))
+    try {
+      timed("write-no-partitionBy")(built.write.mode("overwrite").parquet(s"$dir/a"))
+      timed("write-partitionBy")(built.write.partitionBy("kind","seg").mode("overwrite").parquet(s"$dir/b"))
+      timed("write-uncompressed")(built.write.option("compression","none").mode("overwrite").parquet(s"$dir/c"))
+    } finally ScalingProbe.delete(dir)
     timed("noop-count")(println(built.map(_.seg).reduce(_ + _)))
     spark.stop()
   }
@@ -93,26 +102,28 @@ object PLocalProbe {
       println(f"PPROBE $name cpus=$cpus: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     val dir = java.nio.file.Files.createTempDirectory(s"pprobe$cpus").toString
-    val source = graft.build.Datagen.corpus(spark, n, numPartitions = 128)
-    timed("invert-only") {
-      source.mapPartitions { it =>
-        val seg = org.apache.spark.TaskContext.getPartitionId()
-        graft.build.IndexBuilder.buildSegment(seg, it.map(r =>
-          graft.build.InputDoc(seg, "", r.repo, r.path, r.commit, r.lang, r.content)), preSorted = true)
-      }.map(_.seg).reduce(_ + _)
-    }
-    timed("invert+write") {
-      source.mapPartitions { it =>
-        val seg = org.apache.spark.TaskContext.getPartitionId()
-        graft.build.IndexBuilder.buildSegment(seg, it.map(r =>
-          graft.build.InputDoc(seg, "", r.repo, r.path, r.commit, r.lang, r.content)), preSorted = true)
-      }.write.partitionBy("seg").mode("overwrite").parquet(s"$dir/segments")
-    }
-    timed("stats-job") {
-      import org.apache.spark.sql.functions._
-      val posts = spark.read.parquet(s"$dir/segments").filter($"kind" === "p")
-      posts.groupBy($"term").agg(sum($"df"), sum($"ttf")).write.mode("overwrite").parquet(s"$dir/stats")
-    }
+    try {
+      val source = graft.build.Datagen.corpus(spark, n, numPartitions = 128)
+      timed("invert-only") {
+        source.mapPartitions { it =>
+          val seg = org.apache.spark.TaskContext.getPartitionId()
+          graft.build.IndexBuilder.buildSegment(seg, it.map(r =>
+            graft.build.InputDoc(seg, "", r.repo, r.path, r.commit, r.lang, r.content)), preSorted = true)
+        }.map(_.seg).reduce(_ + _)
+      }
+      timed("invert+write") {
+        source.mapPartitions { it =>
+          val seg = org.apache.spark.TaskContext.getPartitionId()
+          graft.build.IndexBuilder.buildSegment(seg, it.map(r =>
+            graft.build.InputDoc(seg, "", r.repo, r.path, r.commit, r.lang, r.content)), preSorted = true)
+        }.write.partitionBy("seg").mode("overwrite").parquet(s"$dir/segments")
+      }
+      timed("stats-job") {
+        import org.apache.spark.sql.functions._
+        val posts = spark.read.parquet(s"$dir/segments").filter($"kind" === "p")
+        posts.groupBy($"term").agg(sum($"df"), sum($"ttf")).write.mode("overwrite").parquet(s"$dir/stats")
+      }
+    } finally ScalingProbe.delete(dir)
     spark.stop()
   }
 }
@@ -139,11 +150,17 @@ object WriteOnlyProbe {
     }.persist()
     timed("materialize")(built.count())
     val dir = java.nio.file.Files.createTempDirectory(s"wo$cpus").toString
-    timed("write-partitionBy-seg")(built.write.partitionBy("seg").mode("overwrite").parquet(s"$dir/a"))
-    timed("write-plain")(built.write.mode("overwrite").parquet(s"$dir/b"))
-    timed("write-shm")(built.write.mode("overwrite").parquet(s"/dev/shm/wo$cpus"))
-    println("WOPROBE sizes: " + Seq(s"$dir/a", s"$dir/b").map(p =>
-      scala.reflect.io.Path(p).walkFilter(_.isFile).map(_.length).sum / 1e6).mkString(" MB, ") + " MB")
+    val shm = s"/dev/shm/wo$cpus"
+    try {
+      timed("write-partitionBy-seg")(built.write.partitionBy("seg").mode("overwrite").parquet(s"$dir/a"))
+      timed("write-plain")(built.write.mode("overwrite").parquet(s"$dir/b"))
+      timed("write-shm")(built.write.mode("overwrite").parquet(shm))
+      println("WOPROBE sizes: " + Seq(s"$dir/a", s"$dir/b").map(p =>
+        scala.reflect.io.Path(p).walkFilter(_.isFile).map(_.length).sum / 1e6).mkString(" MB, ") + " MB")
+    } finally {
+      ScalingProbe.delete(dir)
+      ScalingProbe.delete(shm)
+    }
     spark.stop()
   }
 }

@@ -110,6 +110,20 @@ class BatchTopKSpec extends SparkTest {
     }
   }
 
+  test("k < 1 is rejected on the driver by topK, topKQ and topKBatch before any job") {
+    val ix = serving
+    Searcher.topKQ(ix, TermQ("def"), 1) // open the reader outside the probe
+    val calls: Seq[(String, Int => Any)] = Seq(
+      "topK" -> (k => Searcher.topK(ix, "def OR class", k)),
+      "topKQ" -> (k => Searcher.topKQ(ix, PrefixQ("needle_"), k)),
+      "topKBatch" -> (k => Searcher.topKBatch(ix, Seq("a" -> TermQ("def"), "b" -> FuzzyQ("retrun", 1)), k)))
+    for ((name, call) <- calls; k <- Seq(0, -3)) {
+      val (e, trace) = JobProbe(spark)(intercept[IllegalArgumentException](call(k)))
+      assert(e.getMessage == "k must be > 0", s"$name k=$k")
+      assert(trace.jobs.isEmpty, s"$name k=$k started ${trace.jobs.size} job(s)")
+    }
+  }
+
   test("empty and non-empty topKBatch results share one schema in both modes") {
     Seq(false, true).foreach { dm =>
       val want = StructType(Seq(

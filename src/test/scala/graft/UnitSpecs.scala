@@ -256,6 +256,34 @@ class BM25Spec extends AnyFunSuite {
     val s2 = sc.score(5, SmallFloat.intToByte4(1000))
     assert(s1 > s2)
   }
+  test("scorers on the field's shared norm table score bit-identically to own-table scorers") {
+    val fs = FieldStats(1234, 98765)
+    // scorer-private tables computed with the same expressions
+    val avgdl = fs.avgdl
+    val ownF = new Array[Float](256)
+    val avgdlD = fs.avgdlDouble
+    val ownD = new Array[Double](256)
+    (0 until 256).foreach { i =>
+      ownF(i) = 1f / (1.2f * ((1 - 0.75f) + 0.75f * SmallFloat.LengthTable(i) / avgdl))
+      ownD(i) = 1d / (1.2d * (0.25d + 0.75d * SmallFloat.byte4ToInt(i.toByte) / avgdlD))
+    }
+    assert(BM25.cacheF(fs) eq BM25.cacheF(FieldStats(1234, 98765)))
+    assert(BM25.cacheD(fs) eq BM25.cacheD(FieldStats(1234, 98765)))
+    Seq(1L, 17L, 1234L).foreach { df =>
+      val stats = TermStats("t", df, 0L)
+      val f = BM25.termScorer(stats, fs, 1.5f)
+      val fOwn = new BM25.TermScorer(1.5f * BM25.idf(df, fs.docCount), ownF)
+      val d = BM25.termScorerD(stats, fs, 1.5d)
+      val dOwn = new BM25.TermScorerD(1.5d * BM25.idfDouble(df, fs.docCount), ownD)
+      for (freq <- 1 to 40; n <- 0 until 256) {
+        val norm = n.toByte
+        assert(java.lang.Float.floatToRawIntBits(f.score(freq, norm)) ==
+          java.lang.Float.floatToRawIntBits(fOwn.score(freq, norm)), s"float df=$df freq=$freq norm=$n")
+        assert(java.lang.Double.doubleToRawLongBits(d.score(freq, norm)) ==
+          java.lang.Double.doubleToRawLongBits(dOwn.score(freq, norm)), s"double df=$df freq=$freq norm=$n")
+      }
+    }
+  }
 }
 
 class QueryParserSpec extends AnyFunSuite {
@@ -533,18 +561,26 @@ class DisjunctionKernelSpec extends AnyFunSuite {
 
   /** Random postings for `numTerms(rnd)` terms named t0, t1, ... and a
     * brute-force (docId, float-cast score) list of the docs at least
-    * `msm` of them match.
+    * `msm` of them match. `skewed`: one random third of the docId range
+    * holds docs a tenth as long, with freqs up to 40 instead of 12, so
+    * block bounds differ widely from block to block and a wrong block
+    * bound shows as a wrong top-k.
     */
-  private final class Postings(seed: Int, numTerms: scala.util.Random => Int) {
+  private final class Postings(seed: Int, numTerms: scala.util.Random => Int,
+      skewed: Boolean = false) {
     private val rnd = new scala.util.Random(seed)
     private val n = numTerms(rnd)
-    private val lens = Array.fill(numDocs)(5 + rnd.nextInt(400))
+    private val hot = if (skewed) rnd.nextInt(3) else -1
+    private val lens = Array.tabulate(numDocs) { id =>
+      val len = 5 + rnd.nextInt(400)
+      if (id / 500 == hot) 1 + len / 10 else len
+    }
     private val norms = lens.map(SmallFloat.intToByte4)
     private val fs = FieldStats(numDocs.toLong, lens.map(_.toLong).sum)
     private val terms = (0 until n).map { _ =>
       val density = 0.02 + rnd.nextDouble() * 0.4
       val ids = (0 until numDocs).filter(_ => rnd.nextDouble() < density)
-      val freqs = ids.map(_ => 1 + rnd.nextInt(12))
+      val freqs = ids.map(id => 1 + rnd.nextInt(if (id / 500 == hot) 40 else 12))
       (ids.toArray.map(_.toLong), freqs.toArray)
     }
     val names: IndexedSeq[String] = terms.indices.map(t => s"t$t")
@@ -579,6 +615,92 @@ class DisjunctionKernelSpec extends AnyFunSuite {
 
   private def topOf(hits: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] =
     hits.sortBy { case (d, s) => (-s, d) }.take(k)
+
+  test("conjunction == brute force over random and block-skewed postings (20 seeds)") {
+    for (seed <- 1 to 20; skewed <- Seq(false, true)) {
+      val p = new Postings(seed * 7919, rnd => 2 + rnd.nextInt(3), skewed)
+      val exp = p.brute(p.names.size) // every term must match
+      Seq(3, 10, 64).foreach { k =>
+        // rarest lead, as SegmentKernel.run orders them
+        val cs = p.cursors()
+        val byCost = p.names.indices.sortBy(t => p.byTerm(p.names(t)).df).map(cs).toArray
+        val conj = Kernel.conjunctionTopK(byCost, k, floatMode = true)
+        assert(conj.toSeq == topOf(exp, k), s"conjunction k=$k seed=$seed skewed=$skewed terms=${p.names.size}")
+      }
+    }
+  }
+
+  test("term == brute force over random and block-skewed postings (20 seeds)") {
+    for (seed <- 1 to 20; skewed <- Seq(false, true)) {
+      val p = new Postings(seed * 7919, _ => 1, skewed)
+      Seq(3, 10, 64).foreach { k =>
+        val term = Kernel.termTopK(p.cursors()(0), k, floatMode = true)
+        assert(term.toSeq == topOf(p.brute(1), k), s"term k=$k seed=$seed skewed=$skewed")
+      }
+    }
+  }
+
+  test("wand == brute force over block-skewed postings (20 seeds)") {
+    (1 to 20).foreach { seed =>
+      val p = new Postings(seed * 7919, rnd => 2 + rnd.nextInt(8), skewed = true)
+      Seq(3, 10, 64).foreach { k =>
+        val wand = Kernel.wandTopK(p.cursors(), k, floatMode = true)
+        assert(wand.toSeq == topOf(p.brute(1), k), s"wand k=$k seed=$seed")
+      }
+    }
+  }
+
+  /** A random term-only BoolQ over `names`: a single term, a conjunction,
+    * a disjunction, or either one with a required or excluded clause.
+    */
+  private def randomTermQuery(rnd: scala.util.Random, names: IndexedSeq[String]): Query = {
+    def some(n: Int): Seq[Query] = rnd.shuffle(names).take(n).map(TermQ(_))
+    val n = names.size
+    rnd.nextInt(5) match {
+      case 0 => some(1).head
+      case 1 => BoolQ(must = some(1 + rnd.nextInt(n)))
+      case 2 => BoolQ(should = some(1 + rnd.nextInt(n)), minShouldMatch = rnd.nextInt(2))
+      case 3 => BoolQ(must = some(1), should = some(1 + rnd.nextInt(n)))
+      case _ => BoolQ(should = some(1 + rnd.nextInt(n)), mustNot = some(1), minShouldMatch = 1)
+    }
+  }
+
+  test("one BlockCache shared by 40 random term queries == runs without a cache") {
+    (1 to 5).foreach { seed =>
+      val p = new Postings(seed * 104729, rnd => 3 + rnd.nextInt(6))
+      val rnd = new scala.util.Random(seed)
+      val blocks = new Kernel.BlockCache()
+      (1 to 40).foreach { i =>
+        val q = randomTermQuery(rnd, p.names)
+        val k = Seq(3, 10, 64)(i % 3)
+        val plain = SegmentKernel.run(q, p.byTerm, p.scorerMap, k, floatMode = true)
+        val cached = SegmentKernel.run(q, p.byTerm, p.scorerMap, k, floatMode = true, blocks = blocks)
+        assert(cached.toSeq == plain.toSeq, s"seed=$seed query $i: $q")
+      }
+      assert(blocks.size > 0, s"seed=$seed: nothing was cached")
+    }
+  }
+
+  test("a BlockCache past its bound decodes directly and gives the same results") {
+    val p = new Postings(31337, _ => 8)
+    val rnd = new scala.util.Random(5)
+    val queries = Seq.fill(40)(randomTermQuery(rnd, p.names))
+    // 200 postings: the cache stops inserting after its second block
+    val tiny = new Kernel.BlockCache(200)
+    queries.zipWithIndex.foreach { case (q, i) =>
+      val plain = SegmentKernel.run(q, p.byTerm, p.scorerMap, 10, floatMode = true)
+      val cached = SegmentKernel.run(q, p.byTerm, p.scorerMap, 10, floatMode = true, blocks = tiny)
+      assert(cached.toSeq == plain.toSeq, s"query $i: $q")
+    }
+    assert(tiny.size > 0 && tiny.size <= 200 + 128, s"cached ${tiny.size} postings")
+  }
+
+  test("a top-k heap rejects k < 1") {
+    Seq(0, -1).foreach { k =>
+      val e = intercept[IllegalArgumentException](new Kernel.HitHeap(k))
+      assert(e.getMessage.contains("k must be > 0"))
+    }
+  }
 
   test("wand == brute force over random postings (20 seeds)") {
     (1 to 20).foreach { seed =>
