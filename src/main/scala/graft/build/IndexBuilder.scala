@@ -4,9 +4,11 @@ import graft.analysis.{CodeAnalyzer, Uax29}
 import graft.codec.PostingCodec
 import graft.model._
 import graft.util.SmallFloat
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import scala.collection.mutable
 
@@ -73,7 +75,8 @@ final class Index(
     val live: LiveDocs = NoDeletes,
     /** Evaluated LAZILY on first use (see [[segAligned]]) so open paths
       * that never run a per-segment query (CheckIndex, delete, stats
-      * tooling) skip the alignment probe's job entirely.
+      * tooling) skip the alignment probe's job entirely — unless the open
+      * itself resolved deletes, which needs (and keeps) the answer.
       */
     segAlignedInit: () => Boolean = () => false,
     /** Resident reader of a serving open: one persisted
@@ -705,12 +708,30 @@ object IndexBuilder {
       manifestRoot: String = null): DataFrame =
     rawFor(spark, dir, listManifests(if (manifestRoot == null) dir else manifestRoot))
 
-  private def rawFor(spark: SparkSession, dir: String,
+  /** Fixed read schemas of the index's own parquet directories. Spark
+    * infers a parquet schema with a job that reads a footer; these
+    * directories are written only by this code, so their schemas are
+    * known and reads skip that job. `DeleteResolveSpec` checks each
+    * against the inferred schema of a fresh build.
+    */
+  private[graft] val SegmentSchema: StructType = Encoders.product[BuildRow].schema
+  private[graft] val TombstoneSchema: StructType =
+    StructType(Seq("repo", "path", "commit").map(StructField(_, StringType)))
+  private[graft] val TermStatsSchema: StructType = Encoders.product[TermStats].schema
+
+  /** One segment generation directory (both row kinds). */
+  private[build] def readSegments(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(SegmentSchema).parquet(path)
+
+  /** The rows of `manifests`' segments, each read from the generation its
+    * manifest selects — the one segment reader of opens, stats and merges.
+    */
+  private[build] def rawFor(spark: SparkSession, dir: String,
       manifests: Seq[SegmentManifest]): DataFrame = {
     import spark.implicits._
     val byGen = manifests.groupBy(_.dataDir)
     byGen.map { case (gen, ms) =>
-      spark.read.parquet(s"$dir/segments/$gen")
+      readSegments(spark, s"$dir/segments/$gen")
         .filter($"seg".isin(ms.map(_.seg): _*))
     }.reduce(_ unionByName _)
   }
@@ -770,29 +791,36 @@ object IndexBuilder {
     * parquet; duplicates are harmless (set semantics), so retried batches
     * are idempotent. Deleted docs stay in the segment files (liveDocs
     * model, `Lucene90LiveDocsFormat.java:49`) until a merge rewrites them
-    * out; readers exclude them via [[Index.liveFilter]].
+    * out; readers exclude them via the resolved [[LiveDocs]] view. Keys
+    * are written as strings whatever their column types, so the fixed
+    * tombstone schema reads every batch.
     */
   def deleteDocs(spark: SparkSession, dir: String, keys: DataFrame): Unit = {
-    keys.select("repo", "path", "commit")
+    keys.select(Seq("repo", "path", "commit").map(c => col(c).cast(StringType).as(c)): _*)
       .write.mode("append").parquet(tombstoneDir(dir))
   }
 
-  private[build] def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    if (!IndexFs.listNames(tombstoneDir(dir)).exists(_.endsWith(".parquet"))) None
-    else Some(spark.read.parquet(tombstoneDir(dir)).distinct())
-  }
+  /** The tombstone parquet files on disk, listed once per open or merge. */
+  private[build] def tombstoneFiles(dir: String): Seq[FileStatus] =
+    IndexFs.list(tombstoneDir(dir)).filter(_.getPath.getName.endsWith(".parquet"))
+
+  /** The tombstone set as a DataFrame, None when `files` is empty. It is
+    * read with the fixed schema and without `distinct()`: it only feeds
+    * semi-joins in [[LiveDocs.resolve]], where duplicate keys change
+    * nothing.
+    */
+  private[build] def readTombstones(spark: SparkSession, dir: String,
+      files: Seq[FileStatus]): Option[DataFrame] =
+    if (files.isEmpty) None
+    else Some(spark.read.schema(TombstoneSchema).parquet(tombstoneDir(dir)))
 
   /** Fingerprint of the on-disk tombstone file set (names + sizes) —
     * with the live manifest set it keys the resolved livedocs sidecars:
     * either changing forces one distributed re-resolution, otherwise
     * opens reuse the cached sidecars with no job at all.
     */
-  private[build] def tombstoneSetKey(dir: String): String = {
-    val files = IndexFs.list(tombstoneDir(dir))
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => s"${st.getPath.getName}:${st.getLen}").sorted
-    sha256Hex(files.mkString("|")).take(16)
-  }
+  private[build] def tombstoneSetKey(files: Seq[FileStatus]): String =
+    sha256Hex(files.map(st => s"${st.getPath.getName}:${st.getLen}").sorted.mkString("|")).take(16)
 
   // ---------- commit-point snapshots ----------
   // The IndexDeletionPolicy / SnapshotDeletionPolicy analogue
@@ -931,7 +959,7 @@ object IndexBuilder {
       .flatMap(id => readSnapshotMeta(dir, id)._2).toSet
     val old = IndexFs.listNames(tdir).filter(_.endsWith(".parquet")).filterNot(pinned)
     if (old.isEmpty || listManifests(dir).isEmpty) return
-    val tombs = spark.read.parquet(old.map(n => s"$tdir/$n"): _*).distinct()
+    val tombs = spark.read.schema(TombstoneSchema).parquet(old.map(n => s"$tdir/$n"): _*).distinct()
     val liveKeys = openRaw(spark, dir).filter(org.apache.spark.sql.functions.col("kind") === "m")
       .select("repo", "path", "commit")
     val survivors = tombs.join(liveKeys, Seq("repo", "path", "commit"), "left_semi")
@@ -967,18 +995,21 @@ object IndexBuilder {
   /** One cheap columnar probe: does the parquet read's AMBIENT
     * partitioning already co-locate every segment? Build tasks emit whole
     * segments into their output files, so it almost always does — the
-    * only breaker is a file large enough to be split across read
-    * partitions (row-group splits). The probe scans ONLY the `seg`
-    * column (one narrow job, no shuffle, tiny collect of (seg,
-    * partition) pairs); a later filtered query scan re-plans the SAME
-    * file splits (splits derive from the cached file listing, not from
-    * pushed filters), so a positive probe holds for every query against
-    * this Index snapshot.
+    * only breakers are a file large enough to be split across read
+    * partitions (row-group splits) and a segment written as several
+    * files. The probe scans ONLY the raw `seg` column of BOTH row kinds
+    * (one narrow job, no shuffle, tiny collect of (seg, partition)
+    * pairs), so a positive answer covers the doc-meta rows as well as
+    * the postings; a later filtered scan re-plans the SAME file splits
+    * (splits derive from the cached file listing, not from pushed
+    * filters), so a positive probe holds for every query against this
+    * Index snapshot and for the scan-local delete resolution of
+    * [[LiveDocs.resolve]].
     */
-  private def segAlignmentProbe(postings: Dataset[PostingList]): Boolean = {
-    val spark = postings.sparkSession
+  private def segAlignmentProbe(raw: DataFrame): Boolean = {
+    val spark = raw.sparkSession
     import spark.implicits._
-    val pairs = postings.select($"seg").as[Int].mapPartitions { it =>
+    val pairs = raw.select($"seg").as[Int].mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else {
         val pid = org.apache.spark.TaskContext.getPartitionId()
@@ -993,11 +1024,21 @@ object IndexBuilder {
   /** Open a persistent index. `docmeta` excludes tombstoned docs;
     * `live` carries their sidecar view for kernel-side exclusion.
     *
+    * Deletes resolve ONCE per (tombstone file set, manifest set) scope:
+    * [[LiveDocs.resolve]] writes the per-segment sidecars (or finds them
+    * already written), and `docmeta` is the raw doc-meta rows filtered by
+    * a Column predicate on `docId` against those sidecars
+    * ([[LiveDocs.isDeleted]]) — no second join against the tombstones,
+    * and the deleted ids never pass through the driver.
+    *
     * Seg alignment: a plain open PROBES the read's ambient partitioning
     * (one narrow seg-column job) and, when each segment is already
     * co-located in one read partition — the build write layout
     * guarantees it unless a file got split — every query runs the
-    * no-shuffle seg-aligned path with NO up-front repartition.
+    * no-shuffle seg-aligned path with NO up-front repartition. The probe
+    * runs inside the open when the delete view must be resolved (its
+    * answer selects the scan-local or the shuffle resolution), otherwise
+    * on first use; either way the Index keeps the answer.
     *
     * `serving = true` opens a long-lived reader: [[Index.reader]] holds
     * one persisted term map per segment (grouped partition-locally when
@@ -1019,10 +1060,11 @@ object IndexBuilder {
       .select($"seg", $"term", $"df", $"ttf", $"counts", $"baseDocIds",
         $"maxDocIds", $"maxFreqs", $"minNorms", $"offsets", $"payload")
       .as[PostingList]
-    // serving opens probe EAGERLY (the reader's grouping needs it);
-    // plain opens defer the probe to the Index's lazy segAligned, so
-    // one-shot tooling (CheckIndex, stats) never pays the job
-    lazy val aligned = segAlignmentProbe(postings)
+    // serving opens and delete resolutions probe EAGERLY (the reader's
+    // grouping and the resolution path need it); otherwise the probe
+    // waits for the Index's lazy segAligned, so one-shot tooling
+    // (CheckIndex, stats) never pays the job
+    lazy val aligned = segAlignmentProbe(seg)
     val reader =
       if (!serving) None
       else Some(graft.exec.Searcher.bySegment(postings.rdd, aligned,
@@ -1036,26 +1078,30 @@ object IndexBuilder {
     // opens see EXACTLY the tombstone files recorded at commit time
     // (point-in-time contract), resolved under the snapshot's pinned
     // scope (excluded from livedocs GC while the snapshot is retained)
-    val (scopeKey, tombsOpt) = snapshot match {
+    val (scopeKey, tombsOpt, tombBytes) = snapshot match {
       case None =>
-        (sha256Hex("open:" + tombstoneSetKey(dir) + ":" + manifestSetHash(dir)).take(16),
-          readTombstones(spark, dir))
+        val files = tombstoneFiles(dir)
+        (sha256Hex("open:" + tombstoneSetKey(files) + ":" + manifestSetHash(dir)).take(16),
+          readTombstones(spark, dir, files), files.map(_.getLen).sum)
       case Some(id) =>
         val (scope, tombNames) = readSnapshotMeta(dir, id)
+        val pinned = tombNames.toSet
         (scope,
           if (tombNames.isEmpty) None
-          else Some(spark.read.parquet(
-            tombNames.map(n => s"${tombstoneDir(dir)}/$n"): _*).distinct()))
+          else Some(spark.read.schema(TombstoneSchema).parquet(
+            tombNames.map(n => s"${tombstoneDir(dir)}/$n"): _*)),
+          tombstoneFiles(dir).filter(st => pinned(st.getPath.getName)).map(_.getLen).sum)
     }
     val (docmeta, live) = tombsOpt match {
       case None => (docmeta0, NoDeletes: LiveDocs)
       case Some(tombs) =>
         // executor-side delete application: tombstones resolve to
-        // per-segment sidecar files read lazily by kernels/merges —
-        // the deleted ids NEVER pass through the driver (liveDocs model)
-        val ld = LiveDocs.resolve(spark, dir, scopeKey, docmeta0.toDF(), tombs)
+        // per-segment sidecar files read lazily by kernels/merges and by
+        // the docmeta filter — the deleted ids NEVER pass through the
+        // driver (liveDocs model)
+        val ld = LiveDocs.resolve(spark, dir, scopeKey, docmeta0.toDF(), tombs, tombBytes, aligned)
         if (ld.isEmpty) (docmeta0, ld)
-        else (docmeta0.join(tombs, Seq("repo", "path", "commit"), "left_anti").as[DocMeta], ld)
+        else (docmeta0.filter(!LiveDocs.isDeleted(ld, $"docId")), ld)
     }
     // stats: live opens read the maintained stats tables; snapshot opens
     // recompute from the pinned segment rows (same partial->final agg
@@ -1067,7 +1113,7 @@ object IndexBuilder {
         def num(k: String): Long =
           ("\"" + k + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(fsJson)
             .map(_.group(1).toLong).getOrElse(0L)
-        (spark.read.parquet(s"$dir/stats/terms").as[TermStats],
+        (spark.read.schema(TermStatsSchema).parquet(s"$dir/stats/terms").as[TermStats],
           FieldStats(num("docCount"), num("sumTotalTermFreq")))
       case Some(_) =>
         val ts = seg.filter($"kind" === "p")

@@ -36,14 +36,13 @@ object IndexMerger {
       deleted: LiveDocs,
       newSeg: Int
   ) extends Serializable {
-    def isDeleted(docId: Long): Boolean = {
-      val arr = deleted.deleted(IndexBuilder.segOf(docId))
-      arr != null && java.util.Arrays.binarySearch(arr, docId) >= 0
-    }
+    private val dels = new SegmentDeletes(deleted)
+
+    def isDeleted(docId: Long): Boolean = dels(docId)
 
     def remap(docId: Long): Long = {
       val seg = IndexBuilder.segOf(docId)
-      val arr = deleted.deleted(seg)
+      val arr = dels.of(seg)
       val below =
         if (arr == null) 0
         else {
@@ -261,24 +260,23 @@ object IndexMerger {
     val manifests = IndexBuilder.listManifests(dir).filter(m => segs.contains(m.seg))
     require(manifests.map(_.seg).toSet == segs.toSet, s"missing manifests for $segs")
 
-    val raw = manifests.groupBy(_.dataDir).map { case (gen, ms) =>
-      spark.read.parquet(s"$dir/segments/$gen").filter($"seg".isin(ms.map(_.seg): _*))
-    }.reduce(_ unionByName _)
+    val raw = IndexBuilder.rawFor(spark, dir, manifests)
 
     val metas0 = raw.filter($"kind" === "m")
-    val tombs = IndexBuilder.readTombstones(spark, dir)
-    val (metas, deleted) = tombs match {
+    val tombFiles = IndexBuilder.tombstoneFiles(dir)
+    val (metas, deleted) = IndexBuilder.readTombstones(spark, dir, tombFiles) match {
       case None => (metas0, NoDeletes: LiveDocs)
       case Some(t) =>
         // executor-side delete application, scoped to this merge group:
-        // sidecars are written by a distributed job and read lazily by
-        // the merge tasks — no driver collect of deleted ids
+        // sidecars are written by a distributed job (shuffle path) and
+        // read lazily by the merge tasks — no driver collect of deleted ids
         val scope = IndexBuilder.sha256Hex("merge:" +
-          IndexBuilder.tombstoneSetKey(dir) + ":" +
+          IndexBuilder.tombstoneSetKey(tombFiles) + ":" +
           manifests.map(m => s"${m.seg}:${m.inputFingerprint}:${m.dataDir}")
             .sorted.mkString("|")).take(16)
-        val del = LiveDocs.resolve(spark, dir, scope, metas0, t)
-        (metas0.join(t, Seq("repo", "path", "commit"), "left_anti"), del)
+        val del = LiveDocs.resolve(spark, dir, scope, metas0, t,
+          tombBytes = tombFiles.map(_.getLen).sum, aligned = false)
+        (if (del.isEmpty) metas0 else metas0.filter(!LiveDocs.isDeleted(del, $"docId")), del)
     }
 
     val newSeg = MergedSegBase + math.max(-1,
@@ -310,7 +308,7 @@ object IndexMerger {
     metaRows.unionByName(postRows).write.mode("overwrite").parquet(s"$dir/segments/$gen")
 
     // read-back metrics for the merged segment (one tiny agg job)
-    val written = spark.read.parquet(s"$dir/segments/$gen")
+    val written = IndexBuilder.readSegments(spark, s"$dir/segments/$gen")
     val docs = written.filter($"kind" === "m").count()
     val (posts, bytes) = written.filter($"kind" === "p")
       .agg(coalesce(sum($"df".cast("long")), lit(0L)),

@@ -1,7 +1,7 @@
 package graft.build
 
-import graft.model.DocMeta
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-segment deleted-docId view — the liveDocs analogue
@@ -86,17 +86,24 @@ object FileLiveDocs {
 
 object LiveDocs {
 
+  /** Hadoop configuration of executor-side sidecar IO, built once per
+    * JVM: a `new Configuration()` parses Hadoop's default resources, which
+    * costs more than reading a sidecar. It carries the classpath defaults
+    * only, not the session's `spark.hadoop.*` settings; driver-side IO
+    * (the livedocs manifest, [[gc]]) goes through [[IndexFs]], which
+    * honours them.
+    */
+  private lazy val executorConf = new org.apache.hadoop.conf.Configuration()
+
   /** Sidecar IO goes through the Hadoop FileSystem API (like Spark's own
     * file sinks), so executor-side reads/writes work unchanged whether
-    * the index dir is local, HDFS, or an object store — the sandbox uses
-    * the default local FS.
+    * the index dir is local, HDFS, or an object store.
     */
-  private def fsOf(path: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+  private def executorFs(path: Path): FileSystem = path.getFileSystem(executorConf)
 
   private[build] def readSidecar(path: String): Array[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fsOf(p).open(p)))
+    val p = new Path(path)
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(executorFs(p).open(p)))
     try {
       val n = in.readInt()
       val arr = new Array[Long](n)
@@ -106,24 +113,31 @@ object LiveDocs {
     } finally in.close()
   }
 
-  private def writeSidecar(path: String, ids: Array[Long], n: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    // ATTEMPT-UNIQUE tmp name: task retries/speculation (and two sessions
-    // racing on the same unresolved scope) must never interleave writes
-    // into one tmp file. Attempts compute identical content from the same
-    // deterministic partition, so whichever complete file wins the final
-    // rename is correct.
-    val attempt = Option(org.apache.spark.TaskContext.get())
-      .map(_.taskAttemptId().toString)
-      .getOrElse(java.util.UUID.randomUUID().toString)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp-" + attempt)
-    val fs = fsOf(p)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(fs.create(tmp, true)))
-    try {
+  private def writeSidecar(path: String, ids: Array[Long], n: Int): Unit =
+    writeOnce(executorFs(new Path(path)), path) { out =>
       out.writeInt(n)
       var i = 0
       while (i < n) { out.writeLong(ids(i)); i += 1 }
-    } finally out.close()
+    }
+
+  /** Write a file of a resolved scope (a sidecar or the livedocs manifest)
+    * through a tmp file and a `FileSystem.rename`, so no reader sees a
+    * partial file. The tmp name is ATTEMPT-UNIQUE: task retries and
+    * speculation (and two sessions racing on the same unresolved scope)
+    * must never interleave writes into one tmp file. Attempts compute
+    * identical content from the same deterministic input, so whichever
+    * complete file wins the final rename is correct. (Not
+    * [[IndexFs.writeString]]: its `FileContext` rename forks a process per
+    * call on the local file system.)
+    */
+  private def writeOnce(fs: FileSystem, path: String)(write: java.io.DataOutputStream => Unit): Unit = {
+    val p = new Path(path)
+    val attempt = Option(org.apache.spark.TaskContext.get())
+      .map(_.taskAttemptId().toString)
+      .getOrElse(java.util.UUID.randomUUID().toString)
+    val tmp = new Path(path + ".tmp-" + attempt)
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(fs.create(tmp, true)))
+    try write(out) finally out.close()
     fs.delete(p, false)
     if (!fs.rename(tmp, p)) {
       // a concurrent identical attempt won the rename — accept its file
@@ -155,8 +169,8 @@ object LiveDocs {
     */
   def gc(dir: String, graceMs: Long = gcGraceMs,
       retain: Set[String] = Set.empty): Unit = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/livedocs")
-    val fs = fsOf(root)
+    val root = new Path(s"$dir/livedocs")
+    val fs = IndexFs.fsOf(root)
     if (!fs.exists(root)) return
     val cutoff = System.currentTimeMillis() - graceMs
     fs.listStatus(root).foreach { st =>
@@ -167,31 +181,57 @@ object LiveDocs {
     }
   }
 
-  /** Resolve the current tombstone set against `docmeta` into per-segment
-    * sidecar files under `dir/livedocs/<scopeKey>/`, DISTRIBUTED: the
-    * semi-join and the sidecar writes run executor-side (each reducer
-    * owns whole segments via the `seg` repartition and writes their
-    * sorted files directly to shared storage); the driver receives one
-    * (seg, count) row per segment with deletes — the manifest — and
-    * commits it last (write-once + manifest selection, like segment
-    * generations). Re-resolution happens only when `scopeKey` changes
-    * (tombstone set or live segment set changed); otherwise the cached
-    * manifest is read back with NO job at all.
+  /** Column predicate: true when `docId` is deleted in `live`. The
+    * segment arrays are read executor-side (see [[SegmentDeletes]]), so
+    * the deleted ids never reach the driver; as a Column filter it keeps
+    * downstream column pruning.
+    */
+  def isDeleted(live: LiveDocs, docId: Column): Column =
+    udf[Boolean, Long](new SegmentDeletes(live)).apply(docId)
+
+  /** Spark's own broadcast-join size limit in bytes; <= 0 turns
+    * broadcasts off.
+    */
+  private def broadcastLimit(spark: SparkSession): Long = {
+    val s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    if (s.startsWith("-")) -1L else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+  }
+
+  /** Resolve the tombstone set `tombs` against `docmeta` into per-segment
+    * sidecar files under `dir/livedocs/<scopeKey>/`, once per scope: the
+    * driver receives one (seg, count) row per segment with deletes — the
+    * manifest — and commits it last (write-once + manifest selection,
+    * like segment generations). While `scopeKey` is unchanged (same
+    * tombstone files, same live segment set) the committed manifest is
+    * read back with NO job at all. Resolution runs executor-side on one
+    * of two paths:
+    *  - scan-local: when the tombstone files' `tombBytes` fit Spark's
+    *    `spark.sql.autoBroadcastJoinThreshold` (> 0) and `aligned` says
+    *    every segment's rows share one scan partition, a broadcast
+    *    semi-join of the tombstones feeds a partition-local sort, and
+    *    each scan task writes the sidecars of its own segments — a
+    *    broadcast job and a scan job, no shuffle;
+    *  - shuffle: otherwise the semi-joined ids are repartitioned on `seg`
+    *    so each reducer owns whole segments, then sorted and written the
+    *    same way. This is the only correct path on unaligned input.
+    * `aligned` is evaluated only after the size check passes, and only
+    * when the scope is not resolved yet.
     */
   def resolve(spark: SparkSession, dir: String, scopeKey: String,
-      docmeta: DataFrame, tombs: DataFrame): LiveDocs = {
+      docmeta: DataFrame, tombs: DataFrame, tombBytes: Long, aligned: => Boolean): LiveDocs = {
     import spark.implicits._
     val ldDir = s"$dir/livedocs/$scopeKey"
-    val manifestP = new org.apache.hadoop.fs.Path(s"$ldDir/_manifest.json")
-    val mfs = fsOf(manifestP)
-    if (!mfs.exists(manifestP)) {
-      mfs.mkdirs(new org.apache.hadoop.fs.Path(ldDir))
-      val out = ldDir
-      val counts: Seq[(Int, Long)] = docmeta
-        .join(tombs, Seq("repo", "path", "commit"), "left_semi")
+    val manifestPath = s"$ldDir/_manifest.json"
+    if (!IndexFs.exists(manifestPath)) {
+      val limit = broadcastLimit(spark)
+      val scanLocal = limit > 0 && tombBytes <= limit && aligned
+      val deletedIds = docmeta
+        .join(if (scanLocal) broadcast(tombs) else tombs, Seq("repo", "path", "commit"), "left_semi")
         .select($"docId",
           shiftright($"docId", IndexBuilder.SegShift).cast("int").as("seg"))
-        .repartition(col("seg"))
+      val out = ldDir
+      val counts: Seq[(Int, Long)] =
+        (if (scanLocal) deletedIds else deletedIds.repartition(col("seg")))
         .sortWithinPartitions($"seg", $"docId")
         .as[(Long, Int)]
         .mapPartitions { it =>
@@ -216,21 +256,36 @@ object LiveDocs {
           res.iterator
         }
         .collect().toSeq
-      val json = counts.sortBy(_._1)
-        .map { case (s, c) => s""""$s":$c""" }.mkString("{", ",", "}")
-      val mo = mfs.create(manifestP, true)
-      try mo.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally mo.close()
-    }
-    val manifestJson = {
-      val in = mfs.open(manifestP)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
+      val json = counts.sortBy(_._1).map { case (s, c) => s""""$s":$c""" }.mkString("{", ",", "}")
+      writeOnce(IndexFs.fsOf(new Path(manifestPath)), manifestPath)(
+        _.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     }
     val segs: Map[Int, Long] =
       "\"(-?\\d+)\"\\s*:\\s*(\\d+)".r
-        .findAllMatchIn(manifestJson)
+        .findAllMatchIn(IndexFs.readString(manifestPath))
         .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
     if (segs.isEmpty) NoDeletes else new FileLiveDocs(ldDir, segs)
+  }
+}
+
+/** Per-task reader of a [[LiveDocs]] view: it keeps the last segment's
+  * sorted deleted-docId array, so a run of same-segment docIds looks the
+  * (cached) sidecar up once, and each docId costs one binary search. Not
+  * thread-safe: every task deserializes its own copy.
+  */
+final class SegmentDeletes(live: LiveDocs) extends (Long => Boolean) with Serializable {
+  @transient private var loaded = false
+  private var seg = 0
+  @transient private var arr: Array[Long] = null
+
+  /** Sorted deleted docIds of segment `s`, or null when it has none. */
+  def of(s: Int): Array[Long] = {
+    if (!loaded || s != seg) { arr = live.deleted(s); seg = s; loaded = true }
+    arr
+  }
+
+  def apply(docId: Long): Boolean = {
+    val a = of(IndexBuilder.segOf(docId))
+    a != null && java.util.Arrays.binarySearch(a, docId) >= 0
   }
 }

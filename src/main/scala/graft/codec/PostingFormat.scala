@@ -31,15 +31,23 @@ trait PostingFormat extends Serializable {
 /** Format registry (the codec SPI lookup, `Codec.forName`). */
 object PostingFormats {
   val Default = "pfor"
-  private val all: Map[String, PostingFormat] =
-    Seq(PForFormat, VByteFormat).map(f => f.name -> f).toMap
-  private val byIdMap: Map[Byte, PostingFormat] =
-    Seq(PForFormat, VByteFormat).map(f => f.id -> f).toMap
+  private val formats = Seq(PForFormat, VByteFormat)
+  private val all: Map[String, PostingFormat] = formats.map(f => f.name -> f).toMap
+  // indexed by format id: every block decode dispatches here, so no
+  // boxed-key map lookup
+  private val byIdArr: Array[PostingFormat] = {
+    val a = new Array[PostingFormat](formats.map(_.id.toInt).max + 1)
+    formats.foreach(f => a(f.id) = f)
+    a
+  }
 
   def byName(name: String): PostingFormat =
     all.getOrElse(name, throw new IllegalArgumentException(s"unknown posting format '$name'"))
-  def byId(id: Byte): PostingFormat =
-    byIdMap.getOrElse(id, throw new IllegalArgumentException(s"unknown posting format id $id"))
+  def byId(id: Byte): PostingFormat = {
+    val f = if (id >= 0 && id < byIdArr.length) byIdArr(id) else null
+    if (f == null) throw new IllegalArgumentException(s"unknown posting format id $id")
+    f
+  }
 
   /** Format that wrote `pl` (legacy prefix-less rows are PFOR). */
   def of(pl: PostingList): PostingFormat =

@@ -152,6 +152,17 @@ class VByteFormatSpec extends AnyFunSuite {
     (ids, freqs, norms, ps)
   }
 
+  test("byId returns each format by its own id; unknown and negative ids throw") {
+    Seq(graft.codec.PForFormat, graft.codec.VByteFormat).foreach { f =>
+      assert(graft.codec.PostingFormats.byId(f.id) eq f)
+      assert(graft.codec.PostingFormats.byName(f.name) eq f)
+    }
+    Seq[Byte](2, 7, Byte.MaxValue, -1, Byte.MinValue).foreach { id =>
+      val e = intercept[IllegalArgumentException](graft.codec.PostingFormats.byId(id))
+      assert(e.getMessage.contains(s"unknown posting format id $id"))
+    }
+  }
+
   test("vbyte round-trip == input == pfor decode, dispatch by payload id byte") {
     val rnd = new scala.util.Random(7)
     (1 to 60).foreach { _ =>
