@@ -6,7 +6,7 @@ import graft.model._
 import graft.util.SmallFloat
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -487,18 +487,30 @@ object IndexBuilder {
         r.maxDocIds, r.maxFreqs, r.minNorms, r.offsets, r.payload))
     val docmeta = outC.filter(_.kind == "m")
       .map(r => DocMeta(r.docId, r.repo, r.path, r.commit, r.lang, r.sha256, r.tokenCount, r.norm))
-    // global term stats: partial (per-seg df/ttf already aggregated) ->
-    // final; coalesced so the per-query stats collect is one task wave
-    val termStats = postings.groupBy($"term")
-      .agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
-      .as[TermStats]
-      .coalesce(math.min(8, target))
-    val fs = docmeta.agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-    // `out` came through the groupByKey(seg) build shuffle, so each
+    val (terms, fieldStats) = collectionStats(outC.toDF())
+    // term stats are coalesced so the per-query stats collect is one task
+    // wave; `out` came through the groupByKey(seg) build shuffle, so each
     // segment's rows are physically co-located -> no-shuffle query path
-    new Index(postings, docmeta, termStats, FieldStats(fs._1, fs._2),
+    new Index(postings, docmeta, terms.coalesce(math.min(8, target)), fieldStats,
       segAlignedInit = () => true)
+  }
+
+  /** Global collection stats of `BuildRow`-shaped rows — the one
+    * derivation behind in-memory builds, the persistent stats tables and
+    * snapshot opens: per-term df/ttf summed over the segments' posting
+    * rows (lazy; each caller picks the table's layout) and the content
+    * field's (docCount, sumTotalTermFreq) over the doc-meta rows (one job).
+    */
+  private def collectionStats(rows: DataFrame): (Dataset[TermStats], FieldStats) = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val terms = rows.filter($"kind" === "p")
+      .groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
+      .as[TermStats]
+    val (n, sttf) = rows.filter($"kind" === "m")
+      .agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
+      .as[(Long, Long)].head()
+    (terms, FieldStats(n, sttf))
   }
 
   /** Build fully in memory (cached) — test/driver-query path. */
@@ -522,39 +534,68 @@ object IndexBuilder {
     * docId order inside a segment is input order. The general hash-routed
     * path (with its explicit `seg`/`sortKey`) remains for inputs whose
     * partitioning isn't trusted; consolidation of many mini-segments is
-    * `IndexMerger.forceMerge`'s job.
+    * `IndexMerger.tieredMerge`'s job.
     */
   def buildPartitionLocal(spark: SparkSession, source: Dataset[SourceRow], dir: String,
       codec: String = graft.codec.PostingFormats.Default): Seq[SegmentManifest] = {
     import spark.implicits._
-    val acc = new SegMetricsAccumulator
-    spark.sparkContext.register(acc, "segMetrics")
     val cdc = codec
     val out = source.mapPartitions { it =>
       val seg = org.apache.spark.TaskContext.getPartitionId()
       buildSegment(seg, it.map(r =>
         InputDoc(seg, "", r.repo, r.path, r.commit, r.lang, r.content)),
         preSorted = true, codec = cdc)
-        .map { r => acc.add(r); r }
     }
-    val gen = nextGen(dir)
-    out.write.mode("overwrite").parquet(s"$dir/segments/$gen")
-    val manifests = scala.collection.mutable.ArrayBuffer.empty[SegmentManifest]
-    acc.value.forEach { (seg, m) =>
-      val man = SegmentManifest(seg, "complete", m(0), m(1), m(2),
-        s"partition-local:${m(0)}", codeConfigHash(codec), gen)
-      writeManifest(dir, man)
-      manifests += man
-    }
-    writeStats(spark, dir)
-    manifests.toSeq.sortBy(_.seg)
+    commitGeneration(spark, dir, Seq(out), _ => "partition-local", codec)
   }
 
   /** Next write-once generation dir name — the `segments_N` counter. */
-  private[build] def nextGen(dir: String): String = {
+  private def nextGen(dir: String): String = {
     val existing = IndexFs.listNames(s"$dir/segments")
       .collect { case g if g.startsWith("gen_") => g.stripPrefix("gen_").toLong }
     "gen_" + (if (existing.isEmpty) 0L else existing.max + 1L)
+  }
+
+  /** Commit a new segment generation — the one write path of builds and
+    * merges (the `segments_N` commit, `core/index/SegmentInfos.java:55-106`).
+    * It allocates the next `gen_N` directory and writes the union of
+    * `parts` into it while one [[SegMetricsAccumulator]] tallies each
+    * segment's docs, postings and payload bytes. The tally runs in each
+    * part's own typed map, which Spark fuses with the part's last typed
+    * operator; over the union it would decode every written row once
+    * more. Then it writes one manifest per written segment
+    * (`lineage(seg)` is its input fingerprint), drops the manifests of the
+    * `replaced` segments, refreshes the global stats and marks the
+    * generations nothing references any more. Returns the new manifests
+    * in segment order; a segment with no rows gets none.
+    *
+    * The tally counts every row once: it runs in the write job's result
+    * tasks, and Spark applies a result task's accumulator update once per
+    * partition, whatever retries or speculative copies ran.
+    * `IndexBenchChild` checks the doc sum on a `local-cluster` master.
+    */
+  private[graft] def commitGeneration(spark: SparkSession, dir: String,
+      parts: Seq[Dataset[BuildRow]], lineage: Int => String, codec: String,
+      replaced: Seq[Int] = Nil): Seq[SegmentManifest] = {
+    import spark.implicits._
+    val acc = new SegMetricsAccumulator
+    spark.sparkContext.register(acc, "segMetrics")
+    val gen = nextGen(dir)
+    parts.map(_.map { r => acc.add(r); r }).reduce(_ unionByName _)
+      .write.mode("overwrite").parquet(s"$dir/segments/$gen")
+    val cch = codeConfigHash(codec)
+    val manifests = scala.collection.mutable.ArrayBuffer.empty[SegmentManifest]
+    acc.value.forEach((seg, m) =>
+      manifests += SegmentManifest(seg, "complete", m(0), m(1), m(2), lineage(seg), cch, gen))
+    manifests.foreach(writeManifest(dir, _))
+    // replaced manifests go only once their successors are durable: a
+    // crash in between lists the merged docs twice instead of losing them
+    replaced.foreach(s => IndexFs.delete(manifestPath(dir, s)))
+    writeStats(spark, dir)
+    // a rebuild or merge can shadow whole generations: mark them for the
+    // grace-windowed purge
+    markDereferencedGens(dir)
+    manifests.toSeq.sortBy(_.seg)
   }
 
   // ---------- persistent, resumable build (north rule: checkpoint + lineage) ----------
@@ -583,7 +624,7 @@ object IndexBuilder {
       .toMap
   }
 
-  /** Per-segment (docs, postings, bytes, sumTokens) tally. */
+  /** Per-segment (docs, postings, payload bytes) tally of written rows. */
   final class SegMetricsAccumulator
       extends org.apache.spark.util.AccumulatorV2[BuildRow, java.util.HashMap[Int, Array[Long]]] {
     private var map = new java.util.HashMap[Int, Array[Long]]()
@@ -596,16 +637,16 @@ object IndexBuilder {
     def reset(): Unit = map = new java.util.HashMap[Int, Array[Long]]()
     def add(r: BuildRow): Unit = {
       var slot = map.get(r.seg)
-      if (slot == null) { slot = new Array[Long](4); map.put(r.seg, slot) }
-      if (r.kind == "m") { slot(0) += 1; slot(3) += r.tokenCount }
+      if (slot == null) { slot = new Array[Long](3); map.put(r.seg, slot) }
+      if (r.kind == "m") slot(0) += 1
       else { slot(1) += r.df; slot(2) += r.payload.length }
     }
     def merge(other: org.apache.spark.util.AccumulatorV2[BuildRow, java.util.HashMap[Int, Array[Long]]]): Unit =
       other.value.forEach { (k, v) =>
         var slot = map.get(k)
-        if (slot == null) { slot = new Array[Long](4); map.put(k, slot) }
+        if (slot == null) { slot = new Array[Long](3); map.put(k, slot) }
         var i = 0
-        while (i < 4) { slot(i) += v(i); i += 1 }
+        while (i < 3) { slot(i) += v(i); i += 1 }
       }
     def value: java.util.HashMap[Int, Array[Long]] = map
   }
@@ -629,7 +670,7 @@ object IndexBuilder {
     }
   }
 
-  private[build] def writeManifest(dir: String, m: SegmentManifest): Unit = {
+  private def writeManifest(dir: String, m: SegmentManifest): Unit = {
     val json =
       s"""{"seg":${m.seg},"status":"${m.status}","docs":${m.docs},"postings":${m.postings},""" +
         s""""bytes":${m.bytes},"inputFingerprint":"${m.inputFingerprint}",""" +
@@ -639,57 +680,38 @@ object IndexBuilder {
 
   /** Resumable persistent build.
     *
-    * Layout: `dir/segments/` parquet partitioned by (kind, seg);
-    * `dir/manifest/seg_K.json` per-segment checkpoint rows with lineage
-    * (input fingerprint + code/config hash) and metrics (docs, postings,
-    * bytes) — the `segments_N` analogue (`core/index/SegmentInfos.java:55-106`).
-    * A segment is only believed if its manifest row exists, matches the
-    * recomputed input fingerprint and the current code/config hash;
-    * partial parquet output from a killed run is overwritten via dynamic
-    * partition overwrite. Returns per-segment manifests.
+    * Layout: `dir/segments/gen_N/` write-once parquet generations (both
+    * row kinds); `dir/manifest/seg_K.json` per-segment checkpoint rows
+    * with lineage (input fingerprint + code/config hash) and metrics
+    * (docs, postings, bytes) — the `segments_N` analogue
+    * (`core/index/SegmentInfos.java:55-106`), committed by
+    * [[commitGeneration]]. A segment is only believed if its manifest row
+    * exists, matches the recomputed input fingerprint and the current
+    * code/config hash; every other segment is rebuilt into a new
+    * generation, so output of a killed run is never read. Returns
+    * per-segment manifests.
     */
   def buildPersistent(
       spark: SparkSession,
       docs: Dataset[InputDoc],
       dir: String,
-      resume: Boolean = true,
       codec: String = graft.codec.PostingFormats.Default
   ): Seq[SegmentManifest] = {
     import spark.implicits._
     val cch = codeConfigHash(codec)
     val fps = fingerprints(docs)
     val todo = fps.filter { case (seg, fp) =>
-      !resume || !readManifest(dir, seg).exists(m =>
+      !readManifest(dir, seg).exists(m =>
         m.status == "complete" && m.inputFingerprint == fp && m.codeConfigHash == cch)
     }.keySet
 
     if (todo.nonEmpty) {
-      // per-segment metrics tallied in-flight (no read-back jobs); local
-      // mode has no task retries — on a cluster, retried write tasks could
-      // double-tally, in which case derive metrics from the read-back path
-      val acc = new SegMetricsAccumulator
-      spark.sparkContext.register(acc, "segMetrics")
       val cdc = codec
       val out = docs.filter($"seg".isin(todo.toSeq: _*))
         .as[InputDoc]
         .groupByKey(_.seg)
-        .flatMapGroups { (seg, it) =>
-          buildSegment(seg, it, codec = cdc).map { r => acc.add(r); r }
-        }
-      val gen = nextGen(dir)
-      out.write.mode("overwrite").parquet(s"$dir/segments/$gen")
-
-      val metrics = acc.value
-      todo.foreach { seg =>
-        val m = metrics.getOrDefault(seg, new Array[Long](4))
-        writeManifest(dir, SegmentManifest(seg, "complete", m(0),
-          m(1), m(2), fps(seg), cch, gen))
-      }
-      // refresh global stats (invalid once any segment changed)
-      writeStats(spark, dir)
-      // a rebuild can shadow a whole generation (all its segs replaced):
-      // mark it for the grace-windowed purge like a merge would
-      markDereferencedGens(dir)
+        .flatMapGroups((seg, it) => buildSegment(seg, it, codec = cdc))
+      commitGeneration(spark, dir, Seq(out), fps, codec)
     } else if (!statsFresh(dir)) {
       // covers a crash between manifest writes and the stats refresh
       writeStats(spark, dir)
@@ -725,10 +747,13 @@ object IndexBuilder {
 
   /** The rows of `manifests`' segments, each read from the generation its
     * manifest selects — the one segment reader of opens, stats and merges.
+    * No manifests (a merge purged every doc) reads as no rows.
     */
   private[build] def rawFor(spark: SparkSession, dir: String,
       manifests: Seq[SegmentManifest]): DataFrame = {
     import spark.implicits._
+    if (manifests.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], SegmentSchema)
     val byGen = manifests.groupBy(_.dataDir)
     byGen.map { case (gen, ms) =>
       readSegments(spark, s"$dir/segments/$gen")
@@ -760,11 +785,10 @@ object IndexBuilder {
     }
   }
 
-  private[build] def writeStats(spark: SparkSession, dir: String): Unit = {
+  private def writeStats(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
-    val raw = openRaw(spark, dir)
-    val posts = raw.filter($"kind" === "p")
-    posts.groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
+    val (terms, fieldStats) = collectionStats(openRaw(spark, dir))
+    terms
       // range-partitioned + sorted on term: the stats table IS the term
       // dictionary, and a sorted layout gives cold term/expansion lookups
       // tight parquet min/max pruning (a groupBy's hash output has no
@@ -774,11 +798,10 @@ object IndexBuilder {
       .repartitionByRange(8, $"term")
       .sortWithinPartitions($"term")
       .write.mode("overwrite").parquet(s"$dir/stats/terms")
-    val metas = raw.filter($"kind" === "m")
-    val (n, sttf) = metas.agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
+    // field.json last: its manifest-set hash marks the stats fresh
     IndexFs.writeString(s"$dir/stats/field.json",
-      s"""{"docCount":$n,"sumTotalTermFreq":$sttf,"manifestSetHash":"${manifestSetHash(dir)}"}""")
+      s"""{"docCount":${fieldStats.docCount},"sumTotalTermFreq":${fieldStats.sumTotalTermFreq},""" +
+        s""""manifestSetHash":"${manifestSetHash(dir)}"}""")
   }
 
   // ---------- deletes / updates (live docs) ----------
@@ -1104,9 +1127,9 @@ object IndexBuilder {
         else (docmeta0.filter(!LiveDocs.isDeleted(ld, $"docId")), ld)
     }
     // stats: live opens read the maintained stats tables; snapshot opens
-    // recompute from the pinned segment rows (same partial->final agg
-    // the stats writer runs, so df/ttf sums — and therefore BM25
-    // scores — are exactly what the live index produced at commit time)
+    // recompute from the pinned segment rows (the stats writer's own
+    // derivation, so df/ttf sums — and therefore BM25 scores — are
+    // exactly what the live index produced at commit time)
     val (termStats, fieldStats) = snapshot match {
       case None =>
         val fsJson = IndexFs.readString(s"$dir/stats/field.json")
@@ -1115,14 +1138,7 @@ object IndexBuilder {
             .map(_.group(1).toLong).getOrElse(0L)
         (spark.read.schema(TermStatsSchema).parquet(s"$dir/stats/terms").as[TermStats],
           FieldStats(num("docCount"), num("sumTotalTermFreq")))
-      case Some(_) =>
-        val ts = seg.filter($"kind" === "p")
-          .groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
-          .as[TermStats]
-        val (n, sttf) = seg.filter($"kind" === "m")
-          .agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
-          .as[(Long, Long)].head()
-        (ts, FieldStats(n, sttf))
+      case Some(_) => collectionStats(seg)
     }
     new Index(postings, docmeta, termStats, fieldStats, live,
       segAlignedInit = () => aligned, reader = reader)

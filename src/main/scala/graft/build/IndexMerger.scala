@@ -2,7 +2,7 @@ package graft.build
 
 import graft.codec.PostingCodec
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Segment merge — the north rule's "sort-merge of segments on term keys".
@@ -89,10 +89,10 @@ object IndexMerger {
       rows: Iterator[PostingList],
       dm: DocMap,
       newSeg: Int,
-      cap: Int,
-      codec: String = graft.codec.PostingFormats.Default
+      cap: Int
   ): Iterator[PostingList] =
     new Iterator[PostingList] {
+      private val fmt = graft.codec.PostingFormats.byName(graft.codec.PostingFormats.Default)
       private val it = rows.buffered
       // fixed cap-sized accumulation buffers — the memory bound
       private val ids = new Array[Long](cap)
@@ -112,7 +112,7 @@ object IndexMerger {
       private def emitPending(): Unit = {
         val prev = peakBufferedPostings.get()
         if (n > prev) peakBufferedPostings.compareAndSet(prev, n)
-        pending = graft.codec.PostingFormats.byName(codec).encode(newSeg, curTerm,
+        pending = fmt.encode(newSeg, curTerm,
           java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(fqs, n),
           java.util.Arrays.copyOf(nms, n),
           if (hasPos) java.util.Arrays.copyOf(pss, n) else null,
@@ -171,37 +171,6 @@ object IndexMerger {
       }
     }
 
-  /** forceMerge(1)-style compaction: one logical segment (seg = 0) with
-    * contiguous docIds 0..N-1 in (old seg, old ord) order; tombstoned
-    * docs are dropped (deletes applied, like `IndexWriter.forceMerge`).
-    */
-  def forceMerge(
-      spark: SparkSession,
-      index: Index,
-      numPartitions: Int = 32,
-      maxPostingsPerRow: Int = 1 << 20
-  ): Index = {
-    import spark.implicits._
-
-    // kept-doc counts per old segment (docmeta is already tombstone-filtered)
-    // — integer shift (not SQL division, which promotes to double and loses
-    // precision for docIds >= 2^53), must match segOf exactly
-    val perSeg = index.docmeta
-      .select(shiftright(col("docId"), IndexBuilder.SegShift).cast("int").as("seg"))
-      .groupBy($"seg").count().as[(Int, Long)].collect().toSeq
-    val dm = new DocMap(basesOf(perSeg), index.live, newSeg = 0)
-
-    val docmeta2 = index.docmeta.map(m => m.copy(docId = dm.remap(m.docId)))
-
-    val cap = maxPostingsPerRow
-    val postings2: Dataset[PostingList] = index.postings
-      .repartitionByRange(numPartitions, $"term")
-      .sortWithinPartitions($"term", $"seg")
-      .mapPartitions(rows => mergeRows(rows, dm, 0, cap))
-
-    new Index(postings2, docmeta2, index.termStats, index.fieldStats)
-  }
-
   /** Merged segments get ids in a reserved high range so they never
     * collide with streaming-batch segment ids (which grow from 0 as
     * batchId * segsPerBatch).
@@ -239,10 +208,17 @@ object IndexMerger {
     groups.toSeq
   }
 
+  /** Range partitions of a merge's term sort. */
+  private val MergePartitions = 8
+
   /** Merge a group of persistent segments into ONE new segment in a new
-    * generation; old manifests are removed, the new manifest points at
-    * the new generation (write-once files + manifest selection — the
-    * `segments_N` commit-point model). Tombstoned docs are dropped.
+    * generation through [[IndexBuilder.commitGeneration]]: the old
+    * manifests are replaced by the new one, which points at the new
+    * generation and carries the docs, postings and bytes tallied while it
+    * was written (write-once files + manifest selection — the `segments_N`
+    * commit-point model). Tombstoned docs are dropped; a group whose docs
+    * are all deleted leaves no segment (None). Merging every live segment
+    * is the `IndexWriter.forceMerge(1)` analogue.
     *
     * Safe only for segments whose build (streaming batch) is complete —
     * merging a segment that a retried batch may still rebuild would
@@ -252,10 +228,8 @@ object IndexMerger {
       spark: SparkSession,
       dir: String,
       segs: Seq[Int],
-      numPartitions: Int = 8,
-      maxPostingsPerRow: Int = 1 << 20,
-      codec: String = graft.codec.PostingFormats.Default
-  ): SegmentManifest = {
+      maxPostingsPerRow: Int = 1 << 20
+  ): Option[SegmentManifest] = {
     import spark.implicits._
     val manifests = IndexBuilder.listManifests(dir).filter(m => segs.contains(m.seg))
     require(manifests.map(_.seg).toSet == segs.toSet, s"missing manifests for $segs")
@@ -288,16 +262,15 @@ object IndexMerger {
       .groupBy($"seg").count().as[(Int, Long)].collect().toSeq
     val dm = new DocMap(basesOf(perSeg), deleted, newSeg)
 
-    val gen = IndexBuilder.nextGen(dir)
     val ns = newSeg
     val metaRows = metas.as[BuildRow].map(r => r.copy(seg = ns, docId = dm.remap(r.docId)))
     val postRows = raw.filter($"kind" === "p")
       .select($"seg", $"term", $"df", $"ttf", $"counts", $"baseDocIds",
         $"maxDocIds", $"maxFreqs", $"minNorms", $"offsets", $"payload")
       .as[PostingList]
-      .repartitionByRange(numPartitions, $"term")
+      .repartitionByRange(MergePartitions, $"term")
       .sortWithinPartitions($"term", $"seg")
-      .mapPartitions(rows => mergeRows(rows, dm, ns, maxPostingsPerRow, codec))
+      .mapPartitions(rows => mergeRows(rows, dm, ns, maxPostingsPerRow))
       .map(pl => BuildRow(
         kind = "p", seg = ns, docId = -1L, repo = null, path = null, commit = null,
         lang = null, sha256 = null, tokenCount = 0, norm = 0,
@@ -305,27 +278,10 @@ object IndexMerger {
         baseDocIds = pl.baseDocIds, maxDocIds = pl.maxDocIds,
         maxFreqs = pl.maxFreqs, minNorms = pl.minNorms, offsets = pl.offsets,
         payload = pl.payload))
-    metaRows.unionByName(postRows).write.mode("overwrite").parquet(s"$dir/segments/$gen")
-
-    // read-back metrics for the merged segment (one tiny agg job)
-    val written = IndexBuilder.readSegments(spark, s"$dir/segments/$gen")
-    val docs = written.filter($"kind" === "m").count()
-    val (posts, bytes) = written.filter($"kind" === "p")
-      .agg(coalesce(sum($"df".cast("long")), lit(0L)),
-        coalesce(sum(length($"payload").cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-
-    val man = SegmentManifest(newSeg, "complete", docs, posts, bytes,
-      "merged:" + IndexBuilder.sha256Hex(
-        manifests.map(m => s"${m.seg}:${m.inputFingerprint}").sorted.mkString("|")).take(16),
-      IndexBuilder.codeConfigHash(codec), gen)
-    IndexBuilder.writeManifest(dir, man)
-    // drop source manifests AFTER the new one is durable (crash between
-    // the two writes leaves both old and new visible; old wins until the
-    // deletes complete — readers must not see the union, so delete new
-    // manifest last on failure paths; here: delete olds, then refresh stats
-    segs.foreach { s => IndexFs.delete(IndexBuilder.manifestPath(dir, s)) }
-    IndexBuilder.writeStats(spark, dir)
+    val lineage = "merged:" + IndexBuilder.sha256Hex(
+      manifests.map(m => s"${m.seg}:${m.inputFingerprint}").sorted.mkString("|")).take(16)
+    val merged = IndexBuilder.commitGeneration(spark, dir, Seq(metaRows, postRows),
+      _ => lineage, graft.codec.PostingFormats.Default, replaced = segs)
     // merges are the livedocs compaction point: the manifest-set change
     // invalidates every cached sidecar scope for NEW opens, and the next
     // open re-resolves only the still-live tombstones — without gc,
@@ -336,14 +292,10 @@ object IndexMerger {
     // liveDocs files still referenced by an open commit point. Scopes
     // pinned by retained snapshots are never deleted.
     LiveDocs.gc(dir, retain = IndexBuilder.snapshotScopes(dir))
-    // generations this merge just dereferenced get their _deref marker;
-    // IndexBuilder.purgeGenerations deletes them after the reader lease
-    // (never while a retained snapshot references them)
-    IndexBuilder.markDereferencedGens(dir)
     // drop tombstones the merge just made pointless (their docs no longer
     // exist in any live segment); snapshot-pinned tombstone files survive
     IndexBuilder.compactTombstones(spark, dir)
-    man
+    merged.headOption
   }
 
   /** Tiered background compaction over a persistent index: merge the
@@ -351,7 +303,7 @@ object IndexMerger {
     */
   def tieredMerge(spark: SparkSession, dir: String, segsPerTier: Int = 8): Seq[SegmentManifest] = {
     findMerges(IndexBuilder.listManifests(dir), segsPerTier)
-      .map(g => mergeSegments(spark, dir, g))
+      .flatMap(g => mergeSegments(spark, dir, g))
   }
 }
 

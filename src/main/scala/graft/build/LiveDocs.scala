@@ -1,8 +1,11 @@
 package graft.build
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Per-segment deleted-docId view — the liveDocs analogue
   * (`core/codecs/lucene90/Lucene90LiveDocsFormat.java:49`: one bitset
@@ -45,9 +48,12 @@ final case class MapLiveDocs(m: Map[Int, Array[Long]]) extends LiveDocs {
 /** Sidecar-file-backed view: `segs` maps each segment WITH deletes to
   * its delete count (the manifest — tiny, closure-shipped); the sorted
   * docId arrays live in `ldDir/seg_<s>.longs` and are loaded lazily,
-  * once per JVM per segment, by whoever calls [[deleted]] (executors).
+  * once per JVM per segment, by whoever calls [[deleted]] (executors),
+  * through the session's Hadoop conf. The conf travels as a broadcast
+  * handle, so task closures that carry this view stay small.
   */
-final class FileLiveDocs(val ldDir: String, val segs: Map[Int, Long]) extends LiveDocs {
+final class FileLiveDocs(val ldDir: String, val segs: Map[Int, Long],
+    hadoopConf: Broadcast[SerializableConfiguration]) extends LiveDocs {
 
   /** Sidecar loads performed through THIS instance (driver instance in
     * tests: must stay 0 — tasks deserialize their own copy, so executor
@@ -68,7 +74,7 @@ final class FileLiveDocs(val ldDir: String, val segs: Map[Int, Long]) extends Li
       val hit = FileLiveDocs.cache.get(key)
       if (hit != null) hit
       else {
-        val arr = LiveDocs.readSidecar(key)
+        val arr = LiveDocs.readSidecar(key, hadoopConf.value.value)
         loads.incrementAndGet()
         if (FileLiveDocs.cache.size > 4096) FileLiveDocs.cache.clear()
         FileLiveDocs.cache.putIfAbsent(key, arr)
@@ -86,24 +92,15 @@ object FileLiveDocs {
 
 object LiveDocs {
 
-  /** Hadoop configuration of executor-side sidecar IO, built once per
-    * JVM: a `new Configuration()` parses Hadoop's default resources, which
-    * costs more than reading a sidecar. It carries the classpath defaults
-    * only, not the session's `spark.hadoop.*` settings; driver-side IO
-    * (the livedocs manifest, [[gc]]) goes through [[IndexFs]], which
-    * honours them.
-    */
-  private lazy val executorConf = new org.apache.hadoop.conf.Configuration()
-
   /** Sidecar IO goes through the Hadoop FileSystem API (like Spark's own
-    * file sinks), so executor-side reads/writes work unchanged whether
-    * the index dir is local, HDFS, or an object store.
+    * file sinks) with the session's Hadoop conf, the one [[IndexFs]] uses
+    * on the driver, so executor-side reads/writes see the same
+    * `spark.hadoop.*` settings whether the index dir is local, HDFS, or an
+    * object store.
     */
-  private def executorFs(path: Path): FileSystem = path.getFileSystem(executorConf)
-
-  private[build] def readSidecar(path: String): Array[Long] = {
+  private[build] def readSidecar(path: String, conf: Configuration): Array[Long] = {
     val p = new Path(path)
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(executorFs(p).open(p)))
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(p.getFileSystem(conf).open(p)))
     try {
       val n = in.readInt()
       val arr = new Array[Long](n)
@@ -113,8 +110,8 @@ object LiveDocs {
     } finally in.close()
   }
 
-  private def writeSidecar(path: String, ids: Array[Long], n: Int): Unit =
-    writeOnce(executorFs(new Path(path)), path) { out =>
+  private def writeSidecar(path: String, ids: Array[Long], n: Int, conf: Configuration): Unit =
+    writeOnce(new Path(path).getFileSystem(conf), path) { out =>
       out.writeInt(n)
       var i = 0
       while (i < n) { out.writeLong(ids(i)); i += 1 }
@@ -215,14 +212,18 @@ object LiveDocs {
     *    so each reducer owns whole segments, then sorted and written the
     *    same way. This is the only correct path on unaligned input.
     * `aligned` is evaluated only after the size check passes, and only
-    * when the scope is not resolved yet.
+    * when the scope is not resolved yet. The write tasks and the returned
+    * view share one broadcast of the session's Hadoop conf.
     */
   def resolve(spark: SparkSession, dir: String, scopeKey: String,
       docmeta: DataFrame, tombs: DataFrame, tombBytes: Long, aligned: => Boolean): LiveDocs = {
     import spark.implicits._
     val ldDir = s"$dir/livedocs/$scopeKey"
     val manifestPath = s"$ldDir/_manifest.json"
+    lazy val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     if (!IndexFs.exists(manifestPath)) {
+      val sidecarConf = conf
       val limit = broadcastLimit(spark)
       val scanLocal = limit > 0 && tombBytes <= limit && aligned
       val deletedIds = docmeta
@@ -242,7 +243,7 @@ object LiveDocs {
           var buf = new Array[Long](1024)
           var n = 0
           def flush(): Unit = if (n > 0) {
-            writeSidecar(s"$out/seg_$curSeg.longs", buf, n)
+            writeSidecar(s"$out/seg_$curSeg.longs", buf, n, sidecarConf.value.value)
             res += ((curSeg, n.toLong))
             n = 0
           }
@@ -264,7 +265,7 @@ object LiveDocs {
       "\"(-?\\d+)\"\\s*:\\s*(\\d+)".r
         .findAllMatchIn(IndexFs.readString(manifestPath))
         .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-    if (segs.isEmpty) NoDeletes else new FileLiveDocs(ldDir, segs)
+    if (segs.isEmpty) NoDeletes else new FileLiveDocs(ldDir, segs, conf)
   }
 }
 

@@ -92,7 +92,7 @@ object StreamingIndexer {
             scala.util.hashing.MurmurHash3.stringHash(key), segsPerBatch)
           InputDoc(seg, key, r.repo, r.path, r.commit, r.lang, r.content)
         }
-        IndexBuilder.buildPersistent(spark, docs, indexDir, resume = true)
+        IndexBuilder.buildPersistent(spark, docs, indexDir)
         (): Unit
       }
       .start()

@@ -2,11 +2,13 @@ package graft
 
 import graft.build.{CheckIndex, Datagen, IndexBuilder, IndexMerger}
 import graft.exec.Searcher
+import graft.model.SegmentManifest
 import org.apache.spark.sql.functions._
 
 /** Segment merge (sort-merge on term keys) — results must be identical
   * to the unmerged index modulo the order-preserving docId remap
-  * (`MergeState.DocMap` analogue), including with mega-term salt splits.
+  * (`MergeState.DocMap` analogue), including with mega-term salt splits —
+  * and the commit path's manifests must describe what was written.
   */
 class MergeSpec extends SparkTest {
   import spark.implicits._
@@ -19,19 +21,26 @@ class MergeSpec extends SparkTest {
     "def", "needle_0", "def AND class", "val OR needle_1",
     "ident_17 AND NOT ident_23", "\"class camelCaseName7\"", "ident_23*")
 
-  test("forceMerge preserves results under docId remap; CheckIndex clean; salt split works") {
-    val src = Datagen.corpus(spark, 900, seed = 21L)
-    val index = IndexBuilder.buildInMemory(spark, Datagen.toInputDocs(src, 4))
-
-    // order-preserving remap oracle: old docId -> rank in sorted order
-    val oldIds = index.docmeta.select($"docId").as[Long].collect().sorted
-    val remap = oldIds.zipWithIndex.map { case (id, i) => id -> i.toLong }.toMap
-
-    assert(CheckIndex.run(index).isEmpty)
+  test("mergeSegments over every segment: results kept under remap, salt split works") {
+    val docs = Datagen.toInputDocs(Datagen.corpus(spark, 900, seed = 21L), 4)
 
     for (cap <- Seq(1 << 20, 64)) { // big cap = single row per term; 64 = forced salt splits
+      val dir = java.nio.file.Files.createTempDirectory("graftmergeall").toString
+      val segs = IndexBuilder.buildPersistent(spark, docs, dir).map(_.seg)
+      val index = IndexBuilder.open(spark, dir)
+      assert(CheckIndex.run(index).isEmpty)
+      // order-preserving remap oracle: old docId -> rank in sorted order,
+      // inside the one merged segment
+      val mergedBase = IndexMerger.MergedSegBase.toLong << IndexBuilder.SegShift
+      val oldIds = index.docmeta.select($"docId").as[Long].collect().sorted
+      val remap = oldIds.zipWithIndex.map { case (id, i) => id -> (mergedBase | i.toLong) }.toMap
+      val base = queries.map(qs => Searcher.topK(index, qs, 10).as[(Long, Float)].collect().toSeq
+        .map { case (d, s) => (remap(d), s) })
+      val wideBase = Searcher.countQ(index, graft.query.PrefixQ("ident_2"))
+
       IndexMerger.peakBufferedPostings.set(0)
-      val merged = IndexMerger.forceMerge(spark, index, numPartitions = 8, maxPostingsPerRow = cap)
+      IndexMerger.mergeSegments(spark, dir, segs, maxPostingsPerRow = cap)
+      val merged = IndexBuilder.open(spark, dir)
       merged.postings.persist()
       assert(CheckIndex.run(merged).isEmpty, s"cap=$cap")
       if (cap == 64) {
@@ -45,18 +54,74 @@ class MergeSpec extends SparkTest {
         val peak = IndexMerger.peakBufferedPostings.get()
         assert(peak > 0 && peak <= 64, s"merge buffered $peak postings, cap 64")
       }
-      queries.foreach { qs =>
-        val base = Searcher.topK(index, qs, 10).as[(Long, Float)].collect().toSeq
-          .map { case (d, s) => (remap(d), s) }
+      queries.zip(base).foreach { case (qs, expected) =>
         val got = Searcher.topK(merged, qs, 10).as[(Long, Float)].collect().toSeq
-        assert(got == base, s"query [$qs] cap=$cap")
+        assert(got == expected, s"query [$qs] cap=$cap")
       }
       // over-cap (wide) expansion survives the merge: "ident_2*" matches
       // >1024 terms, so the count path routes through WideTermSetQ
-      assert(Searcher.countQ(merged, graft.query.PrefixQ("ident_2")) ==
-        Searcher.countQ(index, graft.query.PrefixQ("ident_2")), s"wide count cap=$cap")
+      assert(Searcher.countQ(merged, graft.query.PrefixQ("ident_2")) == wideBase, s"wide count cap=$cap")
       merged.postings.unpersist()
     }
+  }
+
+  /** (docs, postings, payload bytes) of `m`'s segment, read back from the
+    * generation its manifest points at.
+    */
+  private def readBack(dir: String, m: SegmentManifest): (Long, Long, Long) = {
+    val rows = spark.read.parquet(s"$dir/segments/${m.dataDir}").filter($"seg" === m.seg)
+    val docs = rows.filter($"kind" === "m").count()
+    val (postings, bytes) = rows.filter($"kind" === "p")
+      .agg(coalesce(sum($"df".cast("long")), lit(0L)),
+        coalesce(sum(length($"payload").cast("long")), lit(0L)))
+      .as[(Long, Long)].head()
+    (docs, postings, bytes)
+  }
+
+  test("commit manifests equal a read-back of their generation") {
+    def check(what: String, dir: String, ms: Seq[SegmentManifest]): Unit = {
+      assert(ms.nonEmpty, what)
+      ms.foreach(m => assert((m.docs, m.postings, m.bytes) == readBack(dir, m), s"$what seg=${m.seg}"))
+    }
+    val src = Datagen.corpus(spark, 600, seed = 23L, numPartitions = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graftcommit").toString
+    val built = IndexBuilder.buildPersistent(spark, Datagen.toInputDocs(src, 4), dir)
+    check("buildPersistent", dir, built)
+    val pdir = java.nio.file.Files.createTempDirectory("graftcommitplocal").toString
+    check("buildPartitionLocal", pdir, IndexBuilder.buildPartitionLocal(spark, src, pdir))
+
+    // merge three segments that carry deletes: the merged manifest counts
+    // the surviving docs and the postings rewritten without the deleted ones
+    val idx = IndexBuilder.open(spark, dir)
+    val victimIds = Searcher.matchingDocs(idx, graft.query.TermQ("needle_0"))
+    IndexBuilder.deleteDocs(spark, dir, victimIds.toDF("docId")
+      .join(idx.docmeta, "docId").select($"repo", $"path", $"commit"))
+    val group = built.map(_.seg).take(3)
+    val groupVictims = victimIds.collect().count(d => group.contains(IndexBuilder.segOf(d)))
+    assert(groupVictims > 0)
+    val merged = IndexMerger.mergeSegments(spark, dir, group)
+    check("mergeSegments", dir, merged.toSeq)
+    assert(merged.get.docs ==
+      built.filter(m => group.contains(m.seg)).map(_.docs).sum - groupVictims)
+  }
+
+  test("merging every segment after deleting every doc leaves an empty, openable index") {
+    val dir = java.nio.file.Files.createTempDirectory("graftmergeempty").toString
+    val segs = IndexBuilder.buildPersistent(spark,
+      Datagen.toInputDocs(Datagen.corpus(spark, 200, seed = 29L), 3), dir).map(_.seg)
+    IndexBuilder.deleteDocs(spark, dir,
+      IndexBuilder.open(spark, dir).docmeta.select($"repo", $"path", $"commit"))
+    // nothing survives: no generation rows, so no manifest is written
+    assert(IndexMerger.mergeSegments(spark, dir, segs).isEmpty)
+    assert(new java.io.File(s"$dir/manifest").listFiles()
+      .forall(f => !(f.getName.startsWith("seg_") && f.getName.endsWith(".json"))))
+    val idx = IndexBuilder.open(spark, dir)
+    assert(idx.docmeta.count() == 0)
+    assert(idx.fieldStats.docCount == 0)
+    assert(Searcher.topK(idx, "def", 10).count() == 0)
+    assert(Searcher.count(idx, "def OR class") == 0)
+    // and a later merge pass finds nothing to do
+    assert(IndexMerger.tieredMerge(spark, dir).isEmpty)
   }
 
   test("tiered merge: bounded segment count, deletes dropped, results identical to fresh build") {

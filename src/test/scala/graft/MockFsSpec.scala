@@ -80,6 +80,37 @@ class MockFsSpec extends SparkTest {
     assert(idx1.docmeta.filter(!$"commit".endsWith("_v2")).count() == 0)
   }
 
+  test("executor sidecar IO sees a scheme bound only in the session's Hadoop conf") {
+    // `spark.hadoop.fs.confonlyfs.impl` lands in the session's Hadoop conf.
+    // With the FileSystem cache off for the scheme, a task cannot reuse a
+    // driver-side instance: its sidecar IO reaches the scheme only if the
+    // session's conf travelled with it
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.confonlyfs.impl", classOf[graft.testfs.ConfOnlyFs].getName)
+    conf.setBoolean("fs.confonlyfs.impl.disable.cache", true)
+    // the SparkContext is shared by the whole run: later tests must not
+    // inherit the binding
+    try {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark) // IndexFs reads its conf
+      val dir = "confonlyfs:" + java.nio.file.Files.createTempDirectory("graftconfonly").toString + "/idx"
+      IndexBuilder.buildPersistent(spark, Datagen.toInputDocs(Datagen.corpus(spark, 300, seed = 33L), 3), dir)
+      val idx0 = IndexBuilder.open(spark, dir)
+      val nVictims = Searcher.count(idx0, "needle_0")
+      assert(nVictims > 0)
+      IndexBuilder.deleteDocs(spark, dir, Searcher.matchingDocs(idx0, graft.query.TermQ("needle_0"))
+        .toDF("docId").join(idx0.docmeta, "docId").select($"repo", $"path", $"commit"))
+      // the open resolves the deletes: its tasks write the sidecars
+      val idx1 = IndexBuilder.open(spark, dir)
+      assert(idx1.live.deletedCount == nVictims)
+      // the kernels and the docmeta filter read them back in tasks
+      assert(Searcher.topKQ(idx1, graft.query.TermQ("needle_0"), 10).count() == 0)
+      assert(idx1.docmeta.count() == 300 - nVictims)
+    } finally {
+      conf.unset("fs.confonlyfs.impl")
+      conf.unset("fs.confonlyfs.impl.disable.cache")
+    }
+  }
+
   test("livedocs gc is grace-windowed: fresh scopes survive a merge-time gc, stale scopes do not") {
     val local = java.nio.file.Files.createTempDirectory("graftgc").toString
     def mkScope(name: String): java.io.File = {

@@ -192,9 +192,16 @@ class PayloadSpec extends SparkTest {
     }
   }
 
-  test("payloads survive forceMerge") {
+  test("payloads survive mergeSegments over every segment") {
     import spark.implicits._
-    val merged = graft.build.IndexMerger.forceMerge(spark, index, numPartitions = 4)
+    // `index`'s rows committed as a persistent generation, then merged
+    val dir = java.nio.file.Files.createTempDirectory("graft-paymerge").toString
+    val rows = spark.createDataset(docs).groupByKey(_.seg)
+      .flatMapGroups((seg, it) => IndexBuilder.buildSegment(seg, it, analyzerMode = "lenpayload"))
+    val segs = IndexBuilder.commitGeneration(spark, dir, Seq(rows), _ => "lenpayload",
+      graft.codec.PostingFormats.Default).map(_.seg)
+    graft.build.IndexMerger.mergeSegments(spark, dir, segs)
+    val merged = IndexBuilder.open(spark, dir)
     val before = graft.exec.PayloadScore.topK(index, Seq("stream", "scan"), "sum", 10)
       .as[(Long, Double)].collect().map(_._2).toSeq
     val after = graft.exec.PayloadScore.topK(merged, Seq("stream", "scan"), "sum", 10)
