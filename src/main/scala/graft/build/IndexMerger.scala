@@ -29,14 +29,23 @@ object IndexMerger {
     * newDocId = (newSeg << shift) | (base(oldSeg) + ord - deletedBelow).
     * `deleted` is the lazy per-segment liveDocs view — merge tasks load
     * only THEIR segments' sorted sidecar arrays, executor-side (the
-    * driver ships the tiny manifest, never the ids).
+    * driver ships the tiny manifest, never the ids). base(oldSeg) is the
+    * sum of `keptPerSeg` over the lower old segments; a kept doc whose
+    * new ordinal is not below its segment's kept count fails the task, so
+    * a kept count that is too low (it would overlap the next segment's
+    * range) stops the merge before its commit.
     */
   final class DocMap(
-      bases: Map[Int, Long],
+      keptPerSeg: Seq[(Int, Long)],
       deleted: LiveDocs,
       newSeg: Int
   ) extends Serializable {
     private val dels = new SegmentDeletes(deleted)
+    // old seg -> (base, kept count)
+    private val spans: Map[Int, (Long, Long)] = {
+      var acc = 0L
+      keptPerSeg.sortBy(_._1).map { case (seg, n) => val b = seg -> (acc, n); acc += n; b }.toMap
+    }
 
     def isDeleted(docId: Long): Boolean = dels(docId)
 
@@ -49,15 +58,13 @@ object IndexMerger {
           val i = java.util.Arrays.binarySearch(arr, docId)
           if (i >= 0) i else -(i + 1)
         }
-      (newSeg.toLong << IndexBuilder.SegShift) |
-        (bases(seg) + IndexBuilder.ordOf(docId) - below)
+      val (base, kept) = spans(seg)
+      val ord = IndexBuilder.ordOf(docId) - below
+      if (ord >= kept)
+        throw new IllegalStateException(s"segment $seg: kept doc ordinal $ord is not below " +
+          s"its kept count $kept (manifest docs minus deletes)")
+      (newSeg.toLong << IndexBuilder.SegShift) | (base + ord)
     }
-  }
-
-  /** Kept-doc base offsets per old segment (cumulative, seg order). */
-  private def basesOf(keptPerSeg: Seq[(Int, Long)]): Map[Int, Long] = {
-    var acc = 0L
-    keptPerSeg.sortBy(_._1).map { case (seg, n) => val b = seg -> acc; acc += n; b }.toMap
   }
 
   /** Test/diagnostic hook: peak postings buffered by any [[mergeRows]]
@@ -257,10 +264,13 @@ object IndexMerger {
       IndexBuilder.listManifests(dir).map(_.seg - MergedSegBase).filter(_ >= 0)
         .foldLeft(-1)(math.max)) + 1
 
-    val perSeg = metas
-      .select(shiftright($"docId", IndexBuilder.SegShift).cast("int").as("seg"))
-      .groupBy($"seg").count().as[(Int, Long)].collect().toSeq
-    val dm = new DocMap(basesOf(perSeg), deleted, newSeg)
+    // kept docs per source segment: its manifest's write-time tally minus
+    // its count in the resolved delete view — no job
+    val deletedPerSeg: Int => Long = deleted match {
+      case f: FileLiveDocs => s => f.segs.getOrElse(s, 0L)
+      case _ => _ => 0L
+    }
+    val dm = new DocMap(manifests.map(m => m.seg -> (m.docs - deletedPerSeg(m.seg))), deleted, newSeg)
 
     val ns = newSeg
     val metaRows = metas.as[BuildRow].map(r => r.copy(seg = ns, docId = dm.remap(r.docId)))

@@ -113,37 +113,20 @@ object Queries {
   private def r4d(s: Double) = math.floor(s * 10000d + 0.5d) / 10000d
 
   /** Exactly the top-k hits by (ROUNDED score desc, docId asc), scores
-    * rounded. Fetches k+40 and escalates while the last fetched hit can
-    * still tie the kth rounded score (a fixed buffer could drop
-    * lower-doc_id ties just outside the window).
+    * rounded: [[topRoundedHitsBatch]] of one query.
     */
   private[graft] def topRoundedHits(index: graft.build.Index, q0: graft.query.Query,
-      k: Int, sim: graft.exec.SimilarityFactory = graft.exec.BM25Sim): Array[(Long, Double)] = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    var kk = k + 40
-    var hits = Searcher.topKQ(index, q0, kk, doubleMode = true, sim = sim)
-      .as[(Long, Double)].collect()
-    // constant-score roots can never need escalation: every hit has the
-    // same score, so the engine's docId-asc tie order IS the rounded order
-    val constScore = graft.query.Query.rewrite(q0).isInstanceOf[graft.query.ConstScoreQ]
-    while (!constScore && hits.length == kk && hits.length >= k &&
-        r4d(hits.last._2) >= r4d(hits(k - 1)._2)) {
-      kk *= 4
-      hits = Searcher.topKQ(index, q0, kk, doubleMode = true, sim = sim)
-        .as[(Long, Double)].collect()
-    }
-    hits.map { case (d, s) => (d, r4d(s)) }
-      .sortBy { case (d, s) => (-s, d) } // docId order == doc_id order (range routing)
-      .take(k)
-  }
+      k: Int, sim: graft.exec.SimilarityFactory = graft.exec.BM25Sim): Array[(Long, Double)] =
+    topRoundedHitsBatch(index, Seq("" -> q0), k, sim)("")
 
-  /** Batched [[topRoundedHits]]: ALL queries' rounded top-k through
-    * [[Searcher.topKBatch]] — one postings scan + one kernel pass per
-    * segment per escalation round for the whole query set, the shape a
-    * corpus-scale labeling pass needs (N queries, O(1) jobs, not N
-    * jobs). Escalation reruns only the still-ambiguous qids. Per-qid
-    * results are IDENTICAL to the sequential path (KnnBatchSpec).
+  /** ALL queries' rounded top-k through [[Searcher.topKBatch]] — one
+    * postings scan + one kernel pass per segment per escalation round for
+    * the whole query set, the shape a corpus-scale labeling pass needs
+    * (N queries, O(1) jobs, not N jobs). Each round fetches k+40 (then
+    * x4) hits and reruns only the qids whose last fetched hit can still
+    * tie the kth rounded score (a fixed buffer could drop lower-doc_id
+    * ties just outside the window). Per-qid results are IDENTICAL to
+    * batches of one (KnnBatchSpec).
     */
   private[graft] def topRoundedHitsBatch(index: graft.build.Index,
       queries: Seq[(String, graft.query.Query)], k: Int,

@@ -27,10 +27,10 @@ import graft.model.PostingList
   * min-competitive feedback of `TopScoreDocCollector.java:147-162`.
   *
   * Work is done once where it can be: a [[TermCursor]] computes a block's
-  * impact bound when it loads the block, and a batch task shares one
-  * [[BlockCache]] per segment, so each position-less block is decoded
-  * once for all of its queries (up to [[BlockCache.MaxPostings]] cached
-  * postings; single queries decode directly).
+  * impact bound when it loads the block, and every search task shares
+  * one [[BlockCache]] per segment, so each position-less block is decoded
+  * once for all of the task's queries (up to [[BlockCache.MaxPostings]]
+  * cached postings).
   */
 object Kernel {
   val NoMoreDocs: Long = Long.MaxValue
@@ -988,16 +988,6 @@ object Kernel {
       d = root.nextDoc()
     }
     heap.result()
-  }
-
-  /** Count matches of the root cursor — no heap, no scoring, no sort
-    * (`core/search/TotalHitCountCollector.java:27`).
-    */
-  def countAll(root: DocCursor): Long = {
-    var n = 0L
-    var d = root.nextDoc()
-    while (d != NoMoreDocs) { n += 1; d = root.nextDoc() }
-    n
   }
 
   /** Stream matching docIds of the root cursor — no scoring, no heap. */

@@ -37,16 +37,8 @@ object MoreLikeThis {
   /** Selected (term, tf*idf) pairs, ranked by (quantised score desc,
     * term asc), capped at maxQueryTerms.
     */
-  def selectTerms(index: Index, content: String, p: Params): Seq[(String, Double)] = {
-    val cands = candidateTf(content, p)
-    if (cands.isEmpty) return Nil
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    val dfs = index.termStats
-      .filter($"term".isin(cands.keys.toSeq: _*))
-      .select($"term", $"df").as[(String, Long)].collect().toMap
-    rank(cands, dfs, index.fieldStats.docCount, p)
-  }
+  def selectTerms(index: Index, content: String, p: Params): Seq[(String, Double)] =
+    selectTermsBatch(index, Seq("" -> content), p)("")
 
   private def candidateTf(content: String, p: Params): Map[String, Int] =
     CodeAnalyzer.tokenize(content)
@@ -67,10 +59,10 @@ object MoreLikeThis {
       .take(p.maxQueryTerms)
 
   /** Batched term selection: ONE pushed `In(term, ...)` stats lookup for
-    * the UNION of all source docs' candidate terms, then the per-doc
-    * ranking of [[selectTerms]] — the corpus-scale labeling shape (N
-    * source docs, one stats job instead of N). Per-id results are
-    * IDENTICAL to [[selectTerms]] (KnnBatchSpec).
+    * the UNION of all source docs' candidate terms, then each doc's
+    * ranking — the corpus-scale labeling shape (N source docs, one stats
+    * job instead of N). [[selectTerms]] is a batch of one; per-id results
+    * are IDENTICAL to it (KnnBatchSpec).
     */
   def selectTermsBatch(index: Index, contents: Seq[(String, String)],
       p: Params = Params()): Map[String, Seq[(String, Double)]] = {

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.reflect.ClassTag
+
 /** Query planner + distributed top-k executor.
   *
   * Mirrors the reference search lifecycle (SURVEY.md §3.2): rewrite the
@@ -21,24 +23,25 @@ import org.apache.spark.sql.types._
   * (score desc, docId asc) order (`TopDocs.merge` with the HitQueue
   * tie-break).
   *
-  * Every executor body reads one per-segment (seg, term -> postings) RDD
-  * ([[segmentMaps]]). A serving index (`IndexBuilder.open(serving =
-  * true)`) keeps these maps resident, already concatenated per term (the
-  * `SegmentReader` opened once); a query looks its terms up there and
+  * Every entry point runs on one executor spine ([[perSegment]]) over one
+  * per-segment (seg, term -> postings) RDD ([[segmentMaps]]). A serving
+  * index (`IndexBuilder.open(serving = true)`) keeps these maps
+  * resident, already concatenated per term (the `SegmentReader` opened
+  * once); a query looks its terms up there and
   * plans no Catalyst query for its kernel pass. Plain opens and
   * in-memory indexes scan the postings with the query's terms pushed
   * down and group the rows by segment.
   *
-  * [[topKQ]] runs its one job when called and merges the at most k rows
-  * per segment on the driver (`IndexSearcher.search`): the returned
-  * DataFrame is local. [[topKBatch]] does the same for many queries in
-  * one job. Unbounded results ([[scoredMatches]], [[collectQ]],
-  * [[matchingDocs]], [[docsBatch]]) stay lazy and distributed.
+  * [[topKBatch]] runs its one job when called and merges the at most k
+  * rows per query per task on the driver (`IndexSearcher.search`): the
+  * returned DataFrame is local; [[topKQ]] is a batch of one. Unbounded
+  * results ([[scoredMatches]], [[collectQ]], [[matchingDocs]],
+  * [[docsBatch]]) stay lazy and distributed.
   *
   * Scale: the only data movement is (a) the postings of the query's terms
   * (partition-pruned, predicate-pushed scan on the sorted `term` column,
-  * or none on a serving index), (b) k rows per segment for the final
-  * merge (or ONE count per segment on the count path). Executor work per
+  * or none on a serving index), (b) k rows per query per task for the
+  * final merge (or ONE count per task on the count path). Executor work per
   * segment is bounded by that segment's posting sizes; WAND/block-max
   * pruning skips non-competitive blocks without decoding them.
   */
@@ -670,28 +673,40 @@ object Searcher {
   private def topOf(hits: Array[(Long, Double)], k: Int): Array[(Long, Double)] =
     hits.sorted(HitOrder).take(k)
 
-  /** The driver's final merge of one query's hits, shared by [[topKQ]]
-    * and [[topKBatch]]: [[topOf]], then `row(docId, score, rank)` per hit,
-    * rank 1..k, the score cast after the merge ([[scoreOut]]).
-    */
-  private def mergedRows(hits: Array[(Long, Double)], k: Int, doubleMode: Boolean)(
-      row: (Long, Any, Long) => Row): Array[Row] =
-    topOf(hits, k).zipWithIndex.map { case ((d, s), i) => row(d, scoreOut(s, doubleMode), i + 1L) }
-
   /** A local DataFrame of already-ranked rows, built from a fixed schema
     * (no encoder derivation, no job on collect).
     */
   private def localResult(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
+  /** The one executor spine of every search entry point — the per-leaf
+    * loop of `IndexSearcher.search(CollectorManager)`: the per-segment
+    * source ([[segmentMaps]]) of the union of `plans`' terms and wide
+    * patterns, and `body` run once per task over the task's segments.
+    * The body sees each segment as a [[SegmentKernel.Segment]]: its term
+    * map, its tombstoned docIds, the index's filter-cache token and one
+    * [[Kernel.BlockCache]] shared by every query it runs there. A body
+    * that keeps state across its segments is the per-slice collector of
+    * top-k. `plans` must not be empty. Runs no job itself.
+    */
+  private def perSegment[A: ClassTag](index: Index, plans: Seq[Plan])(
+      body: Iterator[SegmentKernel.Segment] => Iterator[A]): RDD[A] = {
+    val live = index.live
+    val ftok = index.filterCacheToken
+    segmentMaps(index, plans.flatMap(_.terms).toSet, plans.flatMap(_.wide).distinct)
+      .mapPartitions(segs => body(segs.map { case (seg, byTerm) =>
+        new SegmentKernel.Segment(seg, byTerm, live.deleted(seg), ftok, new Kernel.BlockCache())
+      }))
+  }
+
   /** ALL matching (docId, score) rows as a distributed DataFrame — the
-    * per-segment kernel pass of [[topKQ]] with an unbounded hit budget
-    * and NO global merge (no TakeOrdered, no single-partition reduce).
-    * The heap never fills, so no pruning acts and scores are the
-    * exhaustive-evaluation scores; feeds operators that rank DOWNSTREAM
-    * of the match stream (e.g. the diversified per-key window), where a
-    * global top-N between kernel and window would both cap the stream
-    * and serialize it through one partition.
+    * per-segment top-k kernel with an unbounded hit budget and NO global
+    * merge (no TakeOrdered, no single-partition reduce). The heap never
+    * fills, so no pruning acts and scores are the exhaustive-evaluation
+    * scores; feeds operators that rank DOWNSTREAM of the match stream
+    * (e.g. the diversified per-key window), where a global top-N between
+    * kernel and window would both cap the stream and serialize it through
+    * one partition.
     */
   def scoredMatches(index: Index, query0: Query, doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
@@ -700,17 +715,11 @@ object Searcher {
       case None => return localResult(spark, Array.empty, scoredSchema(doubleMode))
       case Some(p) => p
     }
-    val scorers = pl.scorers
-    val q = pl.query
-    val live = index.live
-    val ftok = index.filterCacheToken
-    val dm = doubleMode
-    val rows = segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
-      SegmentKernel.run(q, byTerm, scorers, Int.MaxValue,
-          floatMode = !dm, deletedOrds = live.deleted(seg), seg = seg,
-          cacheToken = ftok)
-        .iterator.map { case (d, s) => scoredRow(d, s, dm) }
-    }
+    val (q, scorers, dm) = (pl.query, pl.scorers, doubleMode)
+    val rows = perSegment(index, Seq(pl))(_.flatMap { s =>
+      s.topK(q, scorers, Int.MaxValue, floatMode = !dm)
+        .iterator.map { case (d, sc) => scoredRow(d, sc, dm) }
+    })
     spark.createDataFrame(rows, scoredSchema(doubleMode))
   }
 
@@ -720,34 +729,42 @@ object Searcher {
   private def checkK(k: Int): Unit =
     if (k < 1) throw new IllegalArgumentException("k must be > 0")
 
-  /** Global top-k as (docId, score): plan, ONE job running the
-    * per-segment kernels, and a driver merge of their at most k rows per
-    * segment in (score desc, docId asc) order — `IndexSearcher.search`
-    * over `TopDocs.merge`. Each segment's kernel prunes against its own
-    * heap only. Outside double mode the score is cast to float after the
-    * merge. Returns a local DataFrame: the job has already run.
+  /** The top-k core of [[topKQ]] and [[topKBatch]]: ONE job in which each
+    * task runs every plan's kernel over each of its segments and keeps at
+    * most k hits per plan (the per-slice collector), then a per-plan
+    * driver merge ([[topOf]], `TopDocs.merge`). Each segment's kernel
+    * prunes against its own heap only. Returns each plan's merged hits in
+    * [[HitOrder]], in `plans` order; no job when `plans` is empty.
+    */
+  private def topKHits(index: Index, plans: Seq[Plan], k: Int,
+      doubleMode: Boolean): Array[Array[(Long, Double)]] = {
+    if (plans.isEmpty) return Array.empty
+    val fm = !doubleMode
+    // ship (query, scorers) once, addressed by position
+    val shipped: Array[(Query, Scorers)] = plans.map(p => (p.query, p.scorers)).toArray
+    val partial = perSegment(index, plans) { segs =>
+      val hits = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
+      segs.foreach(s => shipped.indices.foreach(i => hits(i) ++= s.topK(shipped(i)._1, shipped(i)._2, k, fm)))
+      hits.iterator.map(_.result()).zipWithIndex
+        .collect { case (hs, i) if hs.nonEmpty => i -> topOf(hs, k) }
+    }.collect()
+    val byPlan = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
+    partial.foreach { case (i, hs) => byPlan(i) ++= hs }
+    byPlan.map(b => topOf(b.result(), k))
+  }
+
+  /** Global top-k as (docId, score): [[topKBatch]] with one query — plan,
+    * the one-job top-k core, and the driver merge of the tasks' at most k
+    * hits in (score desc, docId asc) order (`IndexSearcher.search` over
+    * `TopDocs.merge`). Outside double mode the score is cast to float
+    * after the merge. Returns a local DataFrame: the job has already run.
     */
   def topKQ(index: Index, query0: Query, k: Int, doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
     checkK(k)
-    val spark = index.postings.sparkSession
-    val pl = plan(index, query0, doubleMode, sim) match {
-      case None => return localResult(spark, Array.empty, scoredSchema(doubleMode))
-      case Some(p) => p
-    }
-    val scorers = pl.scorers
-    val kk = k
-    val q = pl.query
-    val live = index.live
-    val ftok = index.filterCacheToken
-    val fm = !doubleMode
-    val hits = segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
-      SegmentKernel.run(q, byTerm, scorers, kk,
-          floatMode = fm, deletedOrds = live.deleted(seg), seg = seg,
-          cacheToken = ftok).iterator
-    }.collect()
-    localResult(spark, mergedRows(hits, k, doubleMode)((d, s, _) => Row(d, s)),
-      scoredSchema(doubleMode))
+    val hits = topKHits(index, plan(index, query0, doubleMode, sim).toSeq, k, doubleMode)
+    localResult(index.postings.sparkSession,
+      hits.flatten.map { case (d, s) => scoredRow(d, s, doubleMode) }, scoredSchema(doubleMode))
   }
 
   /** BATCH top-k: many queries against one index in ONE job — one
@@ -755,14 +772,13 @@ object Searcher {
     * throughput shape of a training-data mining run ("run 10k queries
     * over the corpus"), where per-query job scheduling would dominate.
     * All queries are planned driver-side (expansions, stats, scorers —
-    * warm caches amortise across the batch); the source holds the UNION
-    * of every query's terms and wide patterns ([[segmentMaps]]); each
-    * task runs every query's kernel over each of its segments and keeps
-    * at most k hits per query (the per-slice collector), and the driver
-    * merges those per query exactly like [[topKQ]] (`TopDocs.merge`).
-    * The job has one stage on a serving or seg-aligned index and ships
-    * at most tasks x queries x k hits; the result holds at most
-    * |queries| x k rows, a bound the caller chooses through k.
+    * warm caches amortise across the batch) and run through the same
+    * top-k core as [[topKQ]]: the source holds the UNION of every query's
+    * terms and wide patterns, each task keeps at most k hits per query,
+    * and the driver merges per query. The job has one stage on a serving
+    * or seg-aligned index and ships at most tasks x queries x k hits; the
+    * result holds at most |queries| x k rows, a bound the caller chooses
+    * through k.
     *
     * Returns a local DataFrame (qid, docId, score, rank), rank 1..k per
     * query, rows ordered by (qid, rank) with qids in Spark's string
@@ -772,52 +788,27 @@ object Searcher {
     * overflows — TooManyClauses propagates like the single-query path)
     * contribute no rows.
     *
-    * A task keeps one [[Kernel.BlockCache]] per segment: all its queries
-    * share the segment's decoded blocks (the hot terms of a batch recur
-    * in many queries), bounded by [[Kernel.BlockCache.MaxPostings]]
-    * postings and dropped after the segment.
+    * A task's queries share one [[Kernel.BlockCache]] per segment: the
+    * hot terms of a batch recur in many queries, and each of their
+    * position-less blocks is decoded once, bounded by
+    * [[Kernel.BlockCache.MaxPostings]] postings and dropped after the
+    * segment.
     */
   def topKBatch(index: Index, queries: Seq[(String, Query)], k: Int,
       doubleMode: Boolean = false,
       sim: SimilarityFactory = BM25Sim): DataFrame = {
     checkK(k)
-    val spark = index.postings.sparkSession
     // keep the first occurrence of each qid, like a map of named queries
     val planned: Seq[(String, Plan)] = queries.distinctBy(_._1).flatMap { case (qid, q0) =>
       plan(index, q0, doubleMode, sim).map(qid -> _)
     }
-    if (planned.isEmpty) return localResult(spark, Array.empty, batchSchema(doubleMode))
-    val allTerms = planned.flatMap(_._2.terms).toSet
-    val allWide = planned.flatMap(_._2.wide).distinct
-    val live = index.live
-    val ftok = index.filterCacheToken
-    val kk = k
-    val fm = !doubleMode
-    // ship (query, scorers) once, addressed by position; each task reuses
-    // a segment's byTerm map across all queries
-    val shipped: Array[(Query, Scorers)] = planned.map { case (_, p) => (p.query, p.scorers) }.toArray
-    val partial = segmentMaps(index, allTerms, allWide).mapPartitions { segs =>
-      val hits = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
-      segs.foreach { case (seg, byTerm) =>
-        val del = live.deleted(seg)
-        val blocks = new Kernel.BlockCache()
-        shipped.indices.foreach { i =>
-          val (q, scorers) = shipped(i)
-          hits(i) ++= SegmentKernel.run(q, byTerm, scorers, kk, floatMode = fm,
-            deletedOrds = del, seg = seg, cacheToken = ftok, blocks = blocks)
-        }
-      }
-      hits.iterator.map(_.result()).zipWithIndex
-        .collect { case (hs, i) if hs.nonEmpty => i -> topOf(hs, kk) }
-    }.collect()
-    val byQuery = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
-    partial.foreach { case (i, hs) => byQuery(i) ++= hs }
+    val hits = topKHits(index, planned.map(_._2), k, doubleMode)
     val qids = planned.map(_._1).toArray
     val utf8 = qids.map(org.apache.spark.unsafe.types.UTF8String.fromString)
     val rows = qids.indices.sortWith((a, b) => utf8(a).binaryCompare(utf8(b)) < 0).flatMap { i =>
-      mergedRows(byQuery(i).result(), k, doubleMode)((d, s, r) => Row(qids(i), d, s, r))
+      hits(i).zipWithIndex.map { case ((d, s), r) => Row(qids(i), d, scoreOut(s, doubleMode), r + 1L) }
     }
-    localResult(spark, rows.toArray, batchSchema(doubleMode))
+    localResult(index.postings.sparkSession, rows.toArray, batchSchema(doubleMode))
   }
 
   /** Open collector SPI — the `Collector` / `LeafCollector` pair of the
@@ -827,8 +818,8 @@ object Searcher {
     * (docId, score) in ascending docId order, and `finish()` emits that
     * segment's partial rows; the caller reduces the resulting Dataset
     * (Spark's partial/final aggregation IS the reference's
-    * `CollectorManager.reduce`). Top-k, count, and docs stay on their
-    * specialised kernel paths; this is the extension point for
+    * `CollectorManager.reduce`). It runs on the same per-segment spine
+    * as top-k, count and docs; this is the extension point for
     * user-defined collection (histograms, per-segment stats, early
     * termination via [[LeafCollector.competitive]]).
     */
@@ -859,63 +850,56 @@ object Searcher {
       doubleMode: Boolean = true,
       sim: SimilarityFactory = BM25Sim): org.apache.spark.sql.Dataset[A] = {
     val spark = index.postings.sparkSession
-    import spark.implicits._
     val pl = plan(index, query0, doubleMode, sim) match {
       case None => return spark.emptyDataset[A]
       case Some(p) => p
     }
-    val scorers = pl.scorers
-    val q = pl.query
-    val live = index.live
-    val ftok = index.filterCacheToken
-    val fm = !doubleMode
+    val (q, scorers, fm) = (pl.query, pl.scorers, !doubleMode)
     val enc = implicitly[org.apache.spark.sql.Encoder[A]]
-    spark.createDataset(segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
-      SegmentKernel.collectWith(q, byTerm, scorers,
-        factory.newLeaf(seg), fm, live.deleted(seg), seg, ftok)
-    }(enc.clsTag))
+    spark.createDataset(perSegment(index, Seq(pl))(_.flatMap { s =>
+      SegmentKernel.collectWith(s.cursor(q, scorers), factory.newLeaf(s.seg), fm)
+    })(enc.clsTag))
   }
 
-  /** Count matching docs — no heap, no scoring, no global sort; the
-    * kernel emits ONE partial count per segment and the job's result
-    * fold sums them (`core/search/TotalHitCountCollector.java:27`,
+  /** Every unscored match of each plan as (position in `plans`, docId):
+    * the per-segment docs stream of [[matchingDocs]], [[countQ]] and
+    * [[docsBatch]].
+    */
+  private def docStream(index: Index, plans: Seq[Plan]): RDD[(Int, Long)] = {
+    val shipped: Array[(Query, Scorers)] = plans.map(p => (p.query, p.scorers)).toArray
+    perSegment(index, plans)(_.flatMap { s =>
+      shipped.indices.iterator.flatMap { i =>
+        s.cursor(shipped(i)._1, shipped(i)._2).fold(Iterator.empty[Long])(Kernel.docsAll)
+          .map(d => (i, d))
+      }
+    })
+  }
+
+  /** The plan of an unscored (count / docs) execution. */
+  private def docsPlan(index: Index, query0: Query): Option[Plan] =
+    plan(index, query0, doubleMode = true, scoring = false)
+
+  /** Count matching docs — no heap, no scoring, no global sort: the
+    * docs stream of [[matchingDocs]], counted per task and summed by the
+    * job (`core/search/TotalHitCountCollector.java:27`,
     * `IndexSearcher.count`).
     */
   def count(index: Index, queryStr: String): Long =
     countQ(index, QueryParser.parse(queryStr))
 
-  def countQ(index: Index, query0: Query): Long = {
-    val pl = plan(index, query0, doubleMode = true, scoring = false) match {
-      case None => return 0L
-      case Some(p) => p
-    }
-    val scorers = pl.scorers
-    val q = pl.query
-    val live = index.live
-    val ftok = index.filterCacheToken
-    segmentMaps(index, pl.terms, pl.wide).map { case (seg, byTerm) =>
-      SegmentKernel.count(q, byTerm, scorers, live.deleted(seg), seg, cacheToken = ftok)
-    }.fold(0L)(_ + _)
-  }
+  def countQ(index: Index, query0: Query): Long =
+    docsPlan(index, query0).fold(0L)(p => docStream(index, Seq(p)).count())
 
   /** Matching docIds (no scoring, no heap, no global score sort) — the
-    * docs-only execution path.
+    * body of [[docsBatch]] for one query, without the qid column.
     */
   def matchingDocs(index: Index, query0: Query): org.apache.spark.sql.Dataset[java.lang.Long] = {
     val spark = index.postings.sparkSession
     import spark.implicits._
-    val pl = plan(index, query0, doubleMode = true, scoring = false) match {
-      case None => return spark.emptyDataset[java.lang.Long]
-      case Some(p) => p
+    docsPlan(index, query0) match {
+      case None => spark.emptyDataset[java.lang.Long]
+      case Some(p) => spark.createDataset(docStream(index, Seq(p)).map(m => java.lang.Long.valueOf(m._2)))
     }
-    val scorers = pl.scorers
-    val q = pl.query
-    val live = index.live
-    val ftok = index.filterCacheToken
-    spark.createDataset(segmentMaps(index, pl.terms, pl.wide).flatMap { case (seg, byTerm) =>
-      SegmentKernel.docs(q, byTerm, scorers, live.deleted(seg), seg, cacheToken = ftok)
-        .map(java.lang.Long.valueOf)
-    })
   }
 
   /** BATCH all-matching-docs: many queries' full match sets in ONE
@@ -937,23 +921,13 @@ object Searcher {
       .collect { case (id, qs) if qs.distinct.size > 1 => id }
     require(dup.isEmpty, s"conflicting queries registered under ids: ${dup.toSeq.sorted.mkString(", ")}")
     val planned: Seq[(String, Plan)] = queries.distinctBy(_._1).flatMap { case (qid, q0) =>
-      plan(index, q0, doubleMode = true, scoring = false).map(qid -> _)
+      docsPlan(index, q0).map(qid -> _)
     }
     if (planned.isEmpty)
       return Seq.empty[(String, Long)].toDF("qid", "docId")
-    val allTerms = planned.flatMap(_._2.terms).toSet
-    val allWide = planned.flatMap(_._2.wide).distinct
-    val live = index.live
-    val ftok = index.filterCacheToken
-    val shipped: Seq[(String, Query, Scorers)] =
-      planned.map { case (qid, p) => (qid, p.query, p.scorers) }
-    spark.createDataset(segmentMaps(index, allTerms, allWide).flatMap { case (seg, byTerm) =>
-      val del = live.deleted(seg)
-      shipped.iterator.flatMap { case (qid, q, scorers) =>
-        SegmentKernel.docs(q, byTerm, scorers, del, seg, cacheToken = ftok)
-          .iterator.map(d => (qid, d))
-      }
-    }).toDF("qid", "docId")
+    val qids = planned.map(_._1).toArray
+    spark.createDataset(docStream(index, planned.map(_._2)).map { case (i, d) => (qids(i), d) })
+      .toDF("qid", "docId")
   }
 }
 
@@ -1038,13 +1012,6 @@ object FilterCache {
 object SegmentKernel {
   import Kernel._
 
-  /** Wrap the root with the segment's tombstone exclusion (liveDocs,
-    * `core/search/Weight.java:294-300` acceptDocs).
-    */
-  private def withLiveDocs(c: DocCursor, deletedOrds: Array[Long]): DocCursor =
-    if (deletedOrds == null || deletedOrds.isEmpty) c
-    else new ExclusionCursor(c, new SortedDocsCursor(deletedOrds))
-
   /** Restrict every DocSetQ to the segment's docId range — a cursor in
     * segment S must never emit docs of other segments (they would appear
     * once per segment as duplicate zero-score hits).
@@ -1072,11 +1039,27 @@ object SegmentKernel {
     case _ => false
   }
 
+  /** One segment as an executor body sees it: its term map, its sorted
+    * tombstoned docIds (null when none), the index's filter-cache token
+    * and the [[BlockCache]] every query run over it shares. Built inside
+    * the task, one per segment ([[Searcher]]'s per-segment spine).
+    */
+  private[exec] final class Segment(val seg: Int, byTerm: Map[String, PostingList],
+      deletedOrds: Array[Long], cacheToken: String, blocks: BlockCache) {
+    def topK(q: Query, scorers: Searcher.Scorers, k: Int, floatMode: Boolean): Array[(Long, Double)] =
+      run(q, byTerm, scorers, k, floatMode, deletedOrds, seg, cacheToken, blocks)
+
+    def cursor(q: Query, scorers: Searcher.Scorers): Option[DocCursor] =
+      cursorFor(q, byTerm, scorers, deletedOrds, seg, cacheToken, blocks)
+  }
+
   /** Top-k of `q0` over one segment's term map, at most `k` hits in
     * (score desc, docId asc) order. `blocks`, when given, is the
     * segment's [[Kernel.BlockCache]]: the caller shares it across every
     * query it runs over this same `byTerm`, so each position-less block
     * is decoded once (bounded by [[Kernel.BlockCache.MaxPostings]]).
+    * The specialised root shapes below hold no DocSetQ and no cacheable
+    * subquery; every other root takes [[cursorFor]].
     */
   def run(
       q0: Query,
@@ -1089,8 +1072,6 @@ object SegmentKernel {
       cacheToken: String = null,
       blocks: BlockCache = null
   ): Array[(Long, Double)] = {
-    val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
-    val cacheCtx = if (cacheToken != null && seg >= 0) s"$cacheToken|$seg|" else null
     val hasDeletes = deletedOrds != null && deletedOrds.nonEmpty
 
     def termCursor(t: String, needPos: Boolean): Option[TermCursor] =
@@ -1098,13 +1079,13 @@ object SegmentKernel {
 
     // physical strategy selection on the rewritten root; segments with
     // deletes route through the generic cursor path with the liveDocs wrap
-    q match {
+    q0 match {
       case TermQ(t) if !hasDeletes =>
         termCursor(t, needPos = false) match {
           case Some(c) => termTopK(c, k, floatMode)
           case None => Array.empty
         }
-      case BoolQ(must, Nil, Nil, _, Nil) if !hasDeletes && must.nonEmpty &&
+      case BoolQ(must, Nil, Nil, msm, Nil) if !hasDeletes && msm <= 0 && must.nonEmpty &&
           must.forall(_.isInstanceOf[TermQ]) =>
         val ts = must.collect { case TermQ(t) => t }
         if (ts.exists(t => !byTerm.contains(t))) Array.empty
@@ -1129,77 +1110,56 @@ object SegmentKernel {
         val cs = should.collect { case TermQ(t) => termCursor(t, needPos = false) }.flatten
         if (cs.isEmpty) Array.empty else taatTopK(cs.toArray, k, msm, floatMode)
       case other =>
-        buildCursor(other, byTerm, scorers, cacheCtx, blocks) match {
-          case Some(c) => collectAll(withLiveDocs(c, deletedOrds), k, floatMode)
+        cursorFor(other, byTerm, scorers, deletedOrds, seg, cacheToken, blocks) match {
+          case Some(c) => collectAll(c, k, floatMode)
           case None => Array.empty
         }
     }
   }
 
-  /** Drive a user LeafCollector over every match of `q0` in this
-    * segment — the per-leaf scoring loop of `Weight.bulkScorer`
-    * feeding `LeafCollector.collect`. Ascending docId order; honors
-    * [[Searcher.LeafCollector.competitive]] for early termination.
+  /** The root cursor of `q0` over one segment, or None when it cannot
+    * match there: DocSetQs scoped to the segment, non-scoring subqueries
+    * routed through the [[FilterCache]] under the segment's cache
+    * context, and the tombstoned docs excluded (liveDocs,
+    * `core/search/Weight.java:294-300` acceptDocs). Matches stream in
+    * ascending docId order.
+    */
+  def cursorFor(
+      q0: Query,
+      byTerm: Map[String, PostingList],
+      scorers: Searcher.Scorers,
+      deletedOrds: Array[Long],
+      seg: Int,
+      cacheToken: String,
+      blocks: BlockCache
+  ): Option[DocCursor] = {
+    val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
+    val cacheCtx = if (cacheToken != null && seg >= 0) s"$cacheToken|$seg|" else null
+    buildCursor(q, byTerm, scorers, cacheCtx, blocks).map { c =>
+      if (deletedOrds == null || deletedOrds.isEmpty) c
+      else new ExclusionCursor(c, new SortedDocsCursor(deletedOrds))
+    }
+  }
+
+  /** Drive a user LeafCollector over every match of a segment's root
+    * cursor ([[cursorFor]]) — the per-leaf scoring loop of
+    * `Weight.bulkScorer` feeding `LeafCollector.collect`. Ascending docId
+    * order; honors [[Searcher.LeafCollector.competitive]] for early
+    * termination. A segment with no cursor still emits `finish()`.
     */
   def collectWith[A](
-      q0: Query,
-      byTerm: Map[String, PostingList],
-      scorers: Searcher.Scorers,
+      cursor: Option[DocCursor],
       leaf: Searcher.LeafCollector[A],
-      floatMode: Boolean = false,
-      deletedOrds: Array[Long] = null,
-      seg: Int = -1,
-      cacheToken: String = null
+      floatMode: Boolean
   ): Iterator[A] = {
-    val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
-    val cacheCtx = if (cacheToken != null && seg >= 0) s"$cacheToken|$seg|" else null
-    buildCursor(q, byTerm, scorers, cacheCtx) match {
-      case None => leaf.finish()
-      case Some(c0) =>
-        val c = withLiveDocs(c0, deletedOrds)
-        var d = c.nextDoc()
-        while (d != NoMoreDocs && leaf.competitive) {
-          leaf.collect(d, fin(c.score(), floatMode))
-          d = c.nextDoc()
-        }
-        leaf.finish()
+    cursor.foreach { c =>
+      var d = c.nextDoc()
+      while (d != NoMoreDocs && leaf.competitive) {
+        leaf.collect(d, fin(c.score(), floatMode))
+        d = c.nextDoc()
+      }
     }
-  }
-
-  /** Count matches — cursors only, no heap/scoring
-    * (`core/search/TotalHitCountCollector.java:27`).
-    */
-  def count(
-      q0: Query,
-      byTerm: Map[String, PostingList],
-      scorers: Searcher.Scorers,
-      deletedOrds: Array[Long] = null,
-      seg: Int = -1,
-      cacheToken: String = null
-  ): Long = {
-    val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
-    val cacheCtx = if (cacheToken != null && seg >= 0) s"$cacheToken|$seg|" else null
-    buildCursor(q, byTerm, scorers, cacheCtx) match {
-      case Some(c) => countAll(withLiveDocs(c, deletedOrds))
-      case None => 0L
-    }
-  }
-
-  /** Matching docIds — cursors only, no heap/scoring. */
-  def docs(
-      q0: Query,
-      byTerm: Map[String, PostingList],
-      scorers: Searcher.Scorers,
-      deletedOrds: Array[Long] = null,
-      seg: Int = -1,
-      cacheToken: String = null
-  ): Iterator[Long] = {
-    val q = if (seg >= 0 && hasDocSet(q0)) scopeDocSets(q0, seg) else q0
-    val cacheCtx = if (cacheToken != null && seg >= 0) s"$cacheToken|$seg|" else null
-    buildCursor(q, byTerm, scorers, cacheCtx) match {
-      case Some(c) => docsAll(withLiveDocs(c, deletedOrds))
-      case None => Iterator.empty
-    }
+    leaf.finish()
   }
 
   /** Cursor for a NON-SCORING subquery routed through [[FilterCache]]
@@ -1353,8 +1313,11 @@ object SegmentKernel {
       val required: Seq[DocCursor] =
         mc.flatten ++ fc.flatten.map(c => new NonScoringCursor(c))
 
+      // fewer SHOULD clauses can match here than minShouldMatch: no match,
+      // anchored or not (`BooleanScorerSupplier`)
       val positive: Option[DocCursor] =
-        if (required.nonEmpty) {
+        if (sc.size < msm) None
+        else if (required.nonEmpty) {
           val conj: DocCursor =
             if (required.size == 1) required.head else new ConjunctionCursor(required.toArray)
           if (sc.isEmpty) Some(conj)
@@ -1363,8 +1326,7 @@ object SegmentKernel {
               if (sc.size == 1) sc.head else new DisjunctionCursor(sc.toArray, 1)))
           else Some(new ConjunctionCursor(Array(conj, new DisjunctionCursor(sc.toArray, msm))))
         } else if (sc.nonEmpty) {
-          if (sc.size < math.max(msm, 1)) None
-          else if (sc.size == 1) Some(sc.head)
+          if (sc.size == 1) Some(sc.head)
           else Some(new DisjunctionCursor(sc.toArray, math.max(msm, 1)))
         } else None
 

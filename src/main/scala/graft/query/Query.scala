@@ -405,6 +405,9 @@ object Query {
         val msm2 = math.max(msm, if (m2.isEmpty && f2.isEmpty && s2.nonEmpty) 1 else 0)
         if (m2.isEmpty && s2.isEmpty && f2.isEmpty && n2.isEmpty) MatchNone // empty boolean (:270-276)
         else if (m2.isEmpty && s2.isEmpty && f2.isEmpty) MatchNone // pure negation never matches
+        // unsatisfiable minShouldMatch, anchored or not — checked before
+        // any unwrap drops the SHOULD requirement
+        else if (msm2 > s2.size) MatchNone
         else if (m2.isEmpty && s2.isEmpty) {
           // filter-only boolean: matches, scores 0 (non-scoring context)
           if (n2.isEmpty && f2.size == 1) ConstScoreQ(f2.head, 0f)
@@ -412,7 +415,6 @@ object Query {
         }
         else if (m2.size == 1 && s2.isEmpty && n2.isEmpty && f2.isEmpty) m2.head // single-clause unwrap (:280-295)
         else if (m2.isEmpty && s2.size == 1 && n2.isEmpty && f2.isEmpty && msm2 <= 1) s2.head
-        else if (s2.nonEmpty && msm2 > s2.size) MatchNone // unsatisfiable minShouldMatch
         else BoolQ(m2, s2, n2, msm2, f2)
       }
     case PhraseQ(Seq(t), _) => TermQ(t)

@@ -124,6 +124,30 @@ class MergeSpec extends SparkTest {
     assert(IndexMerger.tieredMerge(spark, dir).isEmpty)
   }
 
+  test("a merge over a manifest that under-counts its docs fails before its commit") {
+    val dir = java.nio.file.Files.createTempDirectory("graftmergebadcount").toString
+    val built = IndexBuilder.buildPersistent(spark,
+      Datagen.toInputDocs(Datagen.corpus(spark, 200, seed = 31L), 3), dir)
+    // lower one segment's docs tally: its last doc's new ordinal would
+    // land in the next segment's range
+    val m = built.head
+    val f = new java.io.File(s"$dir/manifest/seg_${m.seg}.json").toPath
+    val json = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val (exact, low) = (s""""docs":${m.docs},""", s""""docs":${m.docs - 1},""")
+    assert(json.contains(exact))
+    java.nio.file.Files.write(f, json.replace(exact, low).getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+    def manifestFiles() = new java.io.File(s"$dir/manifest").listFiles()
+      .filter(x => x.getName.startsWith("seg_") && x.getName.endsWith(".json"))
+      .map(x => x.getName -> new String(java.nio.file.Files.readAllBytes(x.toPath), "UTF-8"))
+      .sorted.toSeq
+    val before = manifestFiles()
+    val err = intercept[Exception](IndexMerger.mergeSegments(spark, dir, built.map(_.seg)))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => e.getMessage != null && e.getMessage.contains("kept count")), err.toString)
+    assert(manifestFiles() == before, "a failed merge must leave every manifest as it was")
+  }
+
   test("tiered merge: bounded segment count, deletes dropped, results identical to fresh build") {
     val dir = java.nio.file.Files.createTempDirectory("grafttiered").toString
     val src = Datagen.corpus(spark, 1200, seed = 41L)
@@ -164,11 +188,18 @@ class MergeSpec extends SparkTest {
       "wide count must exclude tombstoned docs")
 
     // compact: 24 mini-segments -> bounded count; deletes rewritten out
-    IndexMerger.tieredMerge(spark, dir, segsPerTier = 8)
+    val mergedSegs = IndexMerger.tieredMerge(spark, dir, segsPerTier = 8)
     val manifests = manifestNames().length
     assert(manifests <= 10, s"segment count not bounded: $manifests")
     val idx2 = IndexBuilder.open(spark, dir)
     assert(idx2.live.isEmpty, "merge must purge tombstoned docs")
+    // each merged segment numbers its kept docs densely: ordinals 0 until kept
+    assert(mergedSegs.nonEmpty)
+    val idsBySeg = idx2.docmeta.select($"docId").as[Long].collect().groupBy(IndexBuilder.segOf)
+    mergedSegs.foreach { m =>
+      assert(idsBySeg(m.seg).map(IndexBuilder.ordOf).sorted.toSeq == (0L until m.docs).toSeq,
+        s"merged seg ${m.seg}: ordinals are not 0 until ${m.docs}")
+    }
     assert(idx2.docmeta.count() == 1200 - nVictims)
     assert(Searcher.count(idx2, "needle_0") == 0)
     assert(CheckIndex.run(idx2).isEmpty)

@@ -131,6 +131,26 @@ class RandomQuerySpec extends SparkTest {
       // against the widened generator; earlier-round seed notes predate it)
       val rnd = new scala.util.Random(sys.env.getOrElse("GRAFT_SEED", "4242").toInt + numSegments)
       val depth = sys.env.getOrElse("GRAFT_DEPTH", "2").toInt
+      // anchored minShouldMatch: a segment where fewer SHOULD clauses can
+      // match than minShouldMatch matches nothing (the generator only
+      // sets msm on unanchored booleans)
+      val anchoredMsm: Seq[Query] = Seq(
+        BoolQ(must = Seq(TermQ("def")), should = Seq(TermQ("nonexistent_a")), minShouldMatch = 1),
+        BoolQ(must = Seq(TermQ("def"), TermQ("class")),
+          should = Seq(TermQ("nonexistent_a"), TermQ("nonexistent_b")), minShouldMatch = 1),
+        BoolQ(must = Seq(TermQ("def")), should = Seq(TermQ("needle_0"), TermQ("nonexistent_a")),
+          minShouldMatch = 1),
+        BoolQ(must = Seq(TermQ("def"), TermQ("class")), should = Seq(PrefixQ("zzz")), minShouldMatch = 1),
+        BoolQ(must = Seq(TermQ("def")), should = Seq(PrefixQ("zzz")), minShouldMatch = 1))
+      anchoredMsm.foreach { q =>
+        val expected = NaiveOracle.search(oracleDocs, q, 10)
+        val got = Searcher.topKQ(index, q, 10).as[(Long, Float)].collect().toSeq
+        assert(got == expected, s"anchored msm [$q]:\n got=$got\n exp=$expected")
+        val expectedDocs = NaiveOracle.matchingDocs(oracleDocs, q)
+        assert(Searcher.countQ(index, q) == expectedDocs.size, s"anchored msm count [$q]")
+        assert(Searcher.matchingDocs(index, q).collect().map(_.longValue).sorted.toSeq == expectedDocs,
+          s"anchored msm docs [$q]")
+      }
       (1 to 60).foreach { i =>
         val q = randomQuery(rnd, depth)
         val expected = NaiveOracle.search(oracleDocs, q, 10)

@@ -112,15 +112,44 @@ class ResidentReaderSpec extends SparkTest {
     Query.withMaxClauseCount(3)(assertSame(live, wide ++ fixed))
   }
 
+  /** Emits every (docId, score) a segment's leaf sees. */
+  private val passThrough = new Searcher.CollectorFactory[(Long, Double)] {
+    def newLeaf(seg: Int): Searcher.LeafCollector[(Long, Double)] =
+      new Searcher.LeafCollector[(Long, Double)] {
+        private val hits = Seq.newBuilder[(Long, Double)]
+        def collect(docId: Long, score: Double): Unit = hits += ((docId, score))
+        def finish(): Iterator[(Long, Double)] = hits.result().iterator
+      }
+  }
+
   test("a warm serving topKQ runs one job of one stage; results are local") {
     assert(serving.reader.isDefined && serving.segAligned)
     val q = BoolQ(should = Seq(TermQ("def"), TermQ("class")), minShouldMatch = 1)
     Searcher.topKQ(serving, q, 10) // builds the reader, warms the stats cache
-    val (rows, trace) = JobProbe(spark)(Searcher.topKQ(serving, q, 10).collect())
-    assert(rows.length == 10)
-    assert(trace.jobs.size == 1 && trace.stages == 1,
-      s"expected one single-stage job, got ${trace.jobs.map(_.map(_.name))}")
-    assert(trace.shuffleBytes == 0L)
+    val named = Seq("a" -> q, "b" -> (TermQ("return"): Query))
+    // match counts read off the source rows, not the engine
+    val termSets = Datagen.corpus(spark, 900, seed = 23L, numPartitions = 3).collect()
+      .map(r => graft.analysis.CodeAnalyzer.tokenize(r.content).map(_.term).toSet)
+    def matching(ts: String*): Int = termSets.count(s => ts.exists(s.contains))
+    val nq = matching("def", "class")
+    assert(nq > 10)
+    // every entry point runs on the same per-segment spine; (name, run,
+    // expected row count)
+    val entries: Seq[(String, () => Int, Int)] = Seq(
+      ("topKQ", () => Searcher.topKQ(serving, q, 10).collect().length, 10),
+      ("countQ", () => Searcher.countQ(serving, q).toInt, nq),
+      ("matchingDocs", () => Searcher.matchingDocs(serving, q).collect().length, nq),
+      ("docsBatch", () => Searcher.docsBatch(serving, named).collect().length, nq + matching("return")),
+      ("scoredMatches", () => Searcher.scoredMatches(serving, q).collect().length, nq),
+      ("collectQ", () => Searcher.collectQ(serving, q, passThrough).collect().length, nq))
+    entries.foreach { case (name, run, expected) =>
+      run() // warms the stats cache
+      val (n, trace) = JobProbe(spark)(run())
+      assert(n == expected, s"$name: $n rows, expected $expected")
+      assert(trace.jobs.size == 1 && trace.stages == 1,
+        s"$name: expected one single-stage job, got ${trace.jobs.map(_.map(_.name))}")
+      assert(trace.shuffleBytes == 0L, name)
+    }
     val r = serving.reader.get
     assert(spark.sparkContext.getRDDStorageInfo.exists(i =>
       i.id == r.id && i.numCachedPartitions == i.numPartitions), "reader is not resident")
