@@ -3,6 +3,7 @@ package graft.exec
 import graft.build.Index
 import graft.model._
 import graft.query._
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -595,14 +596,7 @@ object Searcher {
   private def segmentMaps(
       index: Index, terms: Set[String], wide: Seq[WideTermSetQ]): RDD[(Int, Map[String, PostingList])] =
     index.reader match {
-      case Some(reader) =>
-        reader.flatMap { case (seg, all) =>
-          val b = Map.newBuilder[String, PostingList]
-          terms.foreach(t => all.get(t).foreach(pl => b += t -> pl))
-          if (wide.nonEmpty) all.foreach { e => if (wide.exists(_.matches(e._1))) b += e }
-          val byTerm = b.result()
-          if (byTerm.isEmpty) None else Some(seg -> byTerm)
-        }
+      case Some(reader) => reader.flatMap(new ReaderLookup(terms, wide))
       case None =>
         val spark = index.postings.sparkSession
         import spark.implicits._
@@ -626,9 +620,7 @@ object Searcher {
     */
   private[graft] def bySegment(rows: RDD[PostingList], aligned: Boolean,
       partitions: Int): RDD[(Int, Map[String, PostingList])] =
-    if (aligned)
-      rows.mapPartitions(it => it.toSeq.groupBy(_.seg).iterator
-        .map { case (seg, rs) => seg -> TermMap.of(rs) }, preservesPartitioning = true)
+    if (aligned) rows.mapPartitions(new GroupBySegment, preservesPartitioning = true)
     else rows.groupBy((pl: PostingList) => pl.seg, partitions).mapValues(TermMap.of)
 
   /** Result schema of [[topKQ]] and [[scoredMatches]]: the columns
@@ -687,16 +679,79 @@ object Searcher {
     * map, its tombstoned docIds, the index's filter-cache token and one
     * [[Kernel.BlockCache]] shared by every query it runs there. A body
     * that keeps state across its segments is the per-slice collector of
-    * top-k. `plans` must not be empty. Runs no job itself.
+    * top-k. `plans` must not be empty. Runs no job itself; the top-k and
+    * count jobs on it go through [[runJob]].
+    *
+    * The functions the spine hands to Spark are named classes, not
+    * lambdas: Spark's closure cleaner parses the defining class's
+    * bytecode and trial-serializes every lambda it is given on the
+    * driver, and it passes named functions through untouched.
     */
   private def perSegment[A: ClassTag](index: Index, plans: Seq[Plan])(
-      body: Iterator[SegmentKernel.Segment] => Iterator[A]): RDD[A] = {
-    val live = index.live
-    val ftok = index.filterCacheToken
+      body: Iterator[SegmentKernel.Segment] => Iterator[A]): RDD[A] =
     segmentMaps(index, plans.flatMap(_.terms).toSet, plans.flatMap(_.wide).distinct)
-      .mapPartitions(segs => body(segs.map { case (seg, byTerm) =>
+      .mapPartitions(new SegmentTask(index.live, index.filterCacheToken, body))
+
+  /** [[segmentMaps]]' lookup of a query's terms and wide patterns in one
+    * segment's resident term map; None when the segment holds none.
+    */
+  private final class ReaderLookup(terms: Set[String], wide: Seq[WideTermSetQ])
+      extends (((Int, Map[String, PostingList])) => Option[(Int, Map[String, PostingList])])
+      with Serializable {
+    def apply(segMap: (Int, Map[String, PostingList])): Option[(Int, Map[String, PostingList])] = {
+      val (seg, all) = segMap
+      val b = Map.newBuilder[String, PostingList]
+      terms.foreach(t => all.get(t).foreach(pl => b += t -> pl))
+      if (wide.nonEmpty) all.foreach { e => if (wide.exists(_.matches(e._1))) b += e }
+      val byTerm = b.result()
+      if (byTerm.isEmpty) None else Some(seg -> byTerm)
+    }
+  }
+
+  /** [[bySegment]]'s partition-local grouping: one [[TermMap]] per
+    * segment of the partition's posting rows.
+    */
+  private final class GroupBySegment
+      extends (Iterator[PostingList] => Iterator[(Int, Map[String, PostingList])]) with Serializable {
+    def apply(rows: Iterator[PostingList]): Iterator[(Int, Map[String, PostingList])] =
+      rows.toSeq.groupBy(_.seg).iterator.map { case (seg, rs) => seg -> TermMap.of(rs) }
+  }
+
+  /** [[perSegment]]'s task: each (seg, term map) of the partition as a
+    * [[SegmentKernel.Segment]], fed to `body`.
+    */
+  private final class SegmentTask[A](live: graft.build.LiveDocs, ftok: String,
+      body: Iterator[SegmentKernel.Segment] => Iterator[A])
+      extends (Iterator[(Int, Map[String, PostingList])] => Iterator[A]) with Serializable {
+    def apply(segs: Iterator[(Int, Map[String, PostingList])]): Iterator[A] =
+      body(segs.map { case (seg, byTerm) =>
         new SegmentKernel.Segment(seg, byTerm, live.deleted(seg), ftok, new Kernel.BlockCache())
-      }))
+      })
+  }
+
+  /** One job of `func` over every partition of `rdd`: the per-partition
+    * results in partition order (`RDD.collect`/`count` with a named
+    * function, see [[perSegment]]).
+    */
+  private def runJob[T, U: ClassTag](rdd: RDD[T], func: (TaskContext, Iterator[T]) => U): Array[U] = {
+    val out = new Array[U](rdd.partitions.length)
+    rdd.sparkContext.runJob(rdd, func, out.indices, (i: Int, u: U) => out(i) = u)
+    out
+  }
+
+  /** Job function: a partition's rows as an array. */
+  private final class PartitionRows[T: ClassTag]
+      extends ((TaskContext, Iterator[T]) => Array[T]) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[T]): Array[T] = rows.toArray
+  }
+
+  /** Job function: a partition's row count. */
+  private object PartitionCount extends ((TaskContext, Iterator[Any]) => Long) with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[Any]): Long = {
+      var n = 0L
+      while (rows.hasNext) { rows.next(); n += 1 }
+      n
+    }
   }
 
   /** ALL matching (docId, score) rows as a distributed DataFrame — the
@@ -747,9 +802,10 @@ object Searcher {
       segs.foreach(s => shipped.indices.foreach(i => hits(i) ++= s.topK(shipped(i)._1, shipped(i)._2, k, fm)))
       hits.iterator.map(_.result()).zipWithIndex
         .collect { case (hs, i) if hs.nonEmpty => i -> topOf(hs, k) }
-    }.collect()
+    }
     val byPlan = Array.fill(shipped.length)(Array.newBuilder[(Long, Double)])
-    partial.foreach { case (i, hs) => byPlan(i) ++= hs }
+    runJob(partial, new PartitionRows[(Int, Array[(Long, Double)])])
+      .foreach(_.foreach { case (i, hs) => byPlan(i) ++= hs })
     byPlan.map(b => topOf(b.result(), k))
   }
 
@@ -843,7 +899,10 @@ object Searcher {
     * partial rows out — reduce them with ordinary Dataset aggregation.
     * Scores are double-precision BM25 (doubleMode) unless `sim`/mode
     * says otherwise; matches stream in ascending docId order per
-    * segment, tombstones excluded.
+    * segment, tombstones excluded. `factory` is serialized with the
+    * task: one that does not serialize fails the returned Dataset's
+    * first action with `SparkException` "Task not serializable", not
+    * this call.
     */
   def collectQ[A: org.apache.spark.sql.Encoder](
       index: Index, query0: Query, factory: CollectorFactory[A],
@@ -861,16 +920,16 @@ object Searcher {
     })(enc.clsTag))
   }
 
-  /** Every unscored match of each plan as (position in `plans`, docId):
-    * the per-segment docs stream of [[matchingDocs]], [[countQ]] and
-    * [[docsBatch]].
+  /** Every unscored match of each plan as `out(position in plans,
+    * docId)`: the per-segment docs stream of [[matchingDocs]], [[countQ]]
+    * and [[docsBatch]].
     */
-  private def docStream(index: Index, plans: Seq[Plan]): RDD[(Int, Long)] = {
+  private def docStream[A: ClassTag](index: Index, plans: Seq[Plan])(out: (Int, Long) => A): RDD[A] = {
     val shipped: Array[(Query, Scorers)] = plans.map(p => (p.query, p.scorers)).toArray
     perSegment(index, plans)(_.flatMap { s =>
       shipped.indices.iterator.flatMap { i =>
         s.cursor(shipped(i)._1, shipped(i)._2).fold(Iterator.empty[Long])(Kernel.docsAll)
-          .map(d => (i, d))
+          .map(d => out(i, d))
       }
     })
   }
@@ -888,7 +947,9 @@ object Searcher {
     countQ(index, QueryParser.parse(queryStr))
 
   def countQ(index: Index, query0: Query): Long =
-    docsPlan(index, query0).fold(0L)(p => docStream(index, Seq(p)).count())
+    docsPlan(index, query0).fold(0L) { p =>
+      runJob(docStream(index, Seq(p))((_, d) => d), PartitionCount).sum
+    }
 
   /** Matching docIds (no scoring, no heap, no global score sort) — the
     * body of [[docsBatch]] for one query, without the qid column.
@@ -898,7 +959,7 @@ object Searcher {
     import spark.implicits._
     docsPlan(index, query0) match {
       case None => spark.emptyDataset[java.lang.Long]
-      case Some(p) => spark.createDataset(docStream(index, Seq(p)).map(m => java.lang.Long.valueOf(m._2)))
+      case Some(p) => spark.createDataset(docStream(index, Seq(p))((_, d) => java.lang.Long.valueOf(d)))
     }
   }
 
@@ -926,7 +987,7 @@ object Searcher {
     if (planned.isEmpty)
       return Seq.empty[(String, Long)].toDF("qid", "docId")
     val qids = planned.map(_._1).toArray
-    spark.createDataset(docStream(index, planned.map(_._2)).map { case (i, d) => (qids(i), d) })
+    spark.createDataset(docStream(index, planned.map(_._2))((i, d) => (qids(i), d)))
       .toDF("qid", "docId")
   }
 }
@@ -1255,7 +1316,7 @@ object SegmentKernel {
       else Some(new MultiPhraseCursor(slotCursors.map(_.toArray).toArray,
         scorers.phrase(slots.flatten)))
     case PrefixQ(_) | WildcardQ(_) | RegexpQ(_) | FuzzyQ(_, _, _) |
-        TermRangeQ(_, _, _, _) | PhrasePrefixQ(_, _, _) =>
+        TermRangeQ(_, _, _, _) | PhrasePrefixQ(_, _, _) | BlendedTermQ(_, _) =>
       None // expanded before kernel
     case w: WideTermSetQ =>
       // CONSTANT_SCORE_REWRITE kernel half (`core/search/MultiTermQuery

@@ -58,3 +58,46 @@ object JobProbe {
     }
   }
 }
+
+/** The messages Spark's closure cleaner (`org.apache.spark.util
+  * .ClosureCleaner`) logs at DEBUG while a block of driver code runs:
+  * "Cleaning indylambda closure: ..." for each lambda it parses and
+  * trial-serializes, "Expected a closure; got ..." for each named
+  * function it passes through.
+  */
+object CleanerProbe {
+  import org.apache.logging.log4j.{Level, LogManager}
+  import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+  import org.apache.logging.log4j.core.appender.AbstractAppender
+  import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+
+  private val Logger = "org.apache.spark.util.ClosureCleaner"
+
+  /** Runs `body` with the cleaner's logger at DEBUG (through its own
+    * appender only) and returns what it logged on this thread.
+    */
+  def apply(body: => Unit): Seq[String] = {
+    val thread = Thread.currentThread.getName
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-cleaner-probe", null, null, true, Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit =
+        if (e.getThreadName == thread) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val cfg = ctx.getConfiguration
+    require(!cfg.getLoggers.containsKey(Logger), s"$Logger is already configured")
+    val lc = new LoggerConfig(Logger, Level.DEBUG, false)
+    lc.addAppender(appender, Level.DEBUG, null)
+    cfg.addLogger(Logger, lc)
+    ctx.updateLoggers()
+    try {
+      body
+      seen.asScala.toSeq
+    } finally {
+      cfg.removeLogger(Logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+}

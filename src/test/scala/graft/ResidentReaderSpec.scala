@@ -122,6 +122,26 @@ class ResidentReaderSpec extends SparkTest {
       }
   }
 
+  test("a warm serving query hands Spark's closure cleaner no lambda") {
+    val q = BoolQ(should = Seq(TermQ("def"), TermQ("class")), minShouldMatch = 1)
+    val named = Seq("a" -> q, "b" -> (TermQ("return"): Query))
+    val calls: Seq[(String, () => Unit)] = Seq(
+      ("topKQ", () => Searcher.topKQ(serving, q, 10)),
+      ("topKBatch", () => Searcher.topKBatch(serving, named, 10)),
+      ("countQ", () => Searcher.countQ(serving, q)),
+      ("matchingDocs", () => Searcher.matchingDocs(serving, q)))
+    calls.foreach(_._2()) // builds the reader, warms the stats cache
+    // the probe sees a lambda the cleaner parses
+    val lambda = CleanerProbe(spark.sparkContext.parallelize(Seq(1), 1).map(_ + 1))
+    assert(lambda.exists(_.startsWith("Cleaning indylambda closure")), lambda.toString)
+    calls.foreach { case (name, call) =>
+      val logged = CleanerProbe(call())
+      assert(logged.nonEmpty, s"$name: the probe saw no cleaner call")
+      assert(!logged.exists(_.startsWith("Cleaning indylambda closure")),
+        s"$name cleaned a lambda:\n${logged.mkString("\n")}")
+    }
+  }
+
   test("a warm serving topKQ runs one job of one stage; results are local") {
     assert(serving.reader.isDefined && serving.segAligned)
     val q = BoolQ(should = Seq(TermQ("def"), TermQ("class")), minShouldMatch = 1)

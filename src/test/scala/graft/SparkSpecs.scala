@@ -636,6 +636,23 @@ class CollectorSpec extends SparkTest {
     val perSeg = Searcher.collectQ(index, TermQ("def"), factory).collect()
     assert(perSeg.nonEmpty && perSeg.forall(_ <= 3L))
   }
+
+  test("a factory that does not serialize fails at the Dataset's first action") {
+    val factory = new Searcher.CollectorFactory[Long] {
+      private val lock = new Object // not Serializable
+      def newLeaf(seg: Int): Searcher.LeafCollector[Long] = lock.synchronized {
+        new Searcher.LeafCollector[Long] {
+          private var n = 0L
+          def collect(docId: Long, score: Double): Unit = n += 1
+          def finish(): Iterator[Long] = Iterator.single(n)
+        }
+      }
+    }
+    // building the Dataset serializes nothing; its job's submission does
+    val ds = Searcher.collectQ(index, TermQ("def"), factory)
+    val e = intercept[org.apache.spark.SparkException](ds.collect())
+    assert(e.getMessage.contains("Task not serializable"), e.getMessage)
+  }
 }
 
 /** Executor-side hot-filter cache (LRUQueryCache +

@@ -706,6 +706,16 @@ class DisjunctionKernelSpec extends AnyFunSuite {
     assert(tiny.size > 0 && tiny.size <= 200 + 128, s"cached ${tiny.size} postings")
   }
 
+  test("an unplanned BlendedTermQ matches nothing in the segment kernel") {
+    // planning rewrites a BlendedTermQ away; the kernel treats one that
+    // reaches it like the other unexpanded multi-term shapes
+    val p = new Postings(17, _ => 3)
+    val blended = BlendedTermQ(p.names.take(2))
+    def run(q: Query) = SegmentKernel.run(q, p.byTerm, p.scorerMap, 10, floatMode = true).toSeq
+    assert(run(blended).isEmpty)
+    assert(run(BoolQ(should = Seq(blended, TermQ(p.names(2))), minShouldMatch = 1)) == run(TermQ(p.names(2))))
+  }
+
   test("a top-k heap rejects k < 1") {
     Seq(0, -1).foreach { k =>
       val e = intercept[IllegalArgumentException](new Kernel.HitHeap(k))
