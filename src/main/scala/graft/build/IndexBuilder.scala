@@ -66,11 +66,14 @@ final case class BuildRow(
   * `core/codecs/lucene90/Lucene90LiveDocsFormat.java:49`): sidecar files
   * loaded lazily EXECUTOR-side — see [[LiveDocs]]. Kernels exclude these
   * docs; `docmeta` is already tombstone-filtered by [[IndexBuilder.open]].
+  * Collection statistics are sums over the segments, as the reference's
+  * per-leaf `IndexSearcher.collectionStatistics`; none is stored. A
+  * persistent open's `fieldStats` sums its manifests' figures; deleted
+  * docs stay counted until a merge rewrites them out.
   */
 final class Index(
     val postings: Dataset[PostingList],
     val docmeta: Dataset[DocMeta],
-    val termStats: Dataset[TermStats],
     val fieldStats: FieldStats,
     val live: LiveDocs = NoDeletes,
     /** Evaluated LAZILY on first use (see [[segAligned]]) so open paths
@@ -99,6 +102,13 @@ final class Index(
     */
   @transient lazy val segAligned: Boolean = segAlignedInit()
 
+  /** Per-term (df, ttf): the lazy sum of the segments' posting rows, the
+    * term dictionary of multi-term expansions and the catalog.
+    */
+  @transient lazy val termStats: Dataset[TermStats] =
+    postings.groupBy(col("term"))
+      .agg(sum(col("df")).as("df"), sum(col("ttf")).as("ttf"))
+      .as[TermStats](Encoders.product[TermStats])
 
   /** Snapshot identity for the executor-side hot-filter cache
     * ([[graft.exec.FilterCache]]): every Index instance is an immutable
@@ -481,36 +491,22 @@ object IndexBuilder {
     // pure task overhead per query. coalesce merges WHOLE partitions —
     // narrow, segment co-location preserved.
     val target = math.max(1, spark.sparkContext.defaultParallelism)
-    val outC = if (out.rdd.getNumPartitions > target) out.coalesce(target) else out
-    val postings = outC.filter(_.kind == "p")
-      .map(r => PostingList(r.seg, r.term, r.df, r.ttf, r.counts, r.baseDocIds,
-        r.maxDocIds, r.maxFreqs, r.minNorms, r.offsets, r.payload))
-    val docmeta = outC.filter(_.kind == "m")
-      .map(r => DocMeta(r.docId, r.repo, r.path, r.commit, r.lang, r.sha256, r.tokenCount, r.norm))
-    val (terms, fieldStats) = collectionStats(outC.toDF())
-    // term stats are coalesced so the per-query stats collect is one task
-    // wave; `out` came through the groupByKey(seg) build shuffle, so each
-    // segment's rows are physically co-located -> no-shuffle query path
-    new Index(postings, docmeta, terms.coalesce(math.min(8, target)), fieldStats,
-      segAlignedInit = () => true)
-  }
-
-  /** Global collection stats of `BuildRow`-shaped rows — the one
-    * derivation behind in-memory builds, the persistent stats tables and
-    * snapshot opens: per-term df/ttf summed over the segments' posting
-    * rows (lazy; each caller picks the table's layout) and the content
-    * field's (docCount, sumTotalTermFreq) over the doc-meta rows (one job).
-    */
-  private def collectionStats(rows: DataFrame): (Dataset[TermStats], FieldStats) = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val terms = rows.filter($"kind" === "p")
-      .groupBy($"term").agg(sum($"df").as("df"), sum($"ttf").as("ttf"))
-      .as[TermStats]
+    val rows = (if (out.rdd.getNumPartitions > target) out.coalesce(target) else out).toDF()
+    // the content field's collection stats over the doc-meta rows (one job)
     val (n, sttf) = rows.filter($"kind" === "m")
       .agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
       .as[(Long, Long)].head()
-    (terms, FieldStats(n, sttf))
+    // `out` came through the groupByKey(seg) build shuffle, so each
+    // segment's rows are physically co-located -> no-shuffle query path
+    new Index(rowsOf[PostingList](rows, "p"), rowsOf[DocMeta](rows, "m"), FieldStats(n, sttf),
+      segAlignedInit = () => true)
+  }
+
+  /** The `kind` rows ("p" postings, "m" doc meta) of `BuildRow`-shaped rows. */
+  private def rowsOf[T <: Product: scala.reflect.runtime.universe.TypeTag](
+      rows: DataFrame, kind: String): Dataset[T] = {
+    val enc = Encoders.product[T]
+    rows.filter(col("kind") === kind).select(enc.schema.fieldNames.toSeq.map(col): _*).as[T](enc)
   }
 
   /** Build fully in memory (cached) — test/driver-query path. */
@@ -565,9 +561,11 @@ object IndexBuilder {
     * operator; over the union it would decode every written row once
     * more. Then it writes one manifest per written segment
     * (`lineage(seg)` is its input fingerprint), drops the manifests of the
-    * `replaced` segments, refreshes the global stats and marks the
-    * generations nothing references any more. Returns the new manifests
-    * in segment order; a segment with no rows gets none.
+    * `replaced` segments and marks the generations nothing references any
+    * more. It reads no other segment: the manifests carry the collection
+    * statistics, and term stats are sums of the segments' own rows.
+    * Returns the new manifests in segment order; a segment with no rows
+    * gets none.
     *
     * The tally counts every row once: it runs in the write job's result
     * tasks, and Spark applies a result task's accumulator update once per
@@ -586,12 +584,11 @@ object IndexBuilder {
     val cch = codeConfigHash(codec)
     val manifests = scala.collection.mutable.ArrayBuffer.empty[SegmentManifest]
     acc.value.forEach((seg, m) =>
-      manifests += SegmentManifest(seg, "complete", m(0), m(1), m(2), lineage(seg), cch, gen))
+      manifests += SegmentManifest(seg, "complete", m(0), m(1), m(2), m(3), lineage(seg), cch, gen))
     manifests.foreach(writeManifest(dir, _))
     // replaced manifests go only once their successors are durable: a
     // crash in between lists the merged docs twice instead of losing them
     replaced.foreach(s => IndexFs.delete(manifestPath(dir, s)))
-    writeStats(spark, dir)
     // a rebuild or merge can shadow whole generations: mark them for the
     // grace-windowed purge
     markDereferencedGens(dir)
@@ -605,7 +602,7 @@ object IndexBuilder {
     * (and resume rebuilds) segments written under the other one.
     */
   def codeConfigHash(codec: String): String = sha256Hex(
-    s"analyzer=word+lower+max${CodeAnalyzer.MaxTokenLength};codec=$codec-delta-b${PostingCodec.BlockSize};layout=v8-codec-spi"
+    s"analyzer=word+lower+max${CodeAnalyzer.MaxTokenLength};codec=$codec-delta-b${PostingCodec.BlockSize};layout=v9-manifest-field-stats"
   ).take(16)
   val CodeConfigHash: String = codeConfigHash(graft.codec.PostingFormats.Default)
 
@@ -624,7 +621,9 @@ object IndexBuilder {
       .toMap
   }
 
-  /** Per-segment (docs, postings, payload bytes) tally of written rows. */
+  /** Per-segment (docs, sum of token counts, postings, payload bytes)
+    * tally of written rows.
+    */
   final class SegMetricsAccumulator
       extends org.apache.spark.util.AccumulatorV2[BuildRow, java.util.HashMap[Int, Array[Long]]] {
     private var map = new java.util.HashMap[Int, Array[Long]]()
@@ -637,42 +636,46 @@ object IndexBuilder {
     def reset(): Unit = map = new java.util.HashMap[Int, Array[Long]]()
     def add(r: BuildRow): Unit = {
       var slot = map.get(r.seg)
-      if (slot == null) { slot = new Array[Long](3); map.put(r.seg, slot) }
-      if (r.kind == "m") slot(0) += 1
-      else { slot(1) += r.df; slot(2) += r.payload.length }
+      if (slot == null) { slot = new Array[Long](4); map.put(r.seg, slot) }
+      if (r.kind == "m") { slot(0) += 1; slot(1) += r.tokenCount }
+      else { slot(2) += r.df; slot(3) += r.payload.length }
     }
     def merge(other: org.apache.spark.util.AccumulatorV2[BuildRow, java.util.HashMap[Int, Array[Long]]]): Unit =
       other.value.forEach { (k, v) =>
         var slot = map.get(k)
-        if (slot == null) { slot = new Array[Long](3); map.put(k, slot) }
+        if (slot == null) { slot = new Array[Long](4); map.put(k, slot) }
         var i = 0
-        while (i < 3) { slot(i) += v(i); i += 1 }
+        while (i < 4) { slot(i) += v(i); i += 1 }
       }
     def value: java.util.HashMap[Int, Array[Long]] = map
   }
 
   private[build] def manifestPath(dir: String, seg: Int) = s"$dir/manifest/seg_$seg.json"
 
+  /** The manifest of `seg` under `dir` (None when it has none). One that
+    * lacks a field (an older layout) or does not parse fails, naming `seg`.
+    */
   private def readManifest(dir: String, seg: Int): Option[SegmentManifest] = {
     val path = manifestPath(dir, seg)
     if (!IndexFs.exists(path)) None
     else {
       // minimal JSON parse of our own flat writes
       val s = IndexFs.readString(path)
-      def f(k: String): String = {
-        val m = ("\"" + k + "\"\\s*:\\s*\"?([^\",}]*)\"?").r.findFirstMatchIn(s)
-        m.map(_.group(1)).getOrElse("")
-      }
+      def f(k: String): String =
+        ("\"" + k + "\"\\s*:\\s*\"?([^\",}]*)\"?").r.findFirstMatchIn(s).map(_.group(1))
+          .getOrElse(throw new NoSuchElementException(s"no field $k (an older layout: rebuild it)"))
       try Some(SegmentManifest(f("seg").toInt, f("status"), f("docs").toLong,
-        f("postings").toLong, f("bytes").toLong, f("inputFingerprint"), f("codeConfigHash"),
-        f("dataDir")))
-      catch { case _: Exception => None }
+        f("sumTotalTermFreq").toLong, f("postings").toLong, f("bytes").toLong,
+        f("inputFingerprint"), f("codeConfigHash"), f("dataDir")))
+      catch { case e: Exception =>
+        throw new IllegalStateException(s"unreadable manifest of segment $seg ($path): ${e.getMessage}", e) }
     }
   }
 
   private def writeManifest(dir: String, m: SegmentManifest): Unit = {
     val json =
-      s"""{"seg":${m.seg},"status":"${m.status}","docs":${m.docs},"postings":${m.postings},""" +
+      s"""{"seg":${m.seg},"status":"${m.status}","docs":${m.docs},""" +
+        s""""sumTotalTermFreq":${m.sumTotalTermFreq},"postings":${m.postings},""" +
         s""""bytes":${m.bytes},"inputFingerprint":"${m.inputFingerprint}",""" +
         s""""codeConfigHash":"${m.codeConfigHash}","dataDir":"${m.dataDir}"}"""
     IndexFs.writeString(manifestPath(dir, m.seg), json)
@@ -686,8 +689,8 @@ object IndexBuilder {
     * (docs, postings, bytes) — the `segments_N` analogue
     * (`core/index/SegmentInfos.java:55-106`), committed by
     * [[commitGeneration]]. A segment is only believed if its manifest row
-    * exists, matches the recomputed input fingerprint and the current
-    * code/config hash; every other segment is rebuilt into a new
+    * exists, parses, matches the recomputed input fingerprint and the
+    * current code/config hash; every other segment is rebuilt into a new
     * generation, so output of a killed run is never read. Returns
     * per-segment manifests.
     */
@@ -701,7 +704,7 @@ object IndexBuilder {
     val cch = codeConfigHash(codec)
     val fps = fingerprints(docs)
     val todo = fps.filter { case (seg, fp) =>
-      !readManifest(dir, seg).exists(m =>
+      !scala.util.Try(readManifest(dir, seg)).toOption.flatten.exists(m =>
         m.status == "complete" && m.inputFingerprint == fp && m.codeConfigHash == cch)
     }.keySet
 
@@ -712,23 +715,9 @@ object IndexBuilder {
         .groupByKey(_.seg)
         .flatMapGroups((seg, it) => buildSegment(seg, it, codec = cdc))
       commitGeneration(spark, dir, Seq(out), fps, codec)
-    } else if (!statsFresh(dir)) {
-      // covers a crash between manifest writes and the stats refresh
-      writeStats(spark, dir)
     }
     fps.keys.toSeq.sorted.flatMap(seg => readManifest(dir, seg))
   }
-
-  /** Live file set: manifests pick (gen dir, segs) pairs — write-once
-    * files + manifest selection, the `segments_N` commit-point model.
-    * A seg rebuilt into a newer generation shadows its old files.
-    * `manifestRoot` defaults to the live manifest set; snapshot opens
-    * pass a commit dir (same layout) so the SAME selection logic reads a
-    * point-in-time file set.
-    */
-  private[build] def openRaw(spark: SparkSession, dir: String,
-      manifestRoot: String = null): DataFrame =
-    rawFor(spark, dir, listManifests(if (manifestRoot == null) dir else manifestRoot))
 
   /** Fixed read schemas of the index's own parquet directories. Spark
     * infers a parquet schema with a job that reads a footer; these
@@ -739,15 +728,17 @@ object IndexBuilder {
   private[graft] val SegmentSchema: StructType = Encoders.product[BuildRow].schema
   private[graft] val TombstoneSchema: StructType =
     StructType(Seq("repo", "path", "commit").map(StructField(_, StringType)))
-  private[graft] val TermStatsSchema: StructType = Encoders.product[TermStats].schema
 
   /** One segment generation directory (both row kinds). */
   private[build] def readSegments(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(SegmentSchema).parquet(path)
 
   /** The rows of `manifests`' segments, each read from the generation its
-    * manifest selects — the one segment reader of opens, stats and merges.
-    * No manifests (a merge purged every doc) reads as no rows.
+    * manifest selects (write-once files + manifest selection, the
+    * `segments_N` commit-point model: a seg rebuilt into a newer
+    * generation shadows its old files) — the one segment reader of
+    * opens, merges and tombstone compaction. No manifests (a merge purged
+    * every doc) reads as no rows.
     */
   private[build] def rawFor(spark: SparkSession, dir: String,
       manifests: Seq[SegmentManifest]): DataFrame = {
@@ -768,41 +759,12 @@ object IndexBuilder {
       .sorted.flatMap(seg => readManifest(dir, seg))
   }
 
-  /** Fingerprint of the live manifest set — stats are only trusted if
-    * they were computed for exactly this set (a crash between manifest
-    * writes and the stats refresh must not leave stale stats behind).
+  /** Fingerprint of a manifest set — with the tombstone file set it keys
+    * the resolved livedocs sidecars of a live open.
     */
-  private[build] def manifestSetHash(dir: String): String =
-    sha256Hex(listManifests(dir)
+  private def manifestSetHash(manifests: Seq[SegmentManifest]): String =
+    sha256Hex(manifests
       .map(m => s"${m.seg}:${m.inputFingerprint}:${m.dataDir}").sorted.mkString("|")).take(16)
-
-  private def statsFresh(dir: String): Boolean = {
-    val p = s"$dir/stats/field.json"
-    IndexFs.exists(p) && {
-      val s = IndexFs.readString(p)
-      ("\"manifestSetHash\"\\s*:\\s*\"([0-9a-f]+)\"").r.findFirstMatchIn(s)
-        .exists(_.group(1) == manifestSetHash(dir))
-    }
-  }
-
-  private def writeStats(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val (terms, fieldStats) = collectionStats(openRaw(spark, dir))
-    terms
-      // range-partitioned + sorted on term: the stats table IS the term
-      // dictionary, and a sorted layout gives cold term/expansion lookups
-      // tight parquet min/max pruning (a groupBy's hash output has no
-      // term locality, so every row group would match every predicate
-      // at a large vocabulary). Few write tasks: per-task Hadoop-conf
-      // deser is costly.
-      .repartitionByRange(8, $"term")
-      .sortWithinPartitions($"term")
-      .write.mode("overwrite").parquet(s"$dir/stats/terms")
-    // field.json last: its manifest-set hash marks the stats fresh
-    IndexFs.writeString(s"$dir/stats/field.json",
-      s"""{"docCount":${fieldStats.docCount},"sumTotalTermFreq":${fieldStats.sumTotalTermFreq},""" +
-        s""""manifestSetHash":"${manifestSetHash(dir)}"}""")
-  }
 
   // ---------- deletes / updates (live docs) ----------
 
@@ -981,9 +943,10 @@ object IndexBuilder {
     val pinned: Set[String] = listSnapshots(dir)
       .flatMap(id => readSnapshotMeta(dir, id)._2).toSet
     val old = IndexFs.listNames(tdir).filter(_.endsWith(".parquet")).filterNot(pinned)
-    if (old.isEmpty || listManifests(dir).isEmpty) return
+    val manifests = listManifests(dir)
+    if (old.isEmpty || manifests.isEmpty) return
     val tombs = spark.read.schema(TombstoneSchema).parquet(old.map(n => s"$tdir/$n"): _*).distinct()
-    val liveKeys = openRaw(spark, dir).filter(org.apache.spark.sql.functions.col("kind") === "m")
+    val liveKeys = rawFor(spark, dir, manifests).filter(col("kind") === "m")
       .select("repo", "path", "commit")
     val survivors = tombs.join(liveKeys, Seq("repo", "path", "commit"), "left_semi")
     if (!survivors.isEmpty) {
@@ -1073,16 +1036,15 @@ object IndexBuilder {
   def open(spark: SparkSession, dir: String, serving: Boolean = false,
       snapshot: Option[Int] = None): Index = {
     import spark.implicits._
-    val seg = snapshot match {
-      case None => openRaw(spark, dir)
+    // the live manifest set, or the copy a snapshot pinned (same layout)
+    val manifests = listManifests(snapshot match {
+      case None => dir
       case Some(id) =>
         require(IndexFs.exists(s"${commitRoot(dir, id)}/meta.json"), s"no snapshot $id in $dir")
-        openRaw(spark, dir, manifestRoot = commitRoot(dir, id))
-    }
-    val postings = seg.filter($"kind" === "p")
-      .select($"seg", $"term", $"df", $"ttf", $"counts", $"baseDocIds",
-        $"maxDocIds", $"maxFreqs", $"minNorms", $"offsets", $"payload")
-      .as[PostingList]
+        commitRoot(dir, id)
+    })
+    val seg = rawFor(spark, dir, manifests)
+    val postings = rowsOf[PostingList](seg, "p")
     // serving opens and delete resolutions probe EAGERLY (the reader's
     // grouping and the resolution path need it); otherwise the probe
     // waits for the Index's lazy segAligned, so one-shot tooling
@@ -1090,13 +1052,11 @@ object IndexBuilder {
     lazy val aligned = segAlignmentProbe(seg)
     val reader =
       if (!serving) None
-      else Some(graft.exec.Searcher.bySegment(postings.rdd, aligned,
+      else Some(graft.exec.Searcher.bySegment(graft.exec.Searcher.postingRdd(postings), aligned,
           math.max(1, spark.sparkContext.defaultParallelism))
         .setName(s"graft reader $dir")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val docmeta0 = seg.filter($"kind" === "m")
-      .select($"docId", $"repo", $"path", $"commit", $"lang", $"sha256", $"tokenCount", $"norm")
-      .as[DocMeta]
+    val docmeta0 = rowsOf[DocMeta](seg, "m")
     // delete view: live opens see the current tombstone set; snapshot
     // opens see EXACTLY the tombstone files recorded at commit time
     // (point-in-time contract), resolved under the snapshot's pinned
@@ -1104,7 +1064,7 @@ object IndexBuilder {
     val (scopeKey, tombsOpt, tombBytes) = snapshot match {
       case None =>
         val files = tombstoneFiles(dir)
-        (sha256Hex("open:" + tombstoneSetKey(files) + ":" + manifestSetHash(dir)).take(16),
+        (sha256Hex("open:" + tombstoneSetKey(files) + ":" + manifestSetHash(manifests)).take(16),
           readTombstones(spark, dir, files), files.map(_.getLen).sum)
       case Some(id) =>
         val (scope, tombNames) = readSnapshotMeta(dir, id)
@@ -1126,21 +1086,10 @@ object IndexBuilder {
         if (ld.isEmpty) (docmeta0, ld)
         else (docmeta0.filter(!LiveDocs.isDeleted(ld, $"docId")), ld)
     }
-    // stats: live opens read the maintained stats tables; snapshot opens
-    // recompute from the pinned segment rows (the stats writer's own
-    // derivation, so df/ttf sums — and therefore BM25 scores — are
-    // exactly what the live index produced at commit time)
-    val (termStats, fieldStats) = snapshot match {
-      case None =>
-        val fsJson = IndexFs.readString(s"$dir/stats/field.json")
-        def num(k: String): Long =
-          ("\"" + k + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(fsJson)
-            .map(_.group(1).toLong).getOrElse(0L)
-        (spark.read.schema(TermStatsSchema).parquet(s"$dir/stats/terms").as[TermStats],
-          FieldStats(num("docCount"), num("sumTotalTermFreq")))
-      case Some(_) => collectionStats(seg)
-    }
-    new Index(postings, docmeta, termStats, fieldStats, live,
+    // field stats sum the manifests read (a snapshot's pinned ones give
+    // exactly its commit's stats and scores), with no job
+    new Index(postings, docmeta,
+      FieldStats(manifests.map(_.docs).sum, manifests.map(_.sumTotalTermFreq).sum), live,
       segAlignedInit = () => aligned, reader = reader)
   }
 }

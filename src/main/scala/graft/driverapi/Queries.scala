@@ -660,8 +660,8 @@ object Queries {
         10, variant = "vbyte")(spark, dir)
     }, Some(bm25Sql(Seq("table", "batch"), requireAll = false, 10)))),
 
-    // general wildcard (not just trailing-*): dictionary expansion via the
-    // sorted term-stats table (WildcardQuery.java:38)
+    // general wildcard (not just trailing-*): dictionary expansion over
+    // the term stats (WildcardQuery.java:38)
     "ft_wildcard_topk" -> ((ftScored("m?rge OR st*eam", 10), Some(
       s"""WITH $tokCte,
          |dl AS (SELECT doc_id, count(*) AS len FROM tok GROUP BY doc_id),

@@ -16,8 +16,8 @@ import graft.query.{BoolQ, Query, TermQ}
   *
   * Spark shape: the source doc's term frequencies are a driver-side map
   * of ONE analyzed document (bounded); df lookups are a single filtered
-  * read of the term-stats table whose `In(term, ...)` predicate pushes
-  * to the parquet scan — no full-vocabulary pass, no shuffle.
+  * read of the term stats whose `In(term, ...)` predicate pushes to the
+  * postings scan — no full-vocabulary pass.
   *
   * Selection ranks on the 1e-4-quantised score (desc, then term asc) so
   * a cross-engine oracle computing the same `ln` agrees on the cutoff

@@ -6,6 +6,8 @@ import graft.query._
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -61,7 +63,9 @@ object Searcher {
   /** Dictionary view for expansions, scoped to ONE field's namespace:
     * an unprefixed pattern sees only content terms ('#' keyword and '@'
     * field/norms pseudo-terms excluded); a `@F:`-anchored pattern is
-    * already restricted by its own literal prefix.
+    * already restricted by its own literal prefix. The dictionary is
+    * `Index.termStats`, the per-term sum of the segments' posting rows,
+    * so the expansions' term predicates push down to the postings scan.
     */
   private[graft] def dict(index: Index, nsAnchored: Boolean) = {
     import index.postings.sparkSession.implicits._
@@ -71,11 +75,7 @@ object Searcher {
     else d.filter(!$"term".startsWith(graft.build.IndexBuilder.FieldPrefix))
   }
 
-  /** Expand prefixes against the term dictionary (bounded). The global
-    * term-stats table IS the term dictionary (one row per term) — far
-    * cheaper to scan than per-segment postings, range-prunable on the
-    * sorted term column.
-    */
+  /** Expand prefixes against the term dictionary (bounded). */
   def expandPrefix(index: Index, prefix: String): Seq[String] =
     cachedExpansion(index, "pre:" + prefix) {
       import index.postings.sparkSession.implicits._
@@ -287,15 +287,18 @@ object Searcher {
     }
 
   /** Cache-backed term stats lookup (df=0 cache rows mark known misses,
-    * filtered out of the result).
+    * filtered out of the result). A miss sums the terms' per-segment
+    * (df, ttf) on the driver, like per-leaf `TermStates`: one job of
+    * one stage over the pushed-down postings scan, no shuffle.
     */
   private def lookupStats(index: Index, wanted: Seq[String]): Map[String, TermStats] = {
     import index.postings.sparkSession.implicits._
     val cache = index.termStatsCache
     val need = wanted.filterNot(cache.containsKey)
     if (need.nonEmpty) {
-      val found = index.termStats.filter($"term".isin(need: _*)).as[TermStats]
-        .collect().map(t => t.term -> t).toMap
+      val found = index.postings.filter($"term".isin(need: _*))
+        .select($"term", $"df".cast("long").as("df"), $"ttf").as[TermStats].collect()
+        .groupMapReduce(_.term)(identity)((a, b) => TermStats(a.term, a.df + b.df, a.ttf + b.ttf))
       need.foreach(t => cache.put(t, found.getOrElse(t, TermStats(t, 0L, 0L))))
     }
     wanted.map(t => t -> cache.get(t)).filter(_._2.df > 0L).toMap
@@ -603,9 +606,36 @@ object Searcher {
         val basePred =
           if (terms.isEmpty) lit(false) else $"term".isin(terms.toSeq: _*)
         val pred = wide.foldLeft(basePred)((p, w) => p || wideScanPred(w))
-        bySegment(index.postings.filter(pred).rdd, index.segAligned,
+        bySegment(postingRdd(index.postings.filter(pred)), index.segAligned,
           spark.conf.get("spark.sql.shuffle.partitions").toInt)
     }
+
+  /** `postings` as an RDD of [[PostingList]]: the rows of its physical
+    * plan run operator by operator, converted by the named
+    * [[PostingRows]]. `Dataset.rdd` would hand the closure cleaner Spark
+    * SQL's deserializing lambdas, and whole-stage code generation one
+    * more (see [[perSegment]]); the operators' own row paths hand it
+    * none.
+    */
+  private[graft] def postingRdd(postings: org.apache.spark.sql.Dataset[PostingList]): RDD[PostingList] =
+    postings.select(PostingRows.Columns.map(col): _*).queryExecution.executedPlan
+      .transform {
+        case w: WholeStageCodegenExec => w.child
+        case a: InputAdapter => a.child
+      }
+      .execute().mapPartitions(PostingRows)
+
+  /** [[postingRdd]]'s row conversion, over the columns [[Columns]]. */
+  private object PostingRows extends (Iterator[InternalRow] => Iterator[PostingList]) with Serializable {
+    val Columns: Seq[String] =
+      org.apache.spark.sql.Encoders.product[PostingList].schema.fieldNames.toSeq
+
+    def apply(rows: Iterator[InternalRow]): Iterator[PostingList] = rows.map { r =>
+      PostingList(r.getInt(0), r.getUTF8String(1).toString, r.getInt(2), r.getLong(3),
+        r.getArray(4).toIntArray(), r.getArray(5).toLongArray(), r.getArray(6).toLongArray(),
+        r.getArray(7).toIntArray(), r.getBinary(8), r.getArray(9).toIntArray(), r.getBinary(10))
+    }
+  }
 
   /** The per-segment source RDD a query's kernels would read (None when
     * the query cannot match) — exposed for lineage audits (`Cli explain`).

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Spell correction and auto-complete over the term dictionary — the
   * reference's suggest module re-expressed as range-pruned scans of the
-  * sorted term-stats table with distributed top-N selection
+  * term dictionary (`Index.termStats`) with distributed top-N selection
   * (TakeOrderedAndProject: per-partition partial top-N, tiny driver
   * merge). The reference builds dedicated FSTs
   * (`suggest/.../analyzing/AnalyzingSuggester.java`) because a native

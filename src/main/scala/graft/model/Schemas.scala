@@ -108,12 +108,16 @@ final case class FieldStats(docCount: Long, sumTotalTermFreq: Long) {
 
 /** Per-build-shard checkpoint row — the resumable-build manifest
   * (north rule). Reference analogue: the `segments_N` generation
-  * protocol (`core/index/SegmentInfos.java:55-106`).
+  * protocol (`core/index/SegmentInfos.java:55-106`). Its `docs` and
+  * `sumTotalTermFreq` are the segment's content-field collection
+  * statistics: an open's [[FieldStats]] is their sum over the manifests
+  * it reads.
   */
 final case class SegmentManifest(
     seg: Int,
     status: String, // "complete"
-    docs: Long,
+    docs: Long, // the segment's share of the content field's docCount
+    sumTotalTermFreq: Long, // sum of its docs' content token counts
     postings: Long, // number of (term, doc) pairs in the segment
     bytes: Long, // encoded posting payload bytes
     inputFingerprint: String, // fingerprint of the input slice this seg was built from

@@ -25,7 +25,7 @@ class BatchTopKSpec extends SparkTest {
   private lazy val plain = IndexBuilder.open(spark, dir)
   private lazy val serving = IndexBuilder.open(spark, dir, serving = true)
   // three segments in two reader partitions: one task merges two segments
-  private lazy val packed = new Index(plain.postings, plain.docmeta, plain.termStats,
+  private lazy val packed = new Index(plain.postings, plain.docmeta,
     plain.fieldStats, plain.live, () => false,
     Some(Searcher.bySegment(plain.postings.rdd, aligned = false, partitions = 2).persist()))
   private lazy val opens = Seq("plain" -> plain, "serving" -> serving, "packed" -> packed)

@@ -91,8 +91,7 @@ class DeleteResolveSpec extends SparkTest {
     IndexBuilder.deleteDocs(spark, dir, Seq(("r", "p", "c")).toDF("repo", "path", "commit"))
     Seq(
       s"$dir/segments/gen_0" -> IndexBuilder.SegmentSchema,
-      s"$dir/tombstones" -> IndexBuilder.TombstoneSchema,
-      s"$dir/stats/terms" -> IndexBuilder.TermStatsSchema).foreach { case (path, schema) =>
+      s"$dir/tombstones" -> IndexBuilder.TombstoneSchema).foreach { case (path, schema) =>
       assert(spark.read.schema(schema).parquet(path).schema == spark.read.parquet(path).schema, path)
     }
   }

@@ -8,10 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 
 /** The Spark jobs a block of driver code launches, seen by a
-  * `SparkListener`: each job's stages (skipped ones included) and the
-  * shuffle bytes its completed stages read and wrote.
+  * `SparkListener`: each job's stages (skipped ones included), the
+  * shuffle bytes its completed stages read and wrote, and the records
+  * they read from input sources.
   */
-final case class JobTrace(jobs: Seq[Seq[StageInfo]], shuffleBytes: Long) {
+final case class JobTrace(jobs: Seq[Seq[StageInfo]], shuffleBytes: Long, inputRecords: Long) {
   def stages: Int = jobs.map(_.size).sum
 }
 
@@ -29,6 +30,7 @@ object JobProbe {
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
     val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
+    val input = new java.util.concurrent.atomic.AtomicLong(0L)
     val fenced = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -41,6 +43,7 @@ object JobProbe {
         if (stageIds.contains(e.stageInfo.stageId)) {
           val m = e.stageInfo.taskMetrics
           shuffle.addAndGet(m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten)
+          input.addAndGet(m.inputMetrics.recordsRead)
         }
     }
     sc.addSparkListener(listener)
@@ -51,7 +54,7 @@ object JobProbe {
       sc.setLocalProperty(Key, tag + ":fence")
       sc.parallelize(Seq(1), 1).count()
       assert(fenced.await(60, TimeUnit.SECONDS), "listener never saw the fence job")
-      (a, JobTrace(jobs.asScala.toSeq.map(_.stageInfos), shuffle.get()))
+      (a, JobTrace(jobs.asScala.toSeq.map(_.stageInfos), shuffle.get(), input.get()))
     } finally {
       sc.setLocalProperty(Key, prev)
       sc.removeSparkListener(listener)

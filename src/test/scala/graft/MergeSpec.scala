@@ -65,23 +65,26 @@ class MergeSpec extends SparkTest {
     }
   }
 
-  /** (docs, postings, payload bytes) of `m`'s segment, read back from the
-    * generation its manifest points at.
+  /** (docs, sum of token counts, postings, payload bytes) of `m`'s
+    * segment, read back from the generation its manifest points at.
     */
-  private def readBack(dir: String, m: SegmentManifest): (Long, Long, Long) = {
+  private def readBack(dir: String, m: SegmentManifest): (Long, Long, Long, Long) = {
     val rows = spark.read.parquet(s"$dir/segments/${m.dataDir}").filter($"seg" === m.seg)
-    val docs = rows.filter($"kind" === "m").count()
+    val (docs, tokens) = rows.filter($"kind" === "m")
+      .agg(count(lit(1)), coalesce(sum($"tokenCount".cast("long")), lit(0L)))
+      .as[(Long, Long)].head()
     val (postings, bytes) = rows.filter($"kind" === "p")
       .agg(coalesce(sum($"df".cast("long")), lit(0L)),
         coalesce(sum(length($"payload").cast("long")), lit(0L)))
       .as[(Long, Long)].head()
-    (docs, postings, bytes)
+    (docs, tokens, postings, bytes)
   }
 
   test("commit manifests equal a read-back of their generation") {
     def check(what: String, dir: String, ms: Seq[SegmentManifest]): Unit = {
       assert(ms.nonEmpty, what)
-      ms.foreach(m => assert((m.docs, m.postings, m.bytes) == readBack(dir, m), s"$what seg=${m.seg}"))
+      ms.foreach(m => assert((m.docs, m.sumTotalTermFreq, m.postings, m.bytes) == readBack(dir, m),
+        s"$what seg=${m.seg}"))
     }
     val src = Datagen.corpus(spark, 600, seed = 23L, numPartitions = 3)
     val dir = java.nio.file.Files.createTempDirectory("graftcommit").toString

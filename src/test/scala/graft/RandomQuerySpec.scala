@@ -199,7 +199,7 @@ class DeleteDifferentialSpec extends SparkTest {
       deletedIds.toSeq.groupBy(graft.build.IndexBuilder.segOf)
         .map { case (s, ids) => s -> ids.sorted.toArray })
     val aligned = base.segAligned
-    val index = new graft.build.Index(base.postings, base.docmeta, base.termStats,
+    val index = new graft.build.Index(base.postings, base.docmeta,
       base.fieldStats, live, () => aligned)
 
     // filtered-oracle expectation: stats over the FULL corpus (deleted

@@ -33,7 +33,7 @@ class ResidentReaderSpec extends SparkTest {
   private def sources(live: LiveDocs): Seq[(String, Index)] = {
     def withLive(ix: Index, postings: org.apache.spark.sql.Dataset[graft.model.PostingList],
         aligned: Boolean, reader: Option[org.apache.spark.rdd.RDD[(Int, Map[String, graft.model.PostingList])]]) =
-      new Index(postings, ix.docmeta, ix.termStats, ix.fieldStats, live, () => aligned, reader)
+      new Index(postings, ix.docmeta, ix.fieldStats, live, () => aligned, reader)
     Seq(
       "plain" -> withLive(plain, plain.postings, plain.segAligned, None),
       "serving" -> withLive(serving, serving.postings, serving.segAligned, serving.reader),
@@ -139,6 +139,18 @@ class ResidentReaderSpec extends SparkTest {
       assert(logged.nonEmpty, s"$name: the probe saw no cleaner call")
       assert(!logged.exists(_.startsWith("Cleaning indylambda closure")),
         s"$name cleaned a lambda:\n${logged.mkString("\n")}")
+    }
+  }
+
+  test("a warm plain-open query hands Spark's closure cleaner no lambda") {
+    val q = BoolQ(should = Seq(TermQ("def"), TermQ("class")), minShouldMatch = 1)
+    val calls: Seq[(String, () => Unit)] = Seq(
+      ("topKQ", () => Searcher.topKQ(plain, q, 10)),
+      ("countQ", () => Searcher.countQ(plain, q)))
+    calls.foreach(_._2()) // warms the stats cache
+    calls.foreach { case (name, call) =>
+      val cleaned = CleanerProbe(call()).filter(_.startsWith("Cleaning indylambda closure"))
+      assert(cleaned.isEmpty, s"$name cleaned:\n${cleaned.mkString("\n")}")
     }
   }
 

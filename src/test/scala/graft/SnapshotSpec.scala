@@ -51,11 +51,14 @@ class SnapshotSpec extends SparkTest {
     graft.build.LiveDocs.gc(dir, graceMs = 0, retain = IndexBuilder.snapshotScopes(dir))
     val idxLive = IndexBuilder.open(spark, dir)
     assert(idxLive.docmeta.count() == n0 - nVictims)
+    // the merge purged the deleted docs from the live collection stats
+    assert(idxLive.fieldStats.docCount == n0 - nVictims)
 
     // snapshot 0: the pre-delete world, bit-identical scores
     val s0 = IndexBuilder.open(spark, dir, snapshot = Some(0))
     assert(s0.docmeta.count() == n0)
     assert(Searcher.count(s0, "needle_0") > 0, "snapshot 0 must still see later-deleted docs")
+    assert(s0.fieldStats == idx0.fieldStats)
     assert(shaped(s0) == r0, "snapshot 0 results must equal commit-0 results")
     assert(CheckIndex.run(s0).isEmpty)
 
@@ -64,6 +67,7 @@ class SnapshotSpec extends SparkTest {
     val s1 = IndexBuilder.open(spark, dir, snapshot = Some(1))
     assert(s1.docmeta.count() == n0 - nVictims)
     assert(Searcher.count(s1, "needle_0") == 0)
+    assert(s1.fieldStats == idx1.fieldStats)
     assert(shaped(s1) == r1, "snapshot 1 results must equal commit-1 results")
 
     // purge: pinned generations never deleted, even with grace 0
