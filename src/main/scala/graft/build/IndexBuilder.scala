@@ -659,11 +659,8 @@ object IndexBuilder {
     val path = manifestPath(dir, seg)
     if (!IndexFs.exists(path)) None
     else {
-      // minimal JSON parse of our own flat writes
       val s = IndexFs.readString(path)
-      def f(k: String): String =
-        ("\"" + k + "\"\\s*:\\s*\"?([^\",}]*)\"?").r.findFirstMatchIn(s).map(_.group(1))
-          .getOrElse(throw new NoSuchElementException(s"no field $k (an older layout: rebuild it)"))
+      def f(k: String): String = manifestField(s, k)
       try Some(SegmentManifest(f("seg").toInt, f("status"), f("docs").toLong,
         f("sumTotalTermFreq").toLong, f("postings").toLong, f("bytes").toLong,
         f("inputFingerprint"), f("codeConfigHash"), f("dataDir")))
@@ -671,6 +668,13 @@ object IndexBuilder {
         throw new IllegalStateException(s"unreadable manifest of segment $seg ($path): ${e.getMessage}", e) }
     }
   }
+
+  /** Field `k` of a manifest's JSON (a minimal parse of our own flat
+    * writes); a missing field fails.
+    */
+  private def manifestField(json: String, k: String): String =
+    ("\"" + k + "\"\\s*:\\s*\"?([^\",}]*)\"?").r.findFirstMatchIn(json).map(_.group(1))
+      .getOrElse(throw new NoSuchElementException(s"no field $k (an older layout: rebuild it)"))
 
   private def writeManifest(dir: String, m: SegmentManifest): Unit = {
     val json =
@@ -752,12 +756,15 @@ object IndexBuilder {
     }.reduce(_ unionByName _)
   }
 
-  private[build] def listManifests(dir: String): Seq[SegmentManifest] = {
+  private[build] def listManifests(dir: String): Seq[SegmentManifest] =
+    manifestSegs(dir).flatMap(seg => readManifest(dir, seg))
+
+  /** The segment ids that have a manifest under `dir`, sorted. */
+  private def manifestSegs(dir: String): Seq[Int] =
     IndexFs.listNames(s"$dir/manifest")
       .collect { case n if n.startsWith("seg_") && n.endsWith(".json") =>
         n.stripPrefix("seg_").stripSuffix(".json").toInt }
-      .sorted.flatMap(seg => readManifest(dir, seg))
-  }
+      .sorted
 
   /** Fingerprint of a manifest set — with the tombstone file set it keys
     * the resolved livedocs sidecars of a live open.
@@ -892,12 +899,15 @@ object IndexBuilder {
     listSnapshots(dir).map(id => readSnapshotMeta(dir, id)._1).toSet
 
   /** Generation dirs referenced by the live manifest set or any retained
-    * snapshot — everything else is purgeable garbage.
+    * snapshot — everything else is purgeable garbage. Only each
+    * manifest's `dataDir` is read, so a manifest of an older layout,
+    * which opens refuse, still pins its generation.
     */
   private def referencedGens(dir: String): Set[String] =
-    (listManifests(dir) ++
-      listSnapshots(dir).flatMap(id => listManifests(commitRoot(dir, id))))
-      .map(_.dataDir).toSet
+    (dir +: listSnapshots(dir).map(commitRoot(dir, _))).flatMap { root =>
+      manifestSegs(root).map(seg =>
+        manifestField(IndexFs.readString(manifestPath(root, seg)), "dataDir"))
+    }.toSet
 
   /** Delete unreferenced generation dirs — the IndexFileDeleter analogue
     * (`core/index/IndexFileDeleter.java:54`), shared-storage-safe:
@@ -1052,7 +1062,7 @@ object IndexBuilder {
     lazy val aligned = segAlignmentProbe(seg)
     val reader =
       if (!serving) None
-      else Some(graft.exec.Searcher.bySegment(graft.exec.Searcher.postingRdd(postings), aligned,
+      else Some(graft.exec.Searcher.bySegment(postings.rdd, aligned,
           math.max(1, spark.sparkContext.defaultParallelism))
         .setName(s"graft reader $dir")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

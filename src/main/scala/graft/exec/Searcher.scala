@@ -89,7 +89,7 @@ object Searcher {
 
   /** Per-index rewrite cache (immutable snapshot, see Index.expansionCache). */
   private def cachedExpansion(index: Index, key0: String)(body: => Seq[String]): Seq[String] = {
-    val key = Query.MaxClauseCount + ":" + key0 // cap is settable; key per cap
+    val key = s"${Query.MaxClauseCount}:$key0" // cap is settable; key per cap
     val c = index.expansionCache
     val hit = c.get(key)
     if (hit != null) hit
@@ -617,7 +617,7 @@ object Searcher {
     * more (see [[perSegment]]); the operators' own row paths hand it
     * none.
     */
-  private[graft] def postingRdd(postings: org.apache.spark.sql.Dataset[PostingList]): RDD[PostingList] =
+  private def postingRdd(postings: org.apache.spark.sql.Dataset[PostingList]): RDD[PostingList] =
     postings.select(PostingRows.Columns.map(col): _*).queryExecution.executedPlan
       .transform {
         case w: WholeStageCodegenExec => w.child

@@ -37,6 +37,11 @@ class CollectionStatsSpec extends SparkTest {
     java.nio.file.Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
   }
 
+  /** Rewrites every manifest under `root` (a dir or a snapshot's commit root). */
+  private def editManifests(root: String)(edit: String => String): Unit =
+    new java.io.File(s"$root/manifest").list().filter(n => n.startsWith("seg_") && n.endsWith(".json"))
+      .foreach(n => editManifest(root, n.stripPrefix("seg_").stripSuffix(".json").toInt)(edit))
+
   test("committing one segment reads the same input into an index of N and of 2N segments") {
     val src = tmp("graftstatssrc")
     Datagen.toInputDocs(Datagen.corpus(spark, 150, seed = 83L), 1).withColumn("seg", lit(1000))
@@ -116,5 +121,27 @@ class CollectionStatsSpec extends SparkTest {
     val idx = IndexBuilder.open(spark, dir)
     assert(idx.fieldStats.docCount == 300)
     assert(CheckIndex.run(idx).isEmpty)
+  }
+
+  test("a dir of the older layout with a snapshot and a merged segment: resume and purge run, opens fail naming a segment") {
+    val docs = Datagen.toInputDocs(Datagen.corpus(spark, 400, seed = 93L), 4)
+    val dir = tmp("graftstatsolder")
+    val segs = IndexBuilder.buildPersistent(spark, docs, dir).map(_.seg)
+    val id = IndexBuilder.commitSnapshot(dir)
+    val merged = IndexMerger.mergeSegments(spark, dir, segs.take(2)).get.seg
+    def gens = new java.io.File(s"$dir/segments").list().filter(_.startsWith("gen_")).toSet
+    val before = gens
+    val olderLayout = (json: String) => json.replaceAll("\"sumTotalTermFreq\":\\d+,", "")
+    editManifests(dir)(olderLayout)
+    editManifests(s"$dir/commits/commit_$id")(olderLayout)
+    // resume rebuilds the input segments; the commit's generation marking
+    // and a purge still see every generation the old manifests reference
+    assert(IndexBuilder.buildPersistent(spark, docs, dir).map(_.seg) == segs)
+    IndexBuilder.purgeGenerations(dir, graceMs = 0)
+    assert(before.subsetOf(gens), s"$before -> $gens")
+    val live = intercept[IllegalStateException](IndexBuilder.open(spark, dir))
+    assert(live.getMessage.contains(s"segment $merged"), live.getMessage)
+    val snap = intercept[IllegalStateException](IndexBuilder.open(spark, dir, snapshot = Some(id)))
+    assert(snap.getMessage.contains("unreadable manifest of segment"), snap.getMessage)
   }
 }
