@@ -3,6 +3,8 @@ package graft.driverapi
 import graft.build.{Index, IndexBuilder, InputDoc}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.ListMap
 
 /** Adapter: the driver's `documents` table -> engine corpus.
   *
@@ -19,165 +21,92 @@ object Corpus {
   def numSegments(docSpan: Long): Int =
     math.max(4, math.min(128, (docSpan / 25000L).toInt + 1))
 
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, (Index, DataFrame)]
-
-  /** (engine index, docId->doc_id mapping) for `dir`'s documents table.
-    * Keyed by (session, dir) — cached Datasets die with their session.
+  /** How one variant index is made from the documents table: the
+    * analyzer mode, the posting format, and an optional text derivation
+    * `(regex, replacement)` applied to `text` first — deterministic, so
+    * the engine and the DuckDB oracle see the same table.
     */
-  def get(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"std:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "std")
-    }
+  final case class Variant(mode: String,
+      codec: String = graft.codec.PostingFormats.Default,
+      derive: Option[(String, String)] = None)
 
-  /** Sub-token analyzer variant over a compound-word derivation of the
-    * documents table: adjacent word pairs are joined with '_' (a
-    * deterministic transformation both the engine and the DuckDB oracle
-    * apply identically), and the index is built with
-    * [[graft.analysis.CodeAnalyzer.subTokenize]] — the
-    * WordDelimiterGraphFilter path (`ft_subtoken_topk`).
+  /** Every variant index of the documents table by name, in `prep` order. */
+  val variants: ListMap[String, Variant] = ListMap(
+    "std" -> Variant("std"),
+    // WordDelimiterGraphFilter path ([[graft.analysis.CodeAnalyzer
+    // .subTokenize]], `ft_subtoken_topk`) over a compound-word
+    // derivation: adjacent word pairs are joined with '_'
+    "sub" -> Variant("sub", derive = Some("([a-z]+) ([a-z0-9]+)" -> "$1_$2")),
+    // combined content+path field, the BM25F/CombinedFieldQuery
+    // materialisation (`ft_bm25f_topk`): `srcN` terms hit via the path field
+    "all" -> Variant("all"),
+    // position-preserving StopFilter (`ft_stop_*` entries)
+    "stop" -> Variant("stop"),
+    // ShingleFilter: unigrams + 2-shingles (`ft_shingle_topk`)
+    "shingle" -> Variant("shingle"),
+    // character-trigram NGramTokenizer (`ft_ngram_topk`)
+    "ngram" -> Variant("ngram"),
+    // std tokens encoded with [[graft.codec.VByteFormat]] (`ft_vbyte_topk`):
+    // results must equal the PFOR index (codecs are semantics-transparent)
+    "vbyte" -> Variant("std", codec = "vbyte"),
+    // classic Porter algorithm ([[graft.analysis.Stemmer.porter]], `ft_porter_topk`)
+    "porter" -> Variant("porter"),
+    // std tokens, each carrying a 4-byte float payload = token length
+    // ([[graft.analysis.Payloads.lengthFloat]], `ft_payload_topk`): per-
+    // occurrence payloads a DuckDB oracle can recompute from the text
+    "lenpayload" -> Variant("lenpayload"),
+    // minimal English s-stemmer (`ft_stem_topk`) over a pluralized
+    // derivation: the stemmer restores the ORIGINAL token stream exactly,
+    // so the oracle is the plain BM25 SQL over the underived table, and a
+    // hash match proves the stemmer ran (unstemmed, `stream` matches nothing)
+    "enmin" -> Variant("enmin", derive = Some("\\bstream\\b" -> "streams")),
+    // Savoy minimal French stemmer (`ft_french_topk`): `streams` is the
+    // French plural marker and is restored exactly on this vocabulary
+    "frmin" -> Variant("frmin", derive = Some("\\bstream\\b" -> "streams")),
+    // Savoy minimal German stemmer (`ft_german_topk`): its `-nen` rule
+    // restores the German infinitive `scannen` to `scan` exactly
+    "demin" -> Variant("demin", derive = Some("\\bscan\\b" -> "scannen")),
+    // german2 normalization (`ft_denorm_topk`) folds the umlauted
+    // `gröup` back to `group` exactly
+    "denorm" -> Variant("denorm", derive = Some("\\bgroup\\b" -> "gröup")))
+
+  private val registry = TrieMap.empty[(SparkSession, String, String), Any]
+
+  /** The artifact `name` of `dir`'s tables in `spark`, built on first use
+    * and shared by every later caller in that session (cached Datasets die
+    * with their session). A build may itself call `shared`: a concurrent
+    * first use can build twice, and one result wins.
     */
-  def getSubtoken(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"sub:$dir") {
-      import spark.implicits._
+  private[driverapi] def shared[A](spark: SparkSession, dir: String, name: String)(build: => A): A =
+    registry.getOrElseUpdate((spark, dir, name), build).asInstanceOf[A]
+
+  /** (engine index, docId->doc_id mapping) of one [[variants]] row. */
+  def index(spark: SparkSession, dir: String, variant: String = "std"): (Index, DataFrame) = {
+    val v = variants.getOrElse(variant,
+      throw new IllegalArgumentException(s"unknown index variant: $variant"))
+    shared(spark, dir, s"idx_$variant") {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text",
-          regexp_replace($"text", "([a-z]+) ([a-z0-9]+)", "$1_$2"))
-      build(spark, docs, "sub")
+      build(spark, v.derive.fold(docs) { case (re, rep) =>
+        docs.withColumn("text", regexp_replace(col("text"), re, rep))
+      }, v.mode, v.codec)
     }
-
-  /** Combined content+path field variant — the BM25F/CombinedFieldQuery
-    * materialisation (`ft_bm25f_topk`): path carries the source column,
-    * so `srcN` terms hit via the path field.
-    */
-  def getCombinedField(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"all:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "all")
-    }
-
-  /** VByte posting-format variant (Codec SPI, `ft_vbyte_topk`): same
-    * std analyzer, postings encoded with [[graft.codec.VByteFormat]] —
-    * results must be identical to the PFOR index (codecs are
-    * semantics-transparent).
-    */
-  def getVByte(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"vbyte:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "std", codec = "vbyte")
-    }
-
-  /** Position-preserving StopFilter variant (`ft_stop_*` entries). */
-  def getStopFiltered(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"stop:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "stop")
-    }
-
-  /** ShingleFilter variant (unigrams + 2-shingles, `ft_shingle_topk`). */
-  def getShingled(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"shingle:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "shingle")
-    }
-
-  /** Character-trigram NGramTokenizer variant (`ft_ngram_topk`). */
-  def getNgram(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"ngram:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "ngram")
-    }
-
-  /** Porter-stemmed variant (`ft_porter_topk`): std tokens through the
-    * classic Porter algorithm ([[graft.analysis.Stemmer.porter]]).
-    */
-  def getPorter(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"porter:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "porter")
-    }
-
-  /** Minimal-English-stemmed variant (`ft_stem_topk`) over a pluralized
-    * derivation of the documents table: every standalone `stream` becomes
-    * `streams` (a deterministic transformation, like [[getSubtoken]]'s),
-    * and the s-stemmer restores the ORIGINAL token stream exactly — so
-    * the DuckDB oracle is the plain BM25 SQL over the underived table,
-    * and a hash match proves the stemmer actually applied (unstemmed,
-    * `stream` would match nothing).
-    */
-  def getStemmed(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"enmin:$dir") {
-      import spark.implicits._
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text", regexp_replace($"text", "\\bstream\\b", "streams"))
-      build(spark, docs, "enmin")
-    }
-
-  /** French-minimal-stemmed variant (`ft_french_topk`) over a
-    * French-pluralized derivation: every standalone `stream` becomes
-    * `streams` (the French plural marker) and the Savoy minimal French
-    * stemmer restores the ORIGINAL token stream exactly on this
-    * vocabulary — so the plain BM25 oracle applies and a hash match
-    * proves the stemmer ran (unstemmed, `stream` would match nothing).
-    */
-  def getFrench(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"frmin:$dir") {
-      import spark.implicits._
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text", regexp_replace($"text", "\\bstream\\b", "streams"))
-      build(spark, docs, "frmin")
-    }
-
-  /** German-minimal-stemmed variant (`ft_german_topk`) over a
-    * German-infinitive derivation: every standalone `scan` becomes
-    * `scannen`, which the Savoy minimal German stemmer's `-nen` rule
-    * restores exactly (same proof shape as [[getFrench]]).
-    */
-  def getGerman(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"demin:$dir") {
-      import spark.implicits._
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text", regexp_replace($"text", "\\bscan\\b", "scannen"))
-      build(spark, docs, "demin")
-    }
-
-  /** German-NORMALIZED variant (`ft_denorm_topk`) over an umlauted
-    * derivation: every standalone `group` becomes `gröup`, which the
-    * german2 normalization folds back exactly — same restore-proof
-    * shape as [[getGerman]].
-    */
-  def getGermanNorm(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"denorm:$dir") {
-      import spark.implicits._
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text", regexp_replace($"text", "\\bgroup\\b", "gröup"))
-      build(spark, docs, "denorm")
-    }
-
-  /** Payload-lane variant (`ft_payload_topk`): std tokens, each carrying
-    * a 4-byte float payload = token length ([[graft.analysis.Payloads
-    * .lengthFloat]]) — per-occurrence payloads a DuckDB oracle can
-    * recompute from the text.
-    */
-  def getLenPayload(spark: SparkSession, dir: String): (Index, DataFrame) =
-    cached(spark, s"lenpayload:$dir") {
-      build(spark, spark.read.parquet(s"$dir/documents.parquet"), "lenpayload")
-    }
-
-  private def cached(spark: SparkSession, key: String)(mk: => (Index, DataFrame)): (Index, DataFrame) =
-    cache.getOrElseUpdate(s"${System.identityHashCode(spark)}:$key", mk)
-
-  private val auxCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  }
 
   /** Char-ngram infix-pruning artifact over the std index's dictionary
-    * ([[graft.exec.Suggest.infixGrams]]) — built once per session+dir
-    * like the variant indexes.
+    * ([[graft.exec.Suggest.infixGrams]]).
     */
-  def getInfixGrams(spark: SparkSession, dir: String): DataFrame =
-    auxCache.getOrElseUpdate(s"${System.identityHashCode(spark)}:grams:$dir",
-      graft.exec.Suggest.infixGrams(get(spark, dir)._1).persist())
+  def infixGrams(spark: SparkSession, dir: String): DataFrame =
+    shared(spark, dir, "infix_grams") {
+      graft.exec.Suggest.infixGrams(index(spark, dir)._1).persist()
+    }
 
   /** Backoff-ordered top-N unigram artifact for FreeText next-token
     * ([[graft.exec.Suggest.topUnigrams]], default alpha).
     */
-  def getTopUnigrams(spark: SparkSession, dir: String): DataFrame =
-    auxCache.getOrElseUpdate(s"${System.identityHashCode(spark)}:unitop:$dir",
-      graft.exec.Suggest.topUnigrams(get(spark, dir)._1).persist())
-
-  private val tokenCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  def topUnigrams(spark: SparkSession, dir: String): DataFrame =
+    shared(spark, dir, "unigram_top") {
+      graft.exec.Suggest.topUnigrams(index(spark, dir)._1).persist()
+    }
 
   /** Documents table + a `ts` token-array column, tokenized ONCE per
     * session and cached — at 100 TB you tokenize into a shared column
@@ -185,19 +114,18 @@ object Corpus {
     * token counts, quality scoring, language id, fingerprints, dedup.
     */
   def docTokens(spark: SparkSession, dir: String): DataFrame =
-    tokenCache.getOrElseUpdate(s"${System.identityHashCode(spark)}:$dir", {
-      import spark.implicits._
+    shared(spark, dir, "doc_tokens") {
       spark.read.parquet(s"$dir/documents.parquet")
         .withColumn("ts", expr("regexp_extract_all(lower(text), '[a-z0-9_]+', 0)"))
         .persist()
-    })
+    }
 
   /** `path` carries the table's `source` column — the second SCORED field
     * (`@path:` terms + `@norms:path` sidecar, see IndexBuilder.fieldTerm);
     * `commit` carries doc_id for the docId<->doc_id mapping.
     */
   private def build(spark: SparkSession, docs: DataFrame, analyzerMode: String,
-      codec: String = graft.codec.PostingFormats.Default): (Index, DataFrame) = {
+      codec: String): (Index, DataFrame) = {
     import spark.implicits._
     val maxId = docs.agg(max($"doc_id")).head().getLong(0)
     val span = maxId / numSegments(maxId + 1) + 1
